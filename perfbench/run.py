@@ -26,17 +26,19 @@ import signal
 import subprocess
 import sys
 import time
+import zipfile
 
 WORKLOADS = ("table_olap", "stream_ingest", "llm_curate")
 HEAP = "3g"  # fixed driver heap (-Xms = -Xmx) for every run
 LLM_SCALE_COPIES = 2  # graft.tools.ScaleGen factor for the llm_curate corpus
 RUN_TIMEOUT_S = 170  # for everything a run does after the build
-# the traced stream_ingest run's local[1] baseline: its share of the
-# run's seconds, and the time it needs left to start
-SINGLE_CORE_SHARE = 3
+# the time the traced stream_ingest run's local[1] baseline needs left
+# to start
 SINGLE_CORE_MIN_LEFT_S = 80
 BUILD_TIMEOUT_S = 850
 BUILD_DIR = ".bench_build"
+# the class-data-sharing archive of the classes a Spark session loads
+CDS_ARCHIVE = "perfbench.jsa"
 # paths of the checkout a run must never touch
 GUARDED = ("target/scratch", "spark-warehouse")
 # per-phase streaming metrics of the traced run's single-core baseline
@@ -103,14 +105,18 @@ def build(root, bench):
     """Compile the program and the harness; return the runtime classpath."""
     out = os.path.join(root, BUILD_DIR)
     cp_file = os.path.join(out, "perfbench.classpath")
+    jar_cp_file = os.path.join(out, "perfbench.jars")
     stamp_file = os.path.join(out, "perfbench.stamp")
     fp = source_fingerprint(root, bench)
-    if os.path.exists(cp_file) and os.path.exists(stamp_file):
+    if os.path.exists(jar_cp_file) and os.path.exists(stamp_file):
         with open(stamp_file) as f:
             if f.read() == fp:
-                with open(cp_file) as g:
+                with open(jar_cp_file) as g:
                     return g.read().strip()
     os.makedirs(out, exist_ok=True)
+    for f in (stamp_file, jar_cp_file, os.path.join(out, CDS_ARCHIVE)):
+        if os.path.exists(f):
+            os.remove(f)
     env = dict(os.environ)
     env.setdefault("COURSIER_MODE", "offline")
     env.setdefault("SBT_OPTS", "-Dsbt.offline=true -Xmx2g")
@@ -125,10 +131,48 @@ def build(root, bench):
     if rc != 0 or not os.path.exists(cp_file):
         raise SystemExit(f"perfbench: build failed (sbt exit {rc})")
     log(f"perfbench: build took {time.time() - t:.0f} s")
+    with open(cp_file) as f:
+        cp = jar_classpath(f.read().strip(), os.path.join(out, "jars"))
+    t = time.time()
+    # the archive only lets each run's JVM load its session's classes
+    # faster; a run without it is as correct, only slower to start
+    rc = run_child(java_cmd(cp, tmp, [f"-XX:ArchiveClassesAtExit={out}/{CDS_ARCHIVE}"])
+                   + ["graft.perfbench.Warm", os.path.join(out, "warm")],
+                   BUILD_TIMEOUT_S, cwd=root)
+    shutil.rmtree(os.path.join(out, "warm"), ignore_errors=True)
+    log(f"perfbench: class-data archive {'written' if rc == 0 else 'failed'} "
+        f"in {time.time() - t:.0f} s")
+    with open(jar_cp_file, "w") as f:
+        f.write(cp)
     with open(stamp_file, "w") as f:
         f.write(fp)
-    with open(cp_file) as f:
-        return f.read().strip()
+    return cp
+
+
+def jar_classpath(cp, jar_dir):
+    """The classpath with each class directory packed into a jar: the
+    class-data archive takes classes from jars only."""
+    shutil.rmtree(jar_dir, ignore_errors=True)
+    os.makedirs(jar_dir)
+    entries = []
+    for i, p in enumerate(cp.split(os.pathsep)):
+        if os.path.isdir(p):
+            jar = os.path.join(jar_dir, f"classes{i}.jar")
+            with zipfile.ZipFile(jar, "w", zipfile.ZIP_STORED) as z:
+                for d, _, fs in os.walk(p):
+                    for f in sorted(fs):
+                        full = os.path.join(d, f)
+                        z.write(full, os.path.relpath(full, p))
+            p = jar
+        entries.append(p)
+    return os.pathsep.join(entries)
+
+
+def java_cmd(cp, tmp, extra=()):
+    """The JVM every run uses: fixed heap, G1, UTC."""
+    return ["java", *ADD_OPENS, f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:+UseG1GC",
+            "-XX:-UsePerfData", "-Duser.timezone=UTC", f"-Djava.io.tmpdir={tmp}",
+            *extra, "-cp", cp]
 
 
 def tree_state(root):
@@ -191,10 +235,9 @@ def busy_sibling_jvms():
 
 def run_jvm(cp, root, run_dir, args, cores, seconds, result, timeout, extra=()):
     """Run the harness in its own JVM; return its parsed result or None."""
-    cmd = (["java", *ADD_OPENS, f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:+UseG1GC",
-            "-XX:-UsePerfData",
-            "-Duser.timezone=UTC", f"-Djava.io.tmpdir={run_dir}/tmp",
-            "-cp", cp, "graft.perfbench.Main",
+    archive = os.path.join(root, BUILD_DIR, CDS_ARCHIVE)
+    cds = [f"-XX:SharedArchiveFile={archive}"] if os.path.exists(archive) else []
+    cmd = (java_cmd(cp, f"{run_dir}/tmp", cds) + ["graft.perfbench.Main",
             "--workload", args.workload, "--seed", str(args.seed),
             "--seconds", str(seconds), "--trace", str(args.trace),
             "--root", run_dir, "--cores", str(cores), "--out", result, *extra])
@@ -227,7 +270,6 @@ def main():
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--cores", type=int, default=os.cpu_count())
     args = ap.parse_args()
     signal.signal(signal.SIGTERM, stop_children)
     signal.signal(signal.SIGINT, stop_children)
@@ -253,7 +295,7 @@ def main():
     steal0, wall0 = steal_jiffies(), time.time()
     load0, busy0 = load_avg(), busy_sibling_jvms()
     try:
-        res = run_jvm(cp, root, run_dir, args, args.cores, args.seconds,
+        res = run_jvm(cp, root, run_dir, args, os.cpu_count(), args.seconds,
                       os.path.join(run_dir, "result.json"), RUN_TIMEOUT_S,
                       ["--spans", spans] if spans else [])
         single = None
@@ -261,7 +303,7 @@ def main():
         if (res is not None and args.trace and args.workload == "stream_ingest"
                 and left >= SINGLE_CORE_MIN_LEFT_S):
             single = run_jvm(cp, root, os.path.join(run_dir, "single"), args, 1,
-                             max(3.0, args.seconds / SINGLE_CORE_SHARE),
+                             args.seconds,
                              os.path.join(run_dir, "single", "result.json"), left,
                              ["--bursts", "0"])
     finally:
@@ -306,7 +348,7 @@ def main():
                                   "detail": ", ".join(missing)})
         values = {n: values[n] for n in names if n in values}
 
-    print(f"perfbench {args.workload} seed={args.seed} cores={args.cores} heap={HEAP} "
+    print(f"perfbench {args.workload} seed={args.seed} cores={os.cpu_count()} heap={HEAP} "
           f"trace={args.trace} seconds={args.seconds:g} elapsed_s={elapsed:.1f}")
     print(f"  validity: {'invalid: ' + '; '.join(invalid) if invalid else 'valid'} "
           f"(steal {steal_rate:.2f} jiffies/s, load {load0:.2f}->{load1:.2f}, "

@@ -36,6 +36,7 @@ object Layers {
     "llm.simhash_ms" -> "ms", "llm.simhash_candidates" -> "count",
     "llm.knn_candidates_per_query" -> "count", "llm.knn_useful_ratio" -> "ratio",
     "llm.index_fits" -> "count", "llm.recall_at_10" -> "ratio",
+    "llm.task_share" -> "ratio",
     "spark.jobs" -> "count", "spark.stages" -> "count", "spark.tasks" -> "count",
     "spark.task_s" -> "s", "spark.shuffle_write_mb" -> "MB",
     "spark.shuffle_read_mb" -> "MB", "spark.input_mb" -> "MB",
@@ -92,9 +93,10 @@ object Layers {
     }
   }
 
-  /** p50 of the traced ops of `group` minus p50 of its untraced ops. */
+  /** p50 of the traced ops of `group` minus p50 of its untraced ops
+    * (of `group` or of `untraced_<group>`). */
   def overhead(ctx: Ctx, group: String): Unit = {
-    val rs = ctx.ops.filter(r => r.ok && r.group == group)
+    val rs = ctx.ops.filter(r => r.ok && (r.group == group || r.group == "untraced_" + group))
     val (t, u) = rs.partition(_.traced)
     set(ctx, "trace.overhead_ms",
       if (t.isEmpty || u.isEmpty) 0.0

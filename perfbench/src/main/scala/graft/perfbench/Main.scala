@@ -191,7 +191,7 @@ final class Ctx(val workload: String, val seed: Long, val seconds: Double,
     * after Spark's cleaner has dropped what the first one released. */
   def sampleLiveHeap(): Unit = {
     System.gc()
-    Thread.sleep(300)
+    Thread.sleep(100)
     System.gc()
     val used = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed
     peakLive = math.max(peakLive, used / 1048576.0)

@@ -29,12 +29,20 @@ import graft.ops.{AtomicPublish, MaterializedView, MergeInto}
   * The final MV must equal the one-pass aggregate over every landed
   * chunk. */
 object StreamIngest {
-  val IntervalMs = 100
+  /** The fixed rate: one chunk every 5 s, 1.5 times the median
+    * one-chunk micro-batch (MERGE + MV refresh, about 3.3 s at local[4]
+    * on a 4-core box), so every chunk gets a micro-batch of its own and
+    * freshness measures the batch, not a queue. */
+  val IntervalMs = 5000
+  /** Fixed-rate chunks per run: the run's seconds' worth, at least
+    * this many. */
+  val MinFixedChunks = 2
   val ChunkRows = 40
-  val BurstChunks = 100
-  /** Chunks landed at once before the timed phase, so that the query's
-    * first micro-batches (planning, state store start) are not timed. */
-  val WarmChunks = 20
+  val BurstChunks = 30
+  /** Chunks landed one at a time, each processed before the next lands,
+    * before the timed phase, so that the query's first micro-batch
+    * (planning, state store start, codegen) is not timed. */
+  val WarmChunks = 1
   val Users = 200
   val BaseEvents = 20000
   private val T0 = java.time.Instant.parse("2026-01-01T00:00:00Z").toEpochMilli
@@ -98,7 +106,7 @@ object StreamIngest {
     val (spark, sessionS) = ctx.startSession()
     ctx.mark("session")
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    val nFixed = math.max(1, (ctx.seconds * 1000 / IntervalMs).toInt)
+    val nFixed = math.max(MinFixedChunks, (ctx.seconds * 1000 / IntervalMs).toInt)
     val bursts = ctx.args.get("bursts").map(_.toInt).getOrElse(1)
     val all = chunks(ctx.seed, WarmChunks + nFixed + bursts * BurstChunks)
     val fixed = WarmChunks until WarmChunks + nFixed
@@ -137,6 +145,10 @@ object StreamIngest {
     val returned = mutable.Map.empty[Long, Long] // batch id → return nanoTime
     val batchOp = mutable.Map.empty[Long, (String, Boolean)]
     val groups = mutable.ArrayBuffer.empty[Double]
+    // the phase whose chunks the running micro-batches carry: batches
+    // of the warm-up ("warm_") and of the burst ("burst_") are counted
+    // as ops but kept out of the fixed-rate phase's batch samples
+    @volatile var phase = "warm_"
     val ckpt = ctx.path("ckpt")
     val query = spark.readStream.schema(Schema).csv(s"$watch/*/*.csv")
       .withWatermark("ts", "10 minutes")
@@ -146,12 +158,13 @@ object StreamIngest {
       .foreachBatch { (batch: DataFrame, id: Long) =>
         val s = batch.sparkSession
         val id0 = s"op${ctx.ops.size}"
-        ctx.op("batch", "merge_refresh") {
+        ctx.op(phase + "batch", "merge_refresh",
+            if (phase == "warm_") Some(false) else None) {
           Trace.span("maint.upsert") {
             MergeInto.upsertInto(s, fact, Sizing.coalesceForStaging(batch), Seq("event_id"))
           }
           val st = Trace.span("mv.refresh")(MaterializedView.refresh(s, mv))
-          groups.synchronized(groups += st.affectedGroups.toDouble)
+          if (phase == "") groups.synchronized(groups += st.affectedGroups.toDouble)
         }
         val now = System.nanoTime()
         returned.synchronized {
@@ -178,10 +191,13 @@ object StreamIngest {
       val t = System.nanoTime()
       ids.foreach(landed(_) = t)
     }
-    land("warm", 0 until WarmChunks)
-    query.processAllAvailable()
+    (0 until WarmChunks).foreach { i =>
+      land(f"w$i%05d", Seq(i))
+      query.processAllAvailable()
+    }
     ctx.mark("warm_chunks")
     val gc0 = ctx.gcMs()
+    phase = ""
     val start = ctx.now + 200000000L
     var genError: Option[Throwable] = None
     val gen = new Thread(() => {
@@ -197,6 +213,7 @@ object StreamIngest {
     genError.foreach(throw _)
     query.processAllAvailable()
     ctx.mark("fixed_rate")
+    phase = "burst_"
     val catchups = (0 until bursts).map { b =>
       val ids = (fixed.end + b * BurstChunks) until (fixed.end + (b + 1) * BurstChunks)
       val t = System.nanoTime()
@@ -238,6 +255,15 @@ object StreamIngest {
     ctx.note("gen_late_max_ms", late.max)
     ctx.note("chunks", all.length)
     ctx.note("batches", returned.size)
+    val fixedBatches = fixed.flatMap(batchOf(_)).toSet
+    ctx.note("fixed_rate_chunks", fixed.size)
+    ctx.note("fixed_rate_batches", fixedBatches.size)
+    // chunks landed but not yet committed, at each landing
+    val commitTimes = fixed.flatMap(i => batchOf(i).flatMap(returned.get))
+    val backlog = fixed.map { i =>
+      (i - fixed.start + 1) - commitTimes.count(_ <= landed(i))
+    }.max
+    ctx.note("backlog_max_chunks", backlog)
     ctx.note("elapsed_s", elapsedS)
 
     // the final MV against the one-pass aggregate over every chunk
@@ -262,11 +288,11 @@ object StreamIngest {
       spanMedian(ctx, "maint.upsert_ms", "maint.upsert")
       spanMedian(ctx, "mv.refresh_ms", "mv.refresh")
       set(ctx, "mv.groups_recomputed", mean(groups.toSeq))
-      val batches = ctx.ops.filter(r => r.traced && r.ok).toList
+      val batches = ctx.ops.filter(r => r.traced && r.ok && r.group == "batch").toList
       set(ctx, "maint.commit_driver_ms", Stats.median(batches.map(driverOnlyMs)))
       set(ctx, "maint.files_written", mean(batches.map(_.fs.creates.toDouble)))
       set(ctx, "fs.meta_ops_per_commit", mean(batches.map(_.fs.meta.toDouble)))
-      val ps = Trace.progresses.filter(_.inputRows > 0)
+      val ps = Trace.progresses.filter(p => fixedBatches.contains(p.batchId))
       def d(k: String) = Stats.median(ps.map(_.durations.getOrElse(k, 0L).toDouble))
       set(ctx, "stream.trigger_ms", d("triggerExecution"))
       set(ctx, "stream.add_batch_ms", d("addBatch"))
@@ -280,11 +306,7 @@ object StreamIngest {
       set(ctx, "stream.state_commit_ms", Stats.median(ps.map(_.stateCommitMs.toDouble)))
       set(ctx, "stream.state_rows", if (ps.isEmpty) 0.0 else ps.last.stateRows.toDouble)
       set(ctx, "stream.state_mb", if (ps.isEmpty) 0.0 else ps.map(_.stateBytes).max / 1048576.0)
-      // chunks landed but not yet committed, at each landing
-      val commitTimes = fixed.flatMap(i => batchOf(i).flatMap(returned.get))
-      set(ctx, "stream.backlog_max_chunks", fixed.map { i =>
-        (i - fixed.start + 1) - commitTimes.count(_ <= landed(i))
-      }.max.toDouble)
+      set(ctx, "stream.backlog_max_chunks", backlog.toDouble)
       set(ctx, "stream.gen_late_ms", Stats.median(late))
       common(ctx, gcMs)
       val (t, u) = fresh.partition { case (i, _) =>

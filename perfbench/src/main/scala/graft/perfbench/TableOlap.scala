@@ -10,19 +10,20 @@ import org.apache.spark.sql.types._
 import graft.ops.{AtomicPublish, DistributedSelect, MergeInto}
 import graft.sources.GraftCatalog
 
-/** `table_olap`: a closed loop of about 85% reads and 15% commits over
-  * TPC-H-shaped `lineitem`/`orders` (sf0.02 row counts: 30k orders,
-  * ~120k lines), published with `AtomicPublish.publish` and read by
+/** `table_olap`: a closed loop of reads and commits over TPC-H-shaped
+  * `lineitem`/`orders` (20k orders, ~80k lines), published with `AtomicPublish.publish` and read by
   * name through a `GraftCatalog`.
   *
-  * The op schedule is drawn from the seed before the timed phase:
-  * blocks of 13 ops (11 reads, 2 commits) shuffled per block, so every
-  * seed runs the same mix; a run measures a fixed number of blocks.
-  * After the timed phase the seeded op log is replayed on plain
-  * DataFrames: every read's digest, every `readAt` row count and the
-  * final snapshot of both tables must equal the model's. */
+  * The op schedule is drawn from the seed before the timed phase, in
+  * rounds: every read kind once and every commit kind once, shuffled by
+  * the seed, then a compaction. One untimed warm-up round (every commit
+  * kind, seven of the read kinds) runs first; the run then measures a
+  * fixed number of rounds, so every run times the same mix of work. After the timed phase the seeded op log is
+  * replayed on plain DataFrames: every read's digest (a change feed's
+  * row count included), every `readAt` row count and the final snapshot
+  * of both tables must equal the model's. */
 object TableOlap {
-  val NOrders = 30000
+  val NOrders = 20000
   val Dec: DecimalType = DecimalType(15, 2)
   private val Prios = Seq("1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW")
   private val Epoch = java.time.LocalDate.of(1992, 1, 1)
@@ -90,8 +91,16 @@ object TableOlap {
   sealed trait Read { def kind: String }
   final case class SqlRead(kind: String, sql: String) extends Read
   final case class Median() extends Read { val kind = "median" }
-  final case class ReadAt(table: String, back: Int) extends Read { val kind = "read_at" }
-  final case class Changes(table: String, back: Int) extends Read { val kind = "changes" }
+  /** `readAt` of `lineitem` at the version after its first
+    * [[HistoryCommits]] commits (the latest one before those exist):
+    * the same snapshot shape in every run. */
+  final case class ReadAt() extends Read { val kind = "read_at" }
+  /** The change feed of `lineitem` across its first [[HistoryCommits]]
+    * commits: a lagging consumer's catch-up, the same window in every
+    * run. */
+  final case class Changes() extends Read { val kind = "changes" }
+  /** The warm-up round's commits on `lineitem`. */
+  val HistoryCommits = 2
 
   sealed trait Commit { def kind: String; def table: String }
   final case class Upsert(table: String, rows: Seq[Row], sql: Boolean) extends Commit {
@@ -158,22 +167,25 @@ object TableOlap {
       val a = 1 + r.nextInt(NOrders - 200)
       SqlRead(kind, s"SELECT * FROM {li} WHERE l_orderkey BETWEEN $a AND ${a + 100}")
     case "point" =>
-      SqlRead(kind, s"SELECT * FROM {o} WHERE o_orderkey = ${1 + r.nextInt(NOrders + 500)}")
+      SqlRead(kind, s"SELECT * FROM {o} WHERE o_orderkey = ${1 + r.nextInt(NOrders)}")
   }
 
-  /** One block: every read kind once and two commits (85% reads). */
-  val BlockReads = Seq("q1", "q3", "q5", "q10", "groupby", "topk",
+  /** One round: every read kind once, four commits shuffled among them,
+    * then a compaction: 11 reads and 5 commits. */
+  val RoundReads = Seq("q1", "q3", "q5", "q10", "groupby", "topk",
     "median", "range", "point", "read_at", "changes")
-  val BlockCommits = 2
-  val BlockSize: Int = BlockReads.size + BlockCommits
-  /** The run measures round(seconds / BlockSeconds) blocks, at least
-    * one: two at the benchmark's 12 s. A block takes 6-12 s on a 4-core
-    * box, so the timed phase lasts about the run's seconds. */
-  val BlockSeconds = 6.0
-
-  /** The fixed commit cycle, [[BlockCommits]] per block. */
-  private val CommitCycle = Seq("upsert_li", "sql_merge_o", "delete_o",
-    "upsert_o", "sql_delete_li", "sql_merge_li", "delete_li", "compact")
+  val RoundCommits = Seq("upsert", "delete", "sql_merge", "sql_delete")
+  val RoundSize: Int = RoundReads.size + RoundCommits.size + 1
+  /** The untimed warm-up round's reads: aggregates, a join, a window,
+    * range and point scans and a time-travel count, so that the timed
+    * round's reads find the planner, scans, joins and windows warm (a
+    * cold window or point read took twice its warm time). */
+  val WarmReads = Seq("q1", "q3", "groupby", "topk", "range", "point", "read_at")
+  val WarmSize: Int = WarmReads.size + RoundCommits.size + 1
+  /** The run measures round(seconds / RoundSeconds) rounds after the
+    * warm-up round, at least one: one at the benchmark's 8 s. A round
+    * takes 8-12 s on a 4-core box. */
+  val RoundSeconds = 10.0
 
   final class Gen(seed: Long, nl: Array[Int]) {
     private val r = new java.util.Random(seed * 7919 + 17)
@@ -198,41 +210,46 @@ object TableOlap {
       (0 until 40).map(_ => someOrder()).distinct
         .flatMap(k => (1 to nlOf(k) + 1).map(ln => line(k, ln)))
 
-    def commit(kind: String, i: Int): Commit = kind match {
-      case "upsert_li" => Upsert("lineitem", lineBatch(), sql = false)
-      case "sql_merge_li" => Upsert("lineitem", lineBatch(), sql = true)
-      case "upsert_o" => Upsert("orders", orderBatch(), sql = false)
-      case "sql_merge_o" => Upsert("orders", orderBatch(), sql = true)
-      case "delete_o" =>
-        DeleteKeys("orders", (0 until 120).map(_ => someOrder()).distinct.map(Row(_)))
-      case "delete_li" => DeleteKeys("lineitem",
-        (0 until 120).map { _ => val k = someOrder(); (k, 1 + r.nextInt(nlOf(k))) }
-          .distinct.map { case (k, ln) => Row(k, ln) })
-      case "sql_delete_li" => SqlDeleteOrders((0 until 25).map(_ => someOrder()).distinct)
-      case "compact" => Compact(if (i % 2 == 0) "lineitem" else "orders")
+    /** A commit of round `k`. Rounds alternate their tables: odd rounds
+      * (the first timed one) upsert, delete from and compact `lineitem`
+      * and MERGE into `orders`; even rounds the other way round. SQL
+      * DELETE always deletes lines of seeded orders. */
+    def commit(kind: String, k: Int): Commit = {
+      val (a, b) = if (k % 2 == 1) ("lineitem", "orders") else ("orders", "lineitem")
+      def batch(t: String) = if (t == "orders") orderBatch() else lineBatch()
+      kind match {
+        case "upsert" => Upsert(a, batch(a), sql = false)
+        case "sql_merge" => Upsert(b, batch(b), sql = true)
+        case "delete" if a == "orders" =>
+          DeleteKeys("orders", (0 until 120).map(_ => someOrder()).distinct.map(Row(_)))
+        case "delete" => DeleteKeys("lineitem",
+          (0 until 120).map { _ => val o = someOrder(); (o, 1 + r.nextInt(nlOf(o))) }
+            .distinct.map { case (o, ln) => Row(o, ln) })
+        case "sql_delete" => SqlDeleteOrders((0 until 25).map(_ => someOrder()).distinct)
+        case "compact" => Compact(a)
+      }
     }
 
     def read(kind: String): Read = kind match {
       case "median" => Median()
-      case "read_at" => ReadAt(if (r.nextBoolean()) "lineitem" else "orders", 1 + r.nextInt(4))
-      case "changes" => Changes(if (r.nextBoolean()) "lineitem" else "orders", 1 + r.nextInt(3))
+      case "read_at" => ReadAt()
+      case "changes" => Changes()
       case k => sqlRead(k, r)
     }
 
-    /** `blocks` blocks of [[BlockSize]] ops, each shuffled. */
-    def schedule(blocks: Int): Seq[Either[Read, Commit]] = {
-      var ci = 0
-      (0 until blocks).flatMap { _ =>
-        val kinds = BlockReads.map(Left(_)) ++
-          (0 until BlockCommits).map { _ => ci += 1; Right(CommitCycle((ci - 1) % CommitCycle.size)) }
+    /** The warm-up round (round 0, [[WarmSize]] ops), then `rounds`
+      * rounds of [[RoundSize]] ops. */
+    def schedule(rounds: Int): Seq[Either[Read, Commit]] =
+      (0 to rounds).flatMap { k =>
+        val kinds = (if (k == 0) WarmReads else RoundReads).map(Left(_)) ++
+          RoundCommits.map(Right(_))
         val shuffled = new java.util.ArrayList(kinds.asJava)
         java.util.Collections.shuffle(shuffled, r)
         shuffled.asScala.toSeq.map {
-          case Left(k) => Left(read(k))
-          case Right(k) => Right(commit(k, ci))
-        }
+          case Left(kind) => Left(read(kind))
+          case Right(kind) => Right(commit(kind, k))
+        } :+ Right(commit("compact", k))
       }
-    }
   }
 
   // ----------------------------------------------------------- digests
@@ -284,18 +301,29 @@ object TableOlap {
       liByOrder.getOrElseUpdate(k, mutable.Set.empty[Int]) += ln
     }
 
-    def apply(c: Commit): Unit = c match {
-      case Upsert("orders", rows, _) => rows.foreach(r => setOrder(r.getLong(0), Some(r)))
-      case Upsert(_, rows, _) => rows.foreach(r => setLine(r.getLong(0), r.getInt(3), Some(r)))
-      case DeleteKeys("orders", keys) => keys.foreach(k => setOrder(k.getLong(0), None))
-      case DeleteKeys(_, keys) => keys.foreach(k => setLine(k.getLong(0), k.getInt(1), None))
-      case SqlDeleteOrders(oks) => oks.foreach { k =>
+    /** The change-feed rows of each applied commit, in order: one per
+      * upserted row (an insert or an update post-image), one per key
+      * that was live before a delete, none for a compaction. */
+    val changeRows = mutable.ArrayBuffer.empty[Long]
+
+    def apply(c: Commit): Unit = changeRows += (c match {
+      case Upsert("orders", rows, _) =>
+        rows.foreach(r => setOrder(r.getLong(0), Some(r))); rows.size
+      case Upsert(_, rows, _) =>
+        rows.foreach(r => setLine(r.getLong(0), r.getInt(3), Some(r))); rows.size
+      case DeleteKeys("orders", keys) =>
+        val live = keys.map(_.getLong(0)).filter(orderLive)
+        live.foreach(setOrder(_, None)); live.size
+      case DeleteKeys(_, keys) =>
+        val live = keys.map(k => (k.getLong(0), k.getInt(1))).filter { case (o, ln) => lineLive(o, ln) }
+        live.foreach { case (o, ln) => setLine(o, ln, None) }; live.size
+      case SqlDeleteOrders(oks) => oks.map { k =>
         val base = if (baseOrder(k)) (1 to nl(k.toInt - 1)).toSet else Set.empty[Int]
-        (base ++ liByOrder.getOrElse(k, mutable.Set.empty[Int]))
-          .filter(lineLive(k, _)).foreach(ln => setLine(k, ln, None))
-      }
-      case Compact(_) => ()
-    }
+        val live = (base ++ liByOrder.getOrElse(k, mutable.Set.empty[Int])).filter(lineLive(k, _))
+        live.foreach(ln => setLine(k, ln, None)); live.size
+      }.sum
+      case Compact(_) => 0
+    })
 
     def count(table: String): Long = if (table == "orders") ordCount else liCount
 
@@ -324,21 +352,23 @@ object TableOlap {
     val (spark, sessionS) = ctx.startSession()
     ctx.mark("session")
     spark.conf.set("spark.graft.manifest.bloom", "o_orderkey")
-    val src = Map("orders" -> ctx.path("data/orders"), "lineitem" -> ctx.path("data/lineitem"))
-    ordersDf(spark, ctx.seed).write.parquet(src("orders"))
-    lineitemDf(spark, ctx.seed).write.parquet(src("lineitem"))
+    // inputs: both tables generated from the seed and held in memory;
+    // set-up publishes them, the model replays the op log over them
+    val src = Map("orders" -> ordersDf(spark, ctx.seed).cache(),
+      "lineitem" -> lineitemDf(spark, ctx.seed).cache())
+    src.values.foreach(_.count())
     val nl: Array[Int] = spark.range(1, NOrders + 1).select(col("id").as("k"))
       .select(linesPerOrder(ctx.seed)).collect().map(_.getInt(0))
-    val schedule = new Gen(ctx.seed, nl).schedule(40)
+    val schedule = new Gen(ctx.seed, nl).schedule(8)
     ctx.mark("inputs")
     val keysOf = Map("orders" -> OrdKeys, "lineitem" -> LiKeys)
 
     // set-up: publish both tables into a fresh catalog namespace, three
-    // times; the timed phase uses the last namespace
-    def publishAll(ns: String): Map[String, String] = src.map { case (t, p) =>
+    // times; the run uses the last namespace
+    def publishAll(ns: String): Map[String, String] = src.map { case (t, df) =>
       val path = ctx.path(s"warehouse/$ns/$t")
       Trace.span("maint.publish") {
-        AtomicPublish.publish(spark, path)(d => spark.read.parquet(p).write.parquet(d))
+        AtomicPublish.publish(spark, path)(d => df.write.parquet(d))
       }
       GraftCatalog.writeProps(spark, path,
         Map(GraftCatalog.MergeKeysProp -> keysOf(t).mkString(",")))
@@ -356,16 +386,8 @@ object TableOlap {
     def sqlText(s: String, n: Map[String, String]) =
       s.replace("{li}", n("li")).replace("{o}", n("o"))
 
-    // warm-up: an aggregate and a range read, untimed
-    val tw = ctx.now
-    schedule.collect { case Left(r: SqlRead) if r.kind == "q1" || r.kind == "range" => r }
-      .groupBy(_.kind).values.map(_.head)
-      .foreach(r => spark.sql(sqlText(r.sql, names)).collect())
-    val warmS = ctx.ms(tw) / 1000.0
-    ctx.mark("warmup")
-    val setupS = sessionS + warmS + Stats.median(reps.map(_._1))
+    val setupS = sessionS + Stats.median(reps.map(_._1))
     ctx.note("session_s", sessionS)
-    ctx.note("warmup_s", warmS)
     ctx.note("publish_s", reps.map(_._1).mkString(","))
     ctx.metric("setup_s", setupS, "s")
     ctx.reportMetric("setup_s", setupS, "s")
@@ -418,24 +440,24 @@ object TableOlap {
         }
         i += 1
       }
-    // one untimed warm-up block, so that no read kind pays JIT and
-    // codegen warm-up in the timed phase and both tables have commits
-    val tw2 = ctx.now
-    runOps(BlockSize, "warm_", Some(false))
-    ctx.note("warmup_block_s", ctx.ms(tw2) / 1000.0)
-    ctx.mark("warmup_block")
-    // then a fixed amount of work, whole blocks sized to take about the
+    // one untimed warm-up round, so that no op kind pays JIT and codegen
+    // warm-up in the timed phase and both tables have commits
+    val tw = ctx.now
+    runOps(WarmSize, "warm_", Some(false))
+    ctx.note("warmup_round_s", ctx.ms(tw) / 1000.0)
+    ctx.mark("warmup_round")
+    // then a fixed amount of work, whole rounds sized to take about the
     // run's seconds, so every run measures the same op mix; a traced run
-    // adds one untraced block first, and the difference is the tracing
-    // overhead
-    val blocks = math.max(1, math.round(ctx.seconds / BlockSeconds).toInt)
-    if (ctx.trace) runOps(2 * BlockSize, "", Some(false))
+    // adds one untraced round after the traced ones, and the difference
+    // is the tracing overhead
+    val rounds = math.max(1, math.round(ctx.seconds / RoundSeconds).toInt)
     val gc0 = ctx.gcMs()
     val start = ctx.now
-    runOps(i + blocks * BlockSize, "", Some(true))
+    runOps(i + rounds * RoundSize, "", Some(true))
     val elapsedS = ctx.ms(start) / 1000.0
     val gcMs = ctx.gcMs() - gc0
     ctx.mark("timed")
+    if (ctx.trace) runOps(i + RoundSize, "untraced_", Some(false))
     ctx.sampleLiveHeap()
 
     // metrics
@@ -445,7 +467,7 @@ object TableOlap {
       (r.group == "query" || r.group == "commit"))
     val opsPerS = okOps / elapsedS
     ctx.reportMetric("ops_per_s", opsPerS, "1/s")
-    // geometric means: with one read of each kind per block, the median
+    // geometric means: with one read of each kind per round, the median
     // jumps between kinds from run to run; the geometric mean of the
     // same samples does not
     val qg = Stats.geomean(ctx.samplesOf("query"))
@@ -463,13 +485,13 @@ object TableOlap {
     }
     val tCheck = ctx.now
     // checks: replay the log on the model
-    val baseO = spark.read.parquet(src("orders")).cache()
-    val baseLi = spark.read.parquet(src("lineitem")).cache()
+    val baseO = src("orders")
+    val baseLi = src("lineitem")
     // the model state after n commits, as temp views named by n; the
     // reads are then checked concurrently
     val states = (0 to commitsDone.size).map { n =>
       val m = new Model(spark, baseO, baseLi, nl)
-      commitsDone.take(n).foreach(m.apply)
+      commitsDone.take(n).foreach(m.apply(_))
       m.orders.createOrReplaceTempView(s"m_orders_$n")
       m.lineitem.createOrReplaceTempView(s"m_lineitem_$n")
       m
@@ -478,25 +500,35 @@ object TableOlap {
     val countAtVersion: Map[(String, Long), Long] = versions.toSeq.flatMap { case (t, vs) =>
       vs.indices.map(j => (t, vs(j)) -> states(versionCommits(t)(j)).count(t))
     }.toMap
+    // the change feed of a table across versions (from, to]: the change
+    // rows of the commits stamped in between
+    val changeRows = states.last.changeRows
+    def changesExpected(t: String, from: Long, to: Long): Long =
+      versions(t).indices.filter { j =>
+        versions(t)(j) > from && versions(t)(j) <= to && versionCommits(t)(j) > 0
+      }
+        .map(j => changeRows(versionCommits(t)(j) - 1)).sum
     def modelNames(n: Int) = Map("li" -> s"m_lineitem_$n", "o" -> s"m_orders_$n")
-    def expected(l: Logged): Option[String] = l.read match {
+    def expected(l: Logged): String = l.read match {
       case SqlRead(_, sql) =>
-        Some(rowsDigest(spark.sql(sqlText(sql, modelNames(l.commitsBefore))).collect().toSeq))
+        rowsDigest(spark.sql(sqlText(sql, modelNames(l.commitsBefore))).collect().toSeq)
       case Median() =>
-        Some(rowsDigest(medianOf(spark.sql(
+        rowsDigest(medianOf(spark.sql(
           s"""SELECT v FROM (SELECT o_totalprice AS v,
              |  row_number() OVER (ORDER BY o_totalprice, o_orderkey) AS rn,
              |  count(*) OVER () AS n FROM m_orders_${l.commitsBefore})
              |WHERE rn IN (floor((n + 1) / 2), floor((n + 2) / 2))""".stripMargin))
-          .collect().toSeq))
-      case ReadAt(_, _) | Changes(_, _) if !l.digest.startsWith("changes:") =>
+          .collect().toSeq)
+      case ReadAt() | Changes() if !l.digest.startsWith("changes:") =>
         val Array(t, v, _) = l.digest.split(":")
-        Some(s"$t:$v:${countAtVersion((t, v.toLong))}")
-      case _ => None
+        s"$t:$v:${countAtVersion((t, v.toLong))}"
+      case Changes() =>
+        val Array(_, t, from, to, _) = l.digest.split(":")
+        s"changes:$t:$from:$to:${changesExpected(t, from.toLong, to.toLong)}"
     }
     val pool = java.util.concurrent.Executors.newFixedThreadPool(ctx.cores)
     val bad = try {
-      log.toList.map(l => pool.submit(() => expected(l).filter(_ != l.digest)
+      log.toList.map(l => pool.submit(() => Some(expected(l)).filter(_ != l.digest)
           .map(e => s"${l.read.kind}: got ${l.digest}, model $e")))
         .flatMap(_.get())
     } finally pool.shutdown()
@@ -539,22 +571,24 @@ object TableOlap {
         "o_totalprice", "o_orderkey",
         n => Seq(floor((n + lit(1)) / lit(2)), floor((n + lit(2)) / lit(2))))))
       (rowsDigest(Trace.span("plan.exec")(df.collect().toSeq)), 0.0, 0.0)
-    case ReadAt(t, back) =>
-      val vs = versions(t)
-      val v = vs(math.max(0, vs.size - 1 - back))
-      val n = Trace.span("maint.read_at")(AtomicPublish.readAt(spark, paths(t), v).count())
-      (s"$t:$v:$n", 0.0, 0.0)
-    case Changes(t, back) =>
-      val vs = versions(t)
-      if (vs.size < 2) {
+    case ReadAt() =>
+      val vs = versions("lineitem")
+      val v = vs(math.min(HistoryCommits, vs.size - 1))
+      val n = Trace.span("maint.read_at")(
+        AtomicPublish.readAt(spark, paths("lineitem"), v).count())
+      (s"lineitem:$v:$n", 0.0, 0.0)
+    case Changes() =>
+      val vs = versions("lineitem")
+      if (vs.size <= HistoryCommits) {
         val v = vs.last
-        val n = Trace.span("maint.read_at")(AtomicPublish.readAt(spark, paths(t), v).count())
-        (s"$t:$v:$n", 0.0, 0.0)
+        val n = Trace.span("maint.read_at")(
+          AtomicPublish.readAt(spark, paths("lineitem"), v).count())
+        (s"lineitem:$v:$n", 0.0, 0.0)
       } else {
-        val from = vs(math.max(0, vs.size - 1 - back))
+        val (from, to) = (vs(0), vs(HistoryCommits))
         val n = Trace.span("maint.changes")(
-          AtomicPublish.changesBetween(spark, paths(t), from, vs.last).count())
-        (s"changes:$t:$from:$n", 0.0, 0.0)
+          AtomicPublish.changesBetween(spark, paths("lineitem"), from, to).count())
+        (s"changes:lineitem:$from:$to:$n", 0.0, 0.0)
       }
   }
 
