@@ -19,12 +19,23 @@ object Sizing {
   val StagingCoalesceBytesKey = "spark.graft.staging.coalesceTargetBytes"
   val StagingCoalesceBytesDefault: Long = 128L * 1024 * 1024
 
-  /** `df` coalesced to one partition when its optimizer size estimate
-    * is at or under [[StagingCoalesceBytesKey]], unchanged otherwise. */
+  /** `df` coalesced to one partition when its size estimate is at or
+    * under [[StagingCoalesceBytesKey]], unchanged otherwise. A
+    * driver-local `LocalRelation` (what an MV refresh upserts) is sized
+    * from its own statistics, without running the optimizer; any other
+    * plan from the optimized plan's. A value of the key that is not a
+    * byte count fails loudly, naming the key. */
   def coalesceForStaging(df: DataFrame): DataFrame = {
     val target = df.sparkSession.conf.getOption(StagingCoalesceBytesKey)
-      .map(_.toLong).getOrElse(StagingCoalesceBytesDefault)
-    val est = df.queryExecution.optimizedPlan.stats.sizeInBytes
+      .map(raw => raw.trim.toLongOption.getOrElse(
+        throw new IllegalArgumentException(
+          s"$StagingCoalesceBytesKey must be a byte count, got `$raw`")))
+      .getOrElse(StagingCoalesceBytesDefault)
+    val est = df.queryExecution.logical match {
+      case local: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        local.stats.sizeInBytes
+      case _ => df.queryExecution.optimizedPlan.stats.sizeInBytes
+    }
     if (est <= BigInt(target)) df.coalesce(1) else df
   }
 }

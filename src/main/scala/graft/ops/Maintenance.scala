@@ -271,25 +271,27 @@ object AtomicPublish {
     // otherwise have its lock stolen MID-COMMIT. Each beat first checks
     // the lock still carries OUR token: a stolen lease must not be
     // kept artificially fresh by its zombie.
+    // The beat waits on a latch, not in sleep slices: release counts it
+    // down and the join below returns as soon as an in-flight beat (if
+    // any) finishes, instead of waiting out the current sleep.
     val beatEvery = math.max(25L, staleMs / 3)
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val stop = new java.util.concurrent.CountDownLatch(1)
     val beat = new Thread(() => {
-      while (!stop.get()) {
+      var stopped = false
+      while (!stopped) {
         try {
           if (readLockToken(fs, lockPath).contains(token))
             fs.setTimes(lockPath, System.currentTimeMillis(), -1)
         } catch { case _: Throwable => () }
-        var waited = 0L
-        while (!stop.get() && waited < beatEvery) {
-          Thread.sleep(25); waited += 25
-        }
+        stopped = stop.await(beatEvery, java.util.concurrent.TimeUnit.MILLISECONDS)
       }
     }, s"graft-manifest-lock-heartbeat")
     beat.setDaemon(true)
     beat.start()
     try body(token)
     finally {
-      stop.set(true); beat.join(1000)
+      // join BEFORE the delete: a beat must never touch a released lock
+      stop.countDown(); beat.join(1000)
       // release ONLY our own lock: after a lease theft the path holds
       // the new holder's lock, which the zombie must not delete
       try {
@@ -841,7 +843,7 @@ object AtomicPublish {
         write(fs.makeQualified(staging).toString)
       }
       marker.foreach { case (tag, keys) =>
-        checkMergeContract(spark, tablePath, fs, root,
+        checkMergeContract(spark, tablePath,
           fs.makeQualified(staging).toString, tag, keys)
       }
       staged(staged.size - 1) = entry.copy(
@@ -860,7 +862,7 @@ object AtomicPublish {
       // duplicate that committed between the fast-path check and this
       // lock acquisition is visible in `prev`'s sidecars now
       val replayed = txn.exists { case (appId, version) =>
-        txnMarks(fs, root, prev).get(appId).exists(_ >= version)
+        txnMarks(spark, tablePath, prev).get(appId).exists(_ >= version)
       }
       if (replayed) { dropStaged(); None }
       else {
@@ -908,11 +910,8 @@ object AtomicPublish {
     * (or its segments aged out past a fold without carry-forward,
     * which the fold prevents). */
   def txnVersionFor(spark: SparkSession, tablePath: String,
-                    appId: String): Option[Long] = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    txnMarks(fs, root, currentSegments(spark, tablePath)).get(appId)
-  }
+                    appId: String): Option[Long] =
+    txnMarks(spark, tablePath, currentSegments(spark, tablePath)).get(appId)
 
   /** Write `marks` (appId → version) as `dataDir`'s txn sidecar; no-op
     * for an empty map. MUST run under the commit lock, before the
@@ -929,30 +928,14 @@ object AtomicPublish {
       finally out.close()
     }
 
-  /** appId → max recorded version over `segs`' txn sidecars. */
-  private def txnMarks(fs: org.apache.hadoop.fs.FileSystem,
-                       root: org.apache.hadoop.fs.Path,
-                       segs: Seq[String]): Map[String, Long] =
-    segs.flatMap { d =>
-      val p = new org.apache.hadoop.fs.Path(root, TxnPrefix + d)
-      if (!fs.exists(p)) Nil
-      else {
-        val in = fs.open(p)
-        val text =
-          try {
-            val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-            in.readFully(bytes)
-            new String(bytes, "UTF-8")
-          } finally in.close()
-        text.linesIterator.filter(_.nonEmpty).map { line =>
-          line.split("\t", 2) match {
-            case Array(a, v) => a -> v.trim.toLong
-            case _ => throw new IllegalStateException(
-              s"torn txn sidecar at $root/$TxnPrefix$d: `$line`")
-          }
-        }.toSeq
-      }
-    }.groupBy(_._1).map { case (a, vs) => a -> vs.map(_._2).max }
+  /** appId → max recorded version over `segs`' txn sidecars (read
+    * through the segment descriptors, [[segmentMetas]]). */
+  private def txnMarks(spark: SparkSession, tablePath: String,
+                       segs: Seq[String]): Map[String, Long] = {
+    val fs = fsOf(spark, tablePath)
+    segmentMetas(spark, tablePath, segs).flatMap(_.txnMarks(fs))
+      .groupBy(_._1).map { case (a, vs) => a -> vs.map(_._2).max }
+  }
 
   /** Idempotent [[appendSegment]]: the batch lands EXACTLY ONCE per
     * `(appId, version)` — a replay (same appId, version <= the
@@ -990,8 +973,6 @@ object AtomicPublish {
     * (the caller deleted the wrong thing) at worst, so they fail
     * loudly. */
   private def checkMergeContract(spark: SparkSession, tablePath: String,
-                                 fs: org.apache.hadoop.fs.FileSystem,
-                                 root: org.apache.hadoop.fs.Path,
                                  stagedPath: String,
                                  tag: String,
                                  keys: Seq[String]): Unit = {
@@ -999,8 +980,8 @@ object AtomicPublish {
     val stagedNames = stagedFields.map(_.toLowerCase).toSet
     keys.foreach(k => require(stagedNames.contains(k.toLowerCase),
       s"$tag into $tablePath: merge key `$k` missing from the source batch"))
-    val existingMarked = mergeSidecarsFor(spark, tablePath,
-      currentSegments(spark, tablePath))
+    val current = currentSegments(spark, tablePath)
+    val existingMarked = mergeSidecarsFor(spark, tablePath, current)
     existingMarked.values.headOption.foreach { case (_, priorKeys) =>
       require(priorKeys.map(_.toLowerCase) == keys.map(_.toLowerCase),
         s"$tag into $tablePath: pending merge segments key on " +
@@ -1017,13 +998,14 @@ object AtomicPublish {
           s"(${keys.mkString(",")}) before appendDeleteSegment")
       return
     }
-    // column-NAME set of the current table, from one parquet FOOTER per
-    // segment — building the reconciled read's plan here (as the first
-    // cut did) costs ~0.5 s of datasource resolution PER MERGE and
-    // grows with pending segments; names are all the contract needs
+    // column-NAME set of the current table, from each segment's cached
+    // footer descriptor — building the reconciled read's plan here (as
+    // the first cut did) costs ~0.5 s of datasource resolution PER MERGE
+    // and grows with pending segments; names are all the contract needs
     // (type incompatibilities fail loudly at read time via unionByName)
-    val currentFields: Seq[String] = currentSegments(spark, tablePath)
-      .flatMap(d => segmentFieldNames(spark, s"$tablePath/$d")).distinct
+    val fs = fsOf(spark, tablePath)
+    val currentFields: Seq[String] = segmentMetas(spark, tablePath, current)
+      .flatMap(_.footer(fs).toSeq.flatMap(_.fieldNames)).distinct
     val currentNames = currentFields.map(_.toLowerCase).toSet
     val dropped = currentFields.filterNot(n =>
       stagedNames.contains(n.toLowerCase))
@@ -1125,7 +1107,7 @@ object AtomicPublish {
           // high-water marks move onto the rewrite output — compaction
           // must never forget an applied (appId, version) or a sink
           // replay after the fold would re-land its batch
-          writeTxnMarks(fs, root, dataDir, txnMarks(fs, root, observed))
+          writeTxnMarks(fs, root, dataDir, txnMarks(spark, tablePath, observed))
           // `fold` declares the commit content-preserving; a cow-mode
           // MERGE/DELETE/SYNC rewrite CHANGES rows and must not claim
           // it — pre-round-16 every casRewrite stamped fold, so the
@@ -1228,7 +1210,7 @@ object AtomicPublish {
             // (rewritten) segments' txn marks land on the FIRST output
             // segment's sidecar; kept segments keep their own
             writeTxnMarks(fs, root, names.head._2,
-              txnMarks(fs, root, rewrite))
+              txnMarks(spark, tablePath, rewrite))
             fs.delete(staging, true) // now-empty staging shell
             val manifest = keep ++ names.map(_._2)
             onCommit(fs, root, manifest)
@@ -1420,10 +1402,8 @@ object AtomicPublish {
                                         clustered: Seq[String],
                                         newSegs: Seq[String],
                                         clusterBy: Seq[String]): Set[String] = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val zonesOf = (clustered ++ newSegs).map(d =>
-      d -> ZoneMaps.read(fs, root, d)).toMap
+    val zones = zonesFor(spark, tablePath, clustered ++ newSegs)
+    val zonesOf = (d: String) => zones.getOrElse(d, Map.empty[String, ZoneMaps.ColZone])
     val side = mergeSidecarsFor(spark, tablePath, newSegs)
     val cCol = clusterBy.head.toLowerCase
     def cmpZ(tag: String, a: String, b: String): Int =
@@ -1568,37 +1548,17 @@ object AtomicPublish {
   def currentDataDir(spark: SparkSession, tablePath: String): Option[String] =
     currentSegments(spark, tablePath).headOption
 
-  /** Upsert sidecars among `segs`: dir name → merge keys. One root
-    * listing, opened only for segments actually marked. */
   /** Merge-on-read sidecars (`upsert` or `delete` markers) among
     * `segs`: dir → (tag, merge keys). Any marker — either tag — means
     * the segment list needs read-time reconciliation ([[readOver]]);
     * the tag decides whether the segment's rows are DATA (upsert) or
-    * pure tombstones (delete). */
+    * pure tombstones (delete). Read through the segment descriptors
+    * ([[segmentMetas]]): a warm table answers without touching disk. */
   def mergeSidecarsFor(spark: SparkSession, tablePath: String,
                        segs: Seq[String]): Map[String, (String, Seq[String])] = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(root)) return Map.empty
-    val marked = fs.listStatus(root)
-      .filter(f => !f.isDirectory && f.getPath.getName.startsWith(SegMetaPrefix))
-      .map(_.getPath.getName.stripPrefix(SegMetaPrefix)).toSet
-    segs.filter(marked).flatMap { d =>
-      try {
-        val p = new org.apache.hadoop.fs.Path(root, SegMetaPrefix + d)
-        val in = fs.open(p)
-        val bytes =
-          try {
-            val b = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-            in.readFully(b); b
-          } finally in.close()
-        val parts = new String(bytes, "UTF-8").split("\t", 2)
-        if (parts.length == 2 && (parts(0) == "upsert" || parts(0) == "delete"))
-          Some(d -> (parts(0),
-            parts(1).split(",").map(_.trim).filter(_.nonEmpty).toSeq))
-        else None
-      } catch { case _: java.io.IOException => None }
-    }.toMap
+    val fs = fsOf(spark, tablePath)
+    segmentMetas(spark, tablePath, segs)
+      .flatMap(m => m.marker(fs).map(m.dir -> _)).toMap
   }
 
   /** Segments among `segs` carrying ANY merge-on-read marker (upsert
@@ -1649,7 +1609,7 @@ object AtomicPublish {
     require(segs.nonEmpty, s"readOver: empty segment list for $tablePath")
     val side = mergeSidecarsFor(spark, tablePath, segs)
     if (side.isEmpty)
-      segmentScanNoResolve(spark, segs.map(d => s"$tablePath/$d"))
+      committedScan(spark, tablePath, segs)
     else {
       val keys = side.values.head._2 // key agreement enforced at write
       val ordCol = "__graft_seg_ord"
@@ -1706,19 +1666,18 @@ object AtomicPublish {
       // corpus key-scan per read
       val upSegs = dataSegs.filter(side.contains)
       // uniform-schema fast path (the common, un-evolved case, decided
-      // from one parquet FOOTER per segment — milliseconds): ONE
-      // datasource resolution over all segment dirs, with the segment
-      // ordinal derived from input_file_name. The per-segment
-      // resolution below costs ~0.1 s PER SEGMENT of driver time —
-      // a per-micro-batch MERGE sink constructs this plan on every
-      // commit, so construction cost is a recurring constant worth
-      // engineering down. Uniformity compares the TYPED footer
-      // signature (names + types), not names alone: a same-name
-      // type-evolved segment must take the per-segment path below,
-      // whose unionByName casts or refuses like inference would.
-      val fieldsPerSeg = dataSegs.map(d =>
-        segmentSchemaSignature(spark, s"$tablePath/$d"))
-      if (fieldsPerSeg.nonEmpty && fieldsPerSeg.forall(_ == fieldsPerSeg.head)) {
+      // from the segments' cached footer descriptors): ONE datasource
+      // resolution over all segment dirs, with the segment ordinal
+      // derived from the file path. The per-segment resolution below
+      // costs ~0.1 s PER SEGMENT of driver time — a per-micro-batch
+      // MERGE sink constructs this plan on every commit, so
+      // construction cost is a recurring constant worth engineering
+      // down. Uniformity compares the TYPED footer signature
+      // ([[schemaSignature]]: names, types, nullability), not names
+      // alone: a same-name type-evolved segment must take the
+      // per-segment path below, whose unionByName casts or refuses
+      // like inference would.
+      if (segmentsUniform(spark, tablePath, dataSegs)) {
         // zonemap/bloom-aware scan: a pushed predicate skips whole DATA
         // segments even while merges are pending (the claims join only
         // ever REMOVES rows, so dropping rows the predicate already
@@ -1738,8 +1697,7 @@ object AtomicPublish {
         // evolved segments: per-segment reads union'd BY NAME with null
         // backfill; column order is first-appearance (base order, then
         // additions in commit order)
-        val perSeg = dataSegs.map(d =>
-          segmentScanNoResolve(spark, Seq(s"$tablePath/$d")))
+        val perSeg = dataSegs.map(d => committedScan(spark, tablePath, Seq(d)))
         val canon = perSeg.foldLeft(Vector.empty[String]) { (acc, df) =>
           acc ++ df.schema.fieldNames.filterNot(n =>
             acc.exists(_.equalsIgnoreCase(n)))
@@ -1751,7 +1709,7 @@ object AtomicPublish {
         val upClaims =
           if (upSegs.isEmpty) None
           else Some(upSegs.map(d =>
-            segmentScanNoResolve(spark, Seq(s"$tablePath/$d"))
+            committedScan(spark, tablePath, Seq(d))
               .select(keys.map(col): _*)
               .withColumn(ordCol, lit(segOrd(d))))
             .reduce(_ unionByName _))
@@ -1769,31 +1727,24 @@ object AtomicPublish {
     * tables, so without this, a point lookup on an actively-merged
     * table scanned every segment until a fold landed. Falls back to a
     * plain parquet read when no segment carries a sidecar (identical
-    * plan to pre-round-16). */
+    * plan to pre-round-16). Zones, blooms and the schema come from the
+    * segment descriptors ([[segmentMetas]]). */
   private def prunedSegmentScan(spark: SparkSession, tablePath: String,
                                 segs: Seq[String],
                                 schemaHint: Option[org.apache.spark.sql.types.StructType] = None)
       : DataFrame = {
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val zones = segs.flatMap { d =>
-      val z = ZoneMaps.read(fs, root, d)
-      if (z.isEmpty) None else Some(d -> z)
-    }.toMap
-    val blooms = segs.flatMap { d =>
-      val b = BloomMaps.read(fs, root, d)
-      if (b.isEmpty) None else Some(d -> b)
-    }.toMap
-    val paths = segs.map(d => s"$tablePath/$d")
-    if (zones.isEmpty && blooms.isEmpty) segmentScanNoResolve(spark, paths)
+    val zones = zonesFor(spark, tablePath, segs)
+    val blooms = bloomsFor(spark, tablePath, segs)
+    if (zones.isEmpty && blooms.isEmpty) committedScan(spark, tablePath, segs)
     else {
+      val paths = segs.map(d => s"$tablePath/$d")
       // schema from the caller when it already resolved one (schema
       // uniformity is the fast-path precondition), else from ONE
       // segment's FOOTER — never a multi-dir re-resolution, and no
       // schema-inference job at all in the common footer-stamped case
-      val dataSchema = schemaHint.getOrElse(
-        segmentSchemaFromFooter(spark, paths.head)
-          .getOrElse(spark.read.parquet(paths.head).schema))
+      val dataSchema = schemaHint
+        .orElse(committedSchema(spark, tablePath, segs.head))
+        .getOrElse(spark.read.parquet(paths.head).schema)
       val idx = new graft.sources.GraftZonePruningFileIndex(spark,
         paths.map(new org.apache.hadoop.fs.Path(_)), Map.empty, None,
         zones, blooms)
@@ -1813,27 +1764,16 @@ object AtomicPublish {
     * the footer instead (KeyStatsProbe: 19 of mv_incremental's 55 jobs
     * were these). `asNullable` matches the file-source read path, which
     * relaxes every field. None when the sidecar metadata is absent
-    * (non-Spark parquet) — callers fall back to datasource resolution. */
+    * (non-Spark parquet) — callers fall back to datasource resolution.
+    *
+    * UNCACHED: for directories that are not (yet) committed segments —
+    * staged writes, the replay landing dir. Committed segments read
+    * their schema through [[segmentMetas]]. */
   private[graft] def segmentSchemaFromFooter(spark: SparkSession,
       segPath: String): Option[org.apache.spark.sql.types.StructType] =
-    try {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val sp = new org.apache.hadoop.fs.Path(segPath)
-      val fs = sp.getFileSystem(conf)
-      fs.listStatus(sp)
-        .find(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .flatMap { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(f.getPath, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
-              .get("org.apache.spark.sql.parquet.row.metadata"))
-            .map(json => relaxNullable(
-              org.apache.spark.sql.types.DataType.fromJson(json))
-              .asInstanceOf[org.apache.spark.sql.types.StructType])
-          finally r.close()
-        }
-    } catch { case _: Throwable => None }
+    try readFooter(fsOf(spark, segPath), new org.apache.hadoop.fs.Path(segPath))
+      .flatMap(_.schema)
+    catch { case scala.util.control.NonFatal(_) => None }
 
   /** File-source reads relax every field to nullable (SPARK-11360);
     * mirror of the private `asNullable` so footer schemas match what a
@@ -1857,66 +1797,352 @@ object AtomicPublish {
     * the same bridge the pruning index uses. Falls back to
     * `spark.read.parquet` when the footer carries no Spark schema.
     * Segments must be schema-uniform (callers establish that — the
-    * fast-path precondition in [[readOver]], or single-segment use). */
+    * fast-path precondition in [[readOver]], or single-segment use).
+    * The footer read is uncached — committed segments go through
+    * [[committedScan]]. */
   private[ops] def segmentScanNoResolve(spark: SparkSession,
                                         paths: Seq[String]): DataFrame =
-    segmentSchemaFromFooter(spark, paths.head) match {
-      case Some(schema) =>
+    scanWithSchema(spark, paths, segmentSchemaFromFooter(spark, paths.head))
+
+  /** [[segmentScanNoResolve]] over committed segments `dirs` of
+    * `tablePath`, schema from the first segment's cached descriptor. */
+  private[ops] def committedScan(spark: SparkSession, tablePath: String,
+                                 dirs: Seq[String]): DataFrame =
+    scanWithSchema(spark, dirs.map(d => s"$tablePath/$d"),
+      committedSchema(spark, tablePath, dirs.head))
+
+  /** A committed segment's footer schema; None (datasource resolution
+    * decides) when the footer carries none or cannot be read. */
+  private def committedSchema(spark: SparkSession, tablePath: String,
+                              dir: String): Option[org.apache.spark.sql.types.StructType] =
+    try segmentMetas(spark, tablePath, Seq(dir)).head.schema(fsOf(spark, tablePath))
+    catch { case scala.util.control.NonFatal(_) => None }
+
+  private def scanWithSchema(spark: SparkSession, paths: Seq[String],
+                             schema: Option[org.apache.spark.sql.types.StructType])
+      : DataFrame =
+    schema match {
+      case Some(s) =>
         val idx = new org.apache.spark.sql.execution.datasources.InMemoryFileIndex(
           spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
           paths.map(new org.apache.hadoop.fs.Path(_)), Map.empty, None)
         org.apache.spark.sql.graftbridge.GraftSqlBridge
-          .parquetDataFrame(spark, idx, schema)
+          .parquetDataFrame(spark, idx, s)
       case None => spark.read.parquet(paths: _*)
     }
 
-  /** Column-name list of a segment from ONE parquet footer (segments
-    * are single-write, schema-uniform). Milliseconds vs the ~0.1 s a
-    * full datasource resolution costs — the difference between a
-    * per-commit constant and a per-commit scan of the planner. */
-  private[graft] def segmentFieldNames(spark: SparkSession, segPath: String): Seq[String] = {
+  /** Column-name list of a STAGED segment from ONE parquet footer
+    * (uncached; committed segments read [[SegmentFooter.fieldNames]]
+    * through [[segmentMetas]]). Milliseconds vs the ~0.1 s a full
+    * datasource resolution costs. */
+  private[graft] def segmentFieldNames(spark: SparkSession, segPath: String): Seq[String] =
+    readFooter(fsOf(spark, segPath), new org.apache.hadoop.fs.Path(segPath))
+      .toSeq.flatMap(_.fieldNames)
+
+  /** TYPED schema signature — what the schema-uniformity fast paths
+    * compare (round 17, VERDICT r16 hardening): names alone would pin
+    * the FIRST segment's types onto a list whose later segments evolved
+    * a column's type (float-array day on a double-array base), where
+    * datasource inference would have merged or refused. Names, types
+    * and nullability count; column METADATA does not, except Spark's
+    * CHAR/VARCHAR marker, which changes how a string column reads. The
+    * metadata rule matters for streamed MERGE tables: `withWatermark`
+    * stamps `spark.watermarkDelayMs` on the event-time column of every
+    * foreachBatch frame, so each streamed segment's footer differs from
+    * the base in metadata alone — and comparing it sent every read of
+    * such a table down the slow per-segment path. */
+  private def schemaSignature(
+      st: org.apache.spark.sql.types.StructType): String =
+    stripMetadata(st).json
+
+  /** Spark's CHAR/VARCHAR column marker (`CharVarcharUtils`'s
+    * package-private `CHAR_VARCHAR_TYPE_STRING_METADATA_KEY`). */
+  private val CharVarcharKey = "__CHAR_VARCHAR_TYPE_STRING"
+
+  private def stripMetadata(dt: org.apache.spark.sql.types.DataType)
+      : org.apache.spark.sql.types.DataType = {
+    import org.apache.spark.sql.types._
+    dt match {
+      case s: StructType => StructType(s.fields.map { f =>
+        val kept =
+          if (!f.metadata.contains(CharVarcharKey)) Metadata.empty
+          else new MetadataBuilder().putString(CharVarcharKey,
+            f.metadata.getString(CharVarcharKey)).build()
+        f.copy(dataType = stripMetadata(f.dataType), metadata = kept)
+      })
+      case a: ArrayType => a.copy(elementType = stripMetadata(a.elementType))
+      case m: MapType => m.copy(keyType = stripMetadata(m.keyType),
+        valueType = stripMetadata(m.valueType))
+      case other => other
+    }
+  }
+
+  // -----------------------------------------------------------------
+  // Segment descriptors
+  // -----------------------------------------------------------------
+
+  /** What ONE parquet footer of a segment says: the Spark schema
+    * (nullability relaxed, [[relaxNullable]]) when Spark stamped one,
+    * the top-level parquet field names, and the typed signature the
+    * uniformity fast paths compare ([[schemaSignature]]; the raw parquet
+    * message type when no Spark schema is stamped). */
+  private[graft] final case class SegmentFooter(
+      schema: Option[org.apache.spark.sql.types.StructType],
+      fieldNames: Seq[String],
+      signature: String)
+
+  /** The first parquet file's footer of the directory at `segPath`;
+    * None when the directory holds no parquet file. One listing plus
+    * one footer open; IO failures propagate. */
+  private def readFooter(fs: org.apache.hadoop.fs.FileSystem,
+                         segPath: org.apache.hadoop.fs.Path): Option[SegmentFooter] = {
     import scala.jdk.CollectionConverters._
-    val conf = spark.sparkContext.hadoopConfiguration
-    val sp = new org.apache.hadoop.fs.Path(segPath)
-    val fs = sp.getFileSystem(conf)
-    fs.listStatus(sp)
+    fs.listStatus(segPath)
       .find(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .toSeq.flatMap { f =>
+      .map { f =>
         val in = org.apache.parquet.hadoop.util.HadoopInputFile
-          .fromPath(f.getPath, conf)
+          .fromStatus(f, fs.getConf)
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getFooter.getFileMetaData.getSchema.getFields.asScala
-          .map(_.getName).toSeq
-        finally r.close()
+        try {
+          val meta = r.getFooter.getFileMetaData
+          val schema = Option(meta.getKeyValueMetaData
+              .get("org.apache.spark.sql.parquet.row.metadata"))
+            .flatMap(json => scala.util.Try(relaxNullable(
+              org.apache.spark.sql.types.DataType.fromJson(json))
+              .asInstanceOf[org.apache.spark.sql.types.StructType]).toOption)
+          SegmentFooter(schema,
+            meta.getSchema.getFields.asScala.map(_.getName).toSeq,
+            schema.map(schemaSignature).getOrElse(meta.getSchema.toString))
+        } finally r.close()
       }
   }
 
-  /** TYPED schema signature of a segment from ONE parquet footer — what
-    * the schema-uniformity fast paths compare (round 17, VERDICT r16
-    * hardening): names alone would pin the FIRST segment's types onto a
-    * list whose later segments evolved a column's type (float-array day
-    * on a double-array base), where datasource inference would have
-    * merged or refused. The Spark-stamped StructType (nullability
-    * relaxed, matching the file-source read path) when present, else
-    * the raw parquet message type — both carry name AND type, so any
-    * type divergence breaks signature equality and the caller falls
-    * back to per-segment resolution / inference. */
-  private[graft] def segmentSchemaSignature(spark: SparkSession,
-                                            segPath: String): String =
-    segmentSchemaFromFooter(spark, segPath).map(_.json).getOrElse {
-      val conf = spark.sparkContext.hadoopConfiguration
-      val sp = new org.apache.hadoop.fs.Path(segPath)
-      val fs = sp.getFileSystem(conf)
-      fs.listStatus(sp)
-        .find(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-        .map { f =>
-          val in = org.apache.parquet.hadoop.util.HadoopInputFile
-            .fromPath(f.getPath, conf)
-          val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-          try r.getFooter.getFileMetaData.getSchema.toString
-          finally r.close()
-        }.getOrElse("")
+  /** A value computed at most once (racing first calls may both
+    * compute; they compute the same thing). A load that throws stores
+    * nothing, so a failed read is retried, never remembered. */
+  private final class Memo[A] {
+    @volatile private var value: Option[A] = None
+    def apply(load: => A): A = value.getOrElse {
+      val a = load
+      value = Some(a)
+      a
     }
+  }
+
+  /** The metadata of ONE committed segment: its footer, merge marker,
+    * txn marks, zone map and bloom map. Each is read from disk on first
+    * use and then held; `sidecars` names the sidecar prefixes the table
+    * root listing showed for this segment, so an absent sidecar costs
+    * no filesystem call at all. Obtain descriptors through
+    * [[segmentMetas]] only. */
+  private[graft] final class SegmentMeta private[AtomicPublish] (
+      val dir: String,
+      root: org.apache.hadoop.fs.Path,
+      sidecars: Set[String]) {
+    private val footer0 = new Memo[Option[SegmentFooter]]
+    private val marker0 = new Memo[Option[(String, Seq[String])]]
+    private val txn0 = new Memo[Map[String, Long]]
+    private val zones0 = new Memo[Map[String, ZoneMaps.ColZone]]
+    private val blooms0 = new Memo[Map[String, BloomMaps.ColBloom]]
+
+    private def sidecar(prefix: String) =
+      new org.apache.hadoop.fs.Path(root, prefix + dir)
+
+    /** A small text sidecar's content, None when the listing showed
+      * none. A file GC reaped after the listing throws through the memo
+      * (so nothing is kept) and reads as absent in [[orGone]]. */
+    private def text(fs: org.apache.hadoop.fs.FileSystem,
+                     prefix: String): Option[String] =
+      if (!sidecars(prefix)) None
+      else {
+        val in = fs.open(sidecar(prefix))
+        try Some(new String(in.readAllBytes(), "UTF-8")) finally in.close()
+      }
+
+    private def orGone[A](absent: A)(read: => A): A =
+      try read catch { case _: java.io.FileNotFoundException => absent }
+
+    def footer(fs: org.apache.hadoop.fs.FileSystem): Option[SegmentFooter] =
+      footer0(readFooter(fs, new org.apache.hadoop.fs.Path(root, dir)))
+
+    def schema(fs: org.apache.hadoop.fs.FileSystem)
+        : Option[org.apache.spark.sql.types.StructType] =
+      footer(fs).flatMap(_.schema)
+
+    /** The merge-on-read marker: (`upsert` | `delete`, merge keys). */
+    def marker(fs: org.apache.hadoop.fs.FileSystem): Option[(String, Seq[String])] =
+      orGone(Option.empty[(String, Seq[String])])(marker0(
+        text(fs, SegMetaPrefix).flatMap { t =>
+          t.split("\t", 2) match {
+            case Array(tag, keys) if tag == "upsert" || tag == "delete" =>
+              Some((tag, keys.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
+            case _ => None
+          }
+        }))
+
+    /** Exactly-once marks recorded on this segment: appId → version. */
+    def txnMarks(fs: org.apache.hadoop.fs.FileSystem): Map[String, Long] =
+      orGone(Map.empty[String, Long])(txn0(
+        text(fs, TxnPrefix).toSeq.flatMap(_.linesIterator.filter(_.nonEmpty))
+          .map { line =>
+            line.split("\t", 2) match {
+              case Array(a, v) => a -> v.trim.toLong
+              case _ => throw new IllegalStateException(
+                s"torn txn sidecar at ${sidecar(TxnPrefix)}: `$line`")
+            }
+          }.groupMapReduce(_._1)(_._2)(math.max)))
+
+    def zones(fs: org.apache.hadoop.fs.FileSystem): Map[String, ZoneMaps.ColZone] =
+      zones0(if (!sidecars(ZoneMaps.ZonePrefix)) Map.empty
+        else ZoneMaps.read(fs, root, dir))
+
+    def blooms(fs: org.apache.hadoop.fs.FileSystem): Map[String, BloomMaps.ColBloom] =
+      blooms0(if (!sidecars(BloomMaps.BloomPrefix)) Map.empty
+        else BloomMaps.read(fs, root, dir))
+  }
+
+  private val SidecarPrefixes = Seq(SegMetaPrefix, TxnPrefix,
+    ZoneMaps.ZonePrefix, BloomMaps.BloomPrefix)
+
+  /** The process-wide segment-descriptor cache: qualified segment path
+    * → [[SegmentMeta]], least recently used first out.
+    *
+    * WHAT IS CACHED: the per-segment metadata of segments a committed
+    * manifest or version-log entry names — footer schema and field
+    * names, merge marker, txn marks, zone map, bloom map.
+    *
+    * WHY IT NEVER GOES STALE: every one of those is written under the
+    * commit lock BEFORE the manifest swap that makes the segment live,
+    * and nothing rewrites a live segment's directory or sidecars. GC
+    * deletes a superseded directory together with its sidecars, and
+    * `data-<millis>-<counter>` names are unique within a table, so a
+    * path never comes back with different contents. A descriptor is
+    * stored only when the table root listing that built it showed the
+    * segment directory: GC deletes the directory before its sidecars,
+    * so a listed directory had its full sidecar set in that listing.
+    *
+    * WHAT NEVER IS: staged directories (`.seg-*`, `.pub-*`,
+    * `.compact-*`) and the replay landing dir, which read their footers
+    * through the uncached [[segmentSchemaFromFooter]] /
+    * [[segmentFieldNames]]; and every table-level file — `MANIFEST`, the
+    * version log, `_graft_cluster`, `_graft_mv`, the expectations
+    * sidecar — which a commit rewrites. [[segmentsAt]] keeps its
+    * per-directory existence check, so time travel to a GC'd version
+    * still fails loudly with a warm cache.
+    *
+    * BOUND: at most [[MaxEntries]] descriptors and [[MaxBytes]] of
+    * sidecar bytes (bloom filters dominate; each entry is weighed by
+    * its sidecars' on-disk length plus a footer allowance). */
+  private object SegmentMetaCache {
+    val MaxEntries = 4096
+    val MaxBytes: Long = 256L << 20
+    val FooterWeight = 4096L
+    private val map = new java.util.LinkedHashMap[String, (SegmentMeta, Long)](
+      256, 0.75f, true)
+    private var bytes = 0L
+
+    def get(key: String): Option[SegmentMeta] = synchronized {
+      Option(map.get(key)).map(_._1)
+    }
+
+    def put(key: String, meta: SegmentMeta, weight: Long): Unit = synchronized {
+      Option(map.put(key, (meta, weight))).foreach(old => bytes -= old._2)
+      bytes += weight
+      val eldest = map.entrySet.iterator
+      while ((map.size > MaxEntries || bytes > MaxBytes) && eldest.hasNext) {
+        bytes -= eldest.next().getValue._2
+        eldest.remove()
+      }
+    }
+  }
+
+  /** Descriptors of the committed segments `segs` of `tablePath`, in
+    * order, from [[SegmentMetaCache]]. A warm list costs no filesystem
+    * call; any miss costs ONE listing of the table root, which tells
+    * every missed descriptor which sidecars exist. Callers pass only
+    * segment names a committed manifest or version-log entry gave them
+    * (see the cache's invariant). */
+  private[graft] def segmentMetas(spark: SparkSession, tablePath: String,
+                                  segs: Seq[String]): Seq[SegmentMeta] = {
+    val root = new org.apache.hadoop.fs.Path(tablePath)
+    val fs = fsOf(spark, tablePath)
+    val qroot = fs.makeQualified(root)
+    val keys = segs.map(d => s"$qroot/$d")
+    val cached = keys.map(SegmentMetaCache.get)
+    if (cached.forall(_.isDefined)) return cached.map(_.get)
+    val listing =
+      try fs.listStatus(root)
+      catch { case _: java.io.FileNotFoundException => Array.empty[org.apache.hadoop.fs.FileStatus] }
+    val dirs = listing.filter(_.isDirectory).map(_.getPath.getName).toSet
+    val fileLen = listing.filterNot(_.isDirectory)
+      .map(f => f.getPath.getName -> f.getLen).toMap
+    segs.indices.map { i =>
+      cached(i).getOrElse {
+        val d = segs(i)
+        val present = SidecarPrefixes.filter(p => fileLen.contains(p + d))
+        val meta = new SegmentMeta(d, qroot, present.toSet)
+        if (dirs(d)) SegmentMetaCache.put(keys(i), meta,
+          SegmentMetaCache.FooterWeight + present.map(p => fileLen(p + d)).sum)
+        meta
+      }
+    }
+  }
+
+  /** Zone maps of the committed segments `segs` that carry one, by
+    * segment dir (through [[segmentMetas]]). */
+  private[graft] def zonesFor(spark: SparkSession, tablePath: String,
+                              segs: Seq[String]): Map[String, Map[String, ZoneMaps.ColZone]] = {
+    val fs = fsOf(spark, tablePath)
+    segmentMetas(spark, tablePath, segs).map(m => m.dir -> m.zones(fs))
+      .filter(_._2.nonEmpty).toMap
+  }
+
+  /** Bloom maps of the committed segments `segs` that carry one, by
+    * segment dir (through [[segmentMetas]]). */
+  private[graft] def bloomsFor(spark: SparkSession, tablePath: String,
+                               segs: Seq[String]): Map[String, Map[String, BloomMaps.ColBloom]] = {
+    val fs = fsOf(spark, tablePath)
+    segmentMetas(spark, tablePath, segs).map(m => m.dir -> m.blooms(fs))
+      .filter(_._2.nonEmpty).toMap
+  }
+
+  /** Do the committed segments `segs` of `tablePath` agree on the
+    * typed footer signature ([[schemaSignature]])? When they do not,
+    * readers fall back to per-segment resolution or inference — a slow
+    * path that is logged once per table, naming the first field that
+    * differs. */
+  private[graft] def segmentsUniform(spark: SparkSession, tablePath: String,
+                                     segs: Seq[String]): Boolean = {
+    val fs = fsOf(spark, tablePath)
+    val footers = segmentMetas(spark, tablePath, segs).map(_.footer(fs))
+    val sigs = footers.map(_.map(_.signature).getOrElse(""))
+    val uniform = sigs.forall(_ == sigs.head)
+    if (!uniform && fallbackLogged.add(fs.makeQualified(
+        new org.apache.hadoop.fs.Path(tablePath)).toString)) {
+      val other = footers(sigs.indexWhere(_ != sigs.head))
+      val field = (footers.head.flatMap(_.schema), other.flatMap(_.schema)) match {
+        case (Some(a), Some(b)) =>
+          val fa = stripMetadata(a).asInstanceOf[org.apache.spark.sql.types.StructType]
+          val fb = stripMetadata(b).asInstanceOf[org.apache.spark.sql.types.StructType]
+          (fa.fieldNames ++ fb.fieldNames.filterNot(fa.fieldNames.contains))
+            .find(n => fa.find(_.name == n) != fb.find(_.name == n))
+            .getOrElse("(field order)")
+        case _ => "(parquet schema)"
+      }
+      log.warn(s"segments of $tablePath differ in schema at field `$field`: " +
+        "reading them per segment, without zone/bloom pruning; fold the " +
+        "table (MergeInto.compactMerged) to restore the single-scan path")
+    }
+    uniform
+  }
+
+  private val fallbackLogged =
+    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.ops.AtomicPublish")
+
+  private def fsOf(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
+    new org.apache.hadoop.fs.Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   // -----------------------------------------------------------------
   // Time travel
@@ -2319,7 +2545,7 @@ object AtomicPublish {
     if (!newSegs.exists(side.contains)) {
       // pure appends — every row an insert; no snapshot scan needed
       return newWithVer.map { case (d, v) =>
-        align(segmentScanNoResolve(spark, Seq(s"$tablePath/$d")))
+        align(committedScan(spark, tablePath, Seq(d)))
           .withColumn(ctCol, lit("insert"))
           .withColumn(cvCol, lit(v))
       }.reduce(_ unionByName _)
@@ -2342,7 +2568,7 @@ object AtomicPublish {
         case Some(_)        => 1
         case None           => 0
       }
-      segmentScanNoResolve(spark, Seq(s"$tablePath/$d"))
+      committedScan(spark, tablePath, Seq(d))
         .select(kCols: _*).filter(!anyKeyNull).distinct()
         .withColumn(ordCol, lit(segOrdTo(d)))
         .withColumn(kindCol, lit(kind))
@@ -2363,7 +2589,7 @@ object AtomicPublish {
       .filter(col(ctCol).isNotNull)
       .select(kCols :+ col(ordCol) :+ col(kindCol) :+ col(ctCol): _*)
     val perSeg: Seq[DataFrame] = newWithVer.map { case (d, v) =>
-      val raw = segmentScanNoResolve(spark, Seq(s"$tablePath/$d"))
+      val raw = committedScan(spark, tablePath, Seq(d))
       side.get(d).map(_._1) match {
         case None => // plain append: all rows insert
           align(raw).withColumn(ctCol, lit("insert"))
@@ -2856,17 +3082,16 @@ object MergeInto {
       compactMerged(spark, tablePath)
     val keepRow = !coalesce(predicate, lit(false))
     val conjuncts = resolvedConjuncts(spark, current, predicate)
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val outcome = AtomicPublish.casRewriteMultiSelect(spark, tablePath,
       maxAttempts, minSegments = 1,
       select = obs => {
         // a merge that raced the pre-fold: reconcile-everything fallback
         if (AtomicPublish.mergeSidecarsFor(spark, tablePath, obs).nonEmpty)
           (obs, Nil)
-        else obs.partition { d =>
-          val zones = ZoneMaps.read(fs, root, d)
-          conjuncts.isEmpty || ZoneMaps.mightMatch(zones, conjuncts)
+        else {
+          val zones = AtomicPublish.zonesFor(spark, tablePath, obs)
+          obs.partition(d => conjuncts.isEmpty ||
+            ZoneMaps.mightMatch(zones.getOrElse(d, Map.empty), conjuncts))
         }
       },
       onCommit = (_, _, _) => (),
@@ -2875,8 +3100,8 @@ object MergeInto {
       if (AtomicPublish.mergeSidecarsFor(spark, tablePath, dirs).nonEmpty)
         AtomicPublish.readOver(spark, tablePath, dirs).filter(keepRow)
           .write.parquet(s"$staging/seg-00000")
-      else paths.zipWithIndex.foreach { case (p, i) =>
-        AtomicPublish.segmentScanNoResolve(spark, Seq(p)).filter(keepRow)
+      else dirs.zipWithIndex.foreach { case (d, i) =>
+        AtomicPublish.committedScan(spark, tablePath, Seq(d)).filter(keepRow)
           .write.parquet(f"$staging/seg-$i%05d")
       }
       aligned.write.parquet(f"$staging/seg-${paths.length}%05d")
@@ -3033,17 +3258,16 @@ object MergeInto {
       compactMerged(spark, tablePath)
     val current = AtomicPublish.read(spark, tablePath)
     val conjuncts = resolvedConjuncts(spark, current, predicate)
-    val root = new org.apache.hadoop.fs.Path(tablePath)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val outcome = AtomicPublish.casRewriteMultiSelect(spark, tablePath,
       maxAttempts, minSegments = 1,
       select = obs => {
         // a merge that raced the pre-fold: reconcile-everything fallback
         if (AtomicPublish.mergeSidecarsFor(spark, tablePath, obs).nonEmpty)
           (obs, Nil)
-        else obs.partition { d =>
-          val zones = ZoneMaps.read(fs, root, d)
-          conjuncts.isEmpty || ZoneMaps.mightMatch(zones, conjuncts)
+        else {
+          val zones = AtomicPublish.zonesFor(spark, tablePath, obs)
+          obs.partition(d => conjuncts.isEmpty ||
+            ZoneMaps.mightMatch(zones.getOrElse(d, Map.empty), conjuncts))
         }
       },
       onCommit = (_, _, _) => (),
@@ -3052,8 +3276,8 @@ object MergeInto {
       if (AtomicPublish.mergeSidecarsFor(spark, tablePath, dirs).nonEmpty)
         transform(AtomicPublish.readOver(spark, tablePath, dirs))
           .write.parquet(s"$staging/seg-00000")
-      else paths.zipWithIndex.foreach { case (p, i) =>
-        transform(AtomicPublish.segmentScanNoResolve(spark, Seq(p)))
+      else dirs.zipWithIndex.foreach { case (d, i) =>
+        transform(AtomicPublish.committedScan(spark, tablePath, Seq(d)))
           .write.parquet(f"$staging/seg-$i%05d")
       }
     }

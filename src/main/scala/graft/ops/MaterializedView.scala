@@ -278,16 +278,14 @@ object MaterializedView {
     val side = AtomicPublish.mergeSidecarsFor(spark, meta.sourceTable, added)
     val dataDirs = added.filterNot(d => side.get(d).exists(_._1 == "delete"))
     val mergeDirs = added.filter(side.contains)
-    def scanSegs(dirs: Seq[String]): DataFrame = {
-      // typed signature, not names (round 17): a same-name type-evolved
-      // segment must take the per-segment union below
-      val paths = dirs.map(d => s"${meta.sourceTable}/$d")
-      val fields = paths.map(p => AtomicPublish.segmentSchemaSignature(spark, p))
-      if (fields.forall(_ == fields.head))
-        AtomicPublish.segmentScanNoResolve(spark, paths)
-      else paths.map(p => AtomicPublish.segmentScanNoResolve(spark, Seq(p)))
+    // typed signature, not names (round 17): a same-name type-evolved
+    // segment must take the per-segment union below; footers come from
+    // the cached segment descriptors
+    def scanSegs(dirs: Seq[String]): DataFrame =
+      if (AtomicPublish.segmentsUniform(spark, meta.sourceTable, dirs))
+        AtomicPublish.committedScan(spark, meta.sourceTable, dirs)
+      else dirs.map(d => AtomicPublish.committedScan(spark, meta.sourceTable, Seq(d)))
         .reduce((a, b) => a.unionByName(b, allowMissingColumns = true))
-    }
     // group columns may live on a DIM side, so post-image rows join the
     // dims (broadcast) before projecting
     // no inner distinct: `affected` below distincts the union once —
@@ -300,8 +298,7 @@ object MaterializedView {
     val changedKeys =
       if (mergeDirs.isEmpty) None
       else Some(mergeDirs
-        .map(d => AtomicPublish.segmentScanNoResolve(
-          spark, Seq(s"${meta.sourceTable}/$d"))
+        .map(d => AtomicPublish.committedScan(spark, meta.sourceTable, Seq(d))
           .select(meta.keys.map(col): _*))
         .reduce(_ unionByName _).filter(keyNotNull).distinct())
     val inListMax0 = spark.conf.getOption(InListMaxKey)

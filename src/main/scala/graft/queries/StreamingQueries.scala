@@ -454,12 +454,9 @@ object StreamingQueries extends QueryGroup {
         graft.streaming.FileReplay.replay(s, events, "__ord", 3) { in =>
           in.writeStream.outputMode("append")
             .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
-              // batch-sized merge source: one staged file, not one per
-              // input partition (guide §6 — file sizing at the writer);
-              // size-conditional since round 17 so a large micro-batch
-              // never serializes its staging write through one task
-              MergeInto.upsertInto(s, fact,
-                graft.engine.Sizing.coalesceForStaging(batch.drop("__ord")),
+              // batch-sized merge source: upsertInto stages it as one
+              // file when small (Sizing.coalesceForStaging, guide §6)
+              MergeInto.upsertInto(s, fact, batch.drop("__ord"),
                 Seq("event_id"))
               val st = MaterializedView.refresh(s, mv)
               require(st.toVersion == st.fromVersion + 1,

@@ -100,86 +100,88 @@ class GraftTableSource extends ParquetDataSourceV2 {
     segs
   }
 
-  override def getPaths(map: CaseInsensitiveStringMap): Seq[String] = {
+  /** Every table root of `map` with its resolved segment list —
+    * resolved ONCE per table construction (manifest or version log,
+    * merge-on-read refusal), then shared by the paths, the footer
+    * schema and the zone/bloom maps. */
+  private def resolveAll(map: CaseInsensitiveStringMap): Seq[(String, Seq[String])] = {
     val roots = super.getPaths(map)
     require(roots.nonEmpty,
       "graft source needs a table root: .load(path) or OPTIONS (path '…')")
-    roots.flatMap(root => resolveSegments(root, map).map(d => s"$root/$d"))
+    roots.map(root => root -> resolveSegments(root, map))
   }
 
+  private def pathsOf(resolved: Seq[(String, Seq[String])]): Seq[String] =
+    resolved.flatMap { case (root, segs) => segs.map(d => s"$root/$d") }
+
+  override def getPaths(map: CaseInsensitiveStringMap): Seq[String] =
+    pathsOf(resolveAll(map))
+
   /** Zonemap sidecars for every resolved segment, keyed by segment dir
-    * name — loaded once at table construction (driver-side, one small
-    * JSON per segment), consulted per scan in
+    * name — from the cached segment descriptors
+    * ([[AtomicPublish.zonesFor]]), consulted per scan in
     * [[GraftZonePruningFileIndex]]. */
-  private def loadZones(map: CaseInsensitiveStringMap)
-      : Map[String, Map[String, ZoneMaps.ColZone]] = {
-    val roots = super.getPaths(map)
-    roots.flatMap { root =>
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(
-        sparkSession.sparkContext.hadoopConfiguration)
-      resolveSegments(root, map).flatMap { d =>
-        val z = ZoneMaps.read(fs, rootPath, d)
-        if (z.isEmpty) None else Some(d -> z)
-      }
+  private def loadZones(resolved: Seq[(String, Seq[String])])
+      : Map[String, Map[String, ZoneMaps.ColZone]] =
+    resolved.flatMap { case (root, segs) =>
+      AtomicPublish.zonesFor(sparkSession, root, segs)
     }.toMap
-  }
 
   /** Bloom sidecars (point-lookup pruning, [[graft.ops.BloomMaps]]) for
     * every resolved segment — same lifecycle as the zonemaps. */
-  private def loadBlooms(map: CaseInsensitiveStringMap)
-      : Map[String, Map[String, graft.ops.BloomMaps.ColBloom]] = {
-    val roots = super.getPaths(map)
-    roots.flatMap { root =>
-      val rootPath = new org.apache.hadoop.fs.Path(root)
-      val fs = rootPath.getFileSystem(
-        sparkSession.sparkContext.hadoopConfiguration)
-      resolveSegments(root, map).flatMap { d =>
-        val b = graft.ops.BloomMaps.read(fs, rootPath, d)
-        if (b.isEmpty) None else Some(d -> b)
-      }
+  private def loadBlooms(resolved: Seq[(String, Seq[String])])
+      : Map[String, Map[String, graft.ops.BloomMaps.ColBloom]] =
+    resolved.flatMap { case (root, segs) =>
+      AtomicPublish.bloomsFor(sparkSession, root, segs)
     }.toMap
-  }
 
   /** Schema from the first segment's parquet footer when ALL resolved
-    * segments agree on the TYPED footer signature (names + types,
-    * nullability relaxed like the file-source read path — round 17
-    * hardened from names-only, which would have pinned the first
-    * segment's types onto a same-name type-evolved list) — saves the
-    * one-task datasource inference job every table bind otherwise
-    * launches (Spark 4), and matches what inference would return for a
-    * schema-uniform table (graft segments are all Spark-written,
-    * footers carry the exact schema). Mixed-schema segment lists fall
-    * back to inference, preserving the previous behavior exactly. */
-  private def footerSchemaIfUniform(paths: Seq[String])
+    * segments agree on the TYPED footer signature
+    * (`AtomicPublish.schemaSignature`: names, types, nullability
+    * relaxed like the file-source read path; column metadata other
+    * than CHAR/VARCHAR ignored) — saves the one-task datasource
+    * inference job every table bind otherwise launches (Spark 4), and
+    * matches what inference would return for a schema-uniform table
+    * (graft segments are all Spark-written, footers carry the exact
+    * schema). Mixed-schema segment lists fall back to inference,
+    * preserving the previous behavior exactly; the fallback is logged
+    * once per table. */
+  private def footerSchemaIfUniform(resolved: Seq[(String, Seq[String])])
       : Option[org.apache.spark.sql.types.StructType] = {
-    if (paths.isEmpty) return None
-    val sigs = paths.map(p =>
-      graft.ops.AtomicPublish.segmentSchemaSignature(sparkSession, p))
-    if (sigs.nonEmpty && sigs.forall(_ == sigs.head))
-      graft.ops.AtomicPublish.segmentSchemaFromFooter(sparkSession, paths.head)
-    else None
+    val nonEmpty = resolved.filter(_._2.nonEmpty)
+    if (nonEmpty.isEmpty ||
+        !nonEmpty.forall { case (root, segs) =>
+          AtomicPublish.segmentsUniform(sparkSession, root, segs) }) return None
+    val heads = nonEmpty.map { case (root, segs) =>
+      val fs = new org.apache.hadoop.fs.Path(root)
+        .getFileSystem(sparkSession.sparkContext.hadoopConfiguration)
+      AtomicPublish.segmentMetas(sparkSession, root, segs.take(1)).head.footer(fs)
+    }
+    val sigs = heads.map(_.map(_.signature))
+    if (sigs.forall(_ == sigs.head)) heads.head.flatMap(_.schema) else None
   }
 
   override def getTable(options: CaseInsensitiveStringMap)
       : org.apache.spark.sql.connector.catalog.Table = {
-    val paths = getPaths(options)
+    val resolved = resolveAll(options)
+    val paths = pathsOf(resolved)
     val tableName = getTableName(options, paths)
     val optionsWithoutPaths = getOptionsWithoutPaths(options)
     new GraftReadOnlyTable(tableName, sparkSession, optionsWithoutPaths,
-      paths, footerSchemaIfUniform(paths), fallbackFileFormat,
-      loadZones(options), loadBlooms(options))
+      paths, footerSchemaIfUniform(resolved), fallbackFileFormat,
+      loadZones(resolved), loadBlooms(resolved))
   }
 
   override def getTable(options: CaseInsensitiveStringMap,
                         schema: org.apache.spark.sql.types.StructType)
       : org.apache.spark.sql.connector.catalog.Table = {
-    val paths = getPaths(options)
+    val resolved = resolveAll(options)
+    val paths = pathsOf(resolved)
     val tableName = getTableName(options, paths)
     val optionsWithoutPaths = getOptionsWithoutPaths(options)
     new GraftReadOnlyTable(tableName, sparkSession, optionsWithoutPaths,
-      paths, Some(schema), fallbackFileFormat, loadZones(options),
-      loadBlooms(options))
+      paths, Some(schema), fallbackFileFormat, loadZones(resolved),
+      loadBlooms(resolved))
   }
 
   /** The CATALOG's table constructor ([[GraftCatalog.loadTable]]): same
@@ -208,8 +210,8 @@ class GraftTableSource extends ParquetDataSourceV2 {
       : org.apache.spark.sql.connector.catalog.Table = {
     val timeTravel = options.containsKey("versionAsOf") ||
       options.containsKey("timestampAsOf")
-    val (paths, pendingMor) =
-      if (timeTravel) (getPaths(options), false)
+    val (resolved, pendingMor) =
+      if (timeTravel) (resolveAll(options), false)
       else {
         val segs = AtomicPublish.currentSegments(sparkSession, tableRoot)
         if (segs.isEmpty) throw new IllegalStateException(
@@ -220,28 +222,17 @@ class GraftTableSource extends ParquetDataSourceV2 {
         require(base.nonEmpty,
           s"graft catalog at $tableRoot: every segment is a pending merge " +
             "segment — fold first (MergeInto.compactMerged)")
-        (base.map(d => s"$tableRoot/$d"), pending.nonEmpty)
+        (Seq(tableRoot -> base), pending.nonEmpty)
       }
+    val paths = pathsOf(resolved)
     val tableName = getTableName(options, paths)
     val optionsWithoutPaths = getOptionsWithoutPaths(options)
     // zonemap/bloom sidecars for the resolved BASE segments only (the
     // pending ones are read through readOver's own pruning index)
-    val segDirs = paths.map(p => p.substring(p.lastIndexOf('/') + 1))
-    val rootPath = new org.apache.hadoop.fs.Path(tableRoot)
-    val fs = rootPath.getFileSystem(
-      sparkSession.sparkContext.hadoopConfiguration)
-    val zones = segDirs.flatMap { d =>
-      val z = ZoneMaps.read(fs, rootPath, d)
-      if (z.isEmpty) None else Some(d -> z)
-    }.toMap
-    val blooms = segDirs.flatMap { d =>
-      val b = graft.ops.BloomMaps.read(fs, rootPath, d)
-      if (b.isEmpty) None else Some(d -> b)
-    }.toMap
     val inner = new GraftReadOnlyTable(tableName, sparkSession,
       optionsWithoutPaths, paths,
-      userSpecifiedSchema = footerSchemaIfUniform(paths),
-      fallbackFileFormat, zones, blooms)
+      userSpecifiedSchema = footerSchemaIfUniform(resolved),
+      fallbackFileFormat, loadZones(resolved), loadBlooms(resolved))
     new GraftManagedTable(inner, sparkSession, tableRoot, mergeKeys, props,
       pendingMor)
   }

@@ -63,4 +63,30 @@ class EngineContractSpec extends SparkSpec {
     try assert(Sizing.coalesceForStaging(small).rdd.getNumPartitions === 8)
     finally spark.conf.unset(Sizing.StagingCoalesceBytesKey)
   }
+
+  test("staging coalesce: a local relation is sized without the optimizer; " +
+      "a malformed ceiling fails loudly, naming its key") {
+    import graft.engine.Sizing
+    val local = spark.createDataFrame(
+      java.util.Arrays.asList((1 to 50).map(i => org.apache.spark.sql.Row(i.toLong)): _*),
+      org.apache.spark.sql.types.StructType(Seq(org.apache.spark.sql.types
+        .StructField("id", org.apache.spark.sql.types.LongType))))
+      .repartition(4)
+    assert(Sizing.coalesceForStaging(local).rdd.getNumPartitions === 1)
+    val raw = spark.createDataFrame(
+      java.util.Arrays.asList((1 to 50).map(i => org.apache.spark.sql.Row(i.toLong)): _*),
+      local.schema)
+    assert(raw.queryExecution.logical
+      .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
+    assert(Sizing.coalesceForStaging(raw).rdd.getNumPartitions === 1)
+    spark.conf.set(Sizing.StagingCoalesceBytesKey, "1")
+    try assert(Sizing.coalesceForStaging(raw).rdd.getNumPartitions ===
+      raw.rdd.getNumPartitions)
+    finally spark.conf.unset(Sizing.StagingCoalesceBytesKey)
+    spark.conf.set(Sizing.StagingCoalesceBytesKey, "128MB")
+    try {
+      val e = intercept[IllegalArgumentException](Sizing.coalesceForStaging(raw))
+      assert(e.getMessage.contains(Sizing.StagingCoalesceBytesKey), e.getMessage)
+    } finally spark.conf.unset(Sizing.StagingCoalesceBytesKey)
+  }
 }

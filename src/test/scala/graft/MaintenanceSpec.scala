@@ -1485,4 +1485,187 @@ class MaintenanceSpec extends SparkSpec {
       .map(r => r.getLong(0) -> Option(r.getString(1))).toVector.sortBy(_._1)
     assert(replayed === now, s"through-fold replay diverged: $replayed vs $now")
   }
+
+  // -----------------------------------------------------------------
+  // Segment descriptors and the uniform-schema read path
+  // -----------------------------------------------------------------
+
+  /** File indexes of every parquet relation in `df`'s analyzed plan. */
+  private def fileIndexes(df: org.apache.spark.sql.DataFrame) =
+    df.queryExecution.analyzed.collect {
+      case l: org.apache.spark.sql.execution.datasources.LogicalRelation => l.relation
+    }.collect {
+      case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation => h.location
+    }
+
+  /** Does `df` scan `n` segments through ONE zone-pruning file index? */
+  private def onePrunedScanOver(df: org.apache.spark.sql.DataFrame, n: Int) =
+    fileIndexes(df).exists {
+      case g: graft.sources.GraftZonePruningFileIndex => g.rootPaths.size == n
+      case _ => false
+    }
+
+  private def kv(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+    df.select(col("k"), col("v")).collect()
+      .map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1).toSeq
+
+  test("merge-on-read: a withWatermark upsert batch keeps the single pruned " +
+      "multi-segment scan") {
+    import spark.implicits._
+    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
+    implicit val sqlCtx = spark.sqlContext
+    val table = graft.engine.Scratch.dir("spec_mor_watermark")
+    val t0 = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    AtomicPublish.publish(spark, table)(p =>
+      Seq((1L, "a", t0), (2L, "b", t0), (3L, "c", t0))
+        .toDF("k", "v", "ts").write.parquet(p))
+    val input = MemoryStream[(Long, String, java.sql.Timestamp)]
+    val q = input.toDF().toDF("k", "v", "ts")
+      .withWatermark("ts", "10 minutes")
+      .writeStream.foreachBatch {
+        (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+          MergeInto.upsertInto(spark, table, batch, Seq("k")); ()
+      }.start()
+    try {
+      input.addData((2L, "b2", t0), (9L, "new", t0))
+      q.processAllAvailable()
+    } finally q.stop()
+    val segs = AtomicPublish.currentSegments(spark, table)
+    assert(segs.size === 2, s"expected base + one upsert segment: $segs")
+    // the premise: the streamed segment's footer carries the watermark
+    // metadata on `ts`, the base segment's does not
+    val upTs = AtomicPublish.segmentSchemaFromFooter(spark,
+      s"$table/${segs(1)}").get("ts")
+    assert(upTs.metadata.contains("spark.watermarkDelayMs"), upTs.toString)
+    val read = AtomicPublish.read(spark, table)
+    assert(onePrunedScanOver(read, 2),
+      s"data segments must share one pruned scan:\n${read.queryExecution.analyzed}")
+    assert(kv(read) === Seq(1L -> "a", 2L -> "b2", 3L -> "c", 9L -> "new"))
+  }
+
+  test("merge-on-read: a VARCHAR segment beside a STRING segment still reads " +
+      "per segment") {
+    import spark.implicits._
+    val table = graft.engine.Scratch.dir("spec_mor_varchar")
+    AtomicPublish.publish(spark, table)(p =>
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(p))
+    val varchar = new org.apache.spark.sql.types.MetadataBuilder()
+      .putString("__CHAR_VARCHAR_TYPE_STRING", "varchar(8)").build()
+    MergeInto.upsertInto(spark, table, Seq((2L, "b2"), (5L, "e")).toDF("k", "v")
+      .select(col("k"), col("v").as("v", varchar)), Seq("k"))
+    val segs = AtomicPublish.currentSegments(spark, table)
+    val upV = AtomicPublish.segmentSchemaFromFooter(spark,
+      s"$table/${segs(1)}").get("v")
+    assert(upV.metadata.contains("__CHAR_VARCHAR_TYPE_STRING"), upV.toString)
+    val read = AtomicPublish.read(spark, table)
+    assert(!onePrunedScanOver(read, 2),
+      s"a CHAR/VARCHAR difference must keep the per-segment path:\n" +
+        read.queryExecution.analyzed)
+    assert(kv(read) === Seq(1L -> "a", 2L -> "b2", 5L -> "e"))
+  }
+
+  test("segment descriptors, warm cache: readAt of a GC'd version still throws") {
+    import spark.implicits._
+    val table = graft.engine.Scratch.dir("spec_desc_gc")
+    AtomicPublish.publish(spark, table)(p =>
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(p))
+    val v1 = AtomicPublish.currentVersion(spark, table).get
+    MergeInto.upsertInto(spark, table, Seq((2L, "b2")).toDF("k", "v"), Seq("k"))
+    // warm every descriptor of both versions
+    assert(kv(AtomicPublish.readAt(spark, table, v1)) === Seq(1L -> "a", 2L -> "b"))
+    assert(kv(AtomicPublish.read(spark, table)) === Seq(1L -> "a", 2L -> "b2"))
+    spark.conf.set(AtomicPublish.RetentionMsKey, "0")
+    try {
+      MergeInto.compactMerged(spark, table) match {
+        case AtomicPublish.CompactOutcome.Compacted(_) => ()
+        case other => fail(s"fold did not commit: $other")
+      }
+    } finally spark.conf.unset(AtomicPublish.RetentionMsKey)
+    val e = intercept[IllegalStateException](AtomicPublish.readAt(spark, table, v1))
+    assert(e.getMessage.contains("time travel"), e.getMessage)
+    assert(kv(AtomicPublish.read(spark, table)) === Seq(1L -> "a", 2L -> "b2"))
+  }
+
+  test("segment descriptors, warm cache: restoreTable then read returns the " +
+      "restored rows") {
+    import spark.implicits._
+    val table = graft.engine.Scratch.dir("spec_desc_restore")
+    AtomicPublish.publish(spark, table)(p =>
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(p))
+    val v1 = AtomicPublish.currentVersion(spark, table).get
+    MergeInto.upsertInto(spark, table,
+      Seq((2L, "b2"), (3L, "c")).toDF("k", "v"), Seq("k"))
+    MergeInto.deleteFrom(spark, table, Seq(1L).toDF("k"), Seq("k"))
+    val v3 = AtomicPublish.currentVersion(spark, table).get
+    assert(kv(AtomicPublish.read(spark, table)) === Seq(2L -> "b2", 3L -> "c"))
+    assert(kv(AtomicPublish.readAt(spark, table, v1)) === Seq(1L -> "a", 2L -> "b"))
+    AtomicPublish.restoreTable(spark, table, v1)
+    assert(kv(AtomicPublish.read(spark, table)) === Seq(1L -> "a", 2L -> "b"))
+    assert(AtomicPublish.upsertSidecarsFor(spark, table,
+      AtomicPublish.currentSegments(spark, table)).isEmpty)
+    // the superseded merge-on-read version still reconciles
+    assert(kv(AtomicPublish.readAt(spark, table, v3)) === Seq(2L -> "b2", 3L -> "c"))
+  }
+
+  test("segment descriptors, warm cache: schema-evolving upserts are admitted " +
+      "or refused exactly as before") {
+    import spark.implicits._
+    val table = graft.engine.Scratch.dir("spec_desc_evolve")
+    AtomicPublish.publish(spark, table)(p =>
+      Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(p))
+    MergeInto.upsertInto(spark, table, Seq((2L, "b2")).toDF("k", "v"), Seq("k"))
+    assert(kv(AtomicPublish.read(spark, table)) === Seq(1L -> "a", 2L -> "b2"))
+    val before = AtomicPublish.currentSegments(spark, table)
+    // a new column without the conf: refused, nothing committed
+    val eAdd = intercept[IllegalArgumentException] {
+      MergeInto.upsertInto(spark, table,
+        Seq((3L, "c", 7L)).toDF("k", "v", "extra"), Seq("k"))
+    }
+    assert(eAdd.getMessage.contains(MergeInto.AllowEvolutionKey), eAdd.getMessage)
+    assert(AtomicPublish.currentSegments(spark, table) === before)
+    // with the conf: admitted, older rows read NULL there
+    spark.conf.set(MergeInto.AllowEvolutionKey, "true")
+    try MergeInto.upsertInto(spark, table,
+      Seq((3L, "c", 7L)).toDF("k", "v", "extra"), Seq("k"))
+    finally spark.conf.unset(MergeInto.AllowEvolutionKey)
+    val rows = AtomicPublish.read(spark, table).select(col("k"), col("extra"))
+      .collect().map(r => r.getLong(0) -> Option(r.get(1))).sortBy(_._1).toSeq
+    assert(rows === Seq(1L -> None, 2L -> None, 3L -> Some(7L)), rows.toString)
+    // the evolved column is now part of the table: a batch without it
+    // is refused as a dropped column
+    val eDrop = intercept[IllegalArgumentException] {
+      MergeInto.upsertInto(spark, table, Seq((4L, "d")).toDF("k", "v"), Seq("k"))
+    }
+    assert(eDrop.getMessage.contains("MISSING existing column"), eDrop.getMessage)
+  }
+
+  test("segment descriptors: a second read of an unchanged N-segment table " +
+      "opens no parquet footer and no sidecar") {
+    import spark.implicits._
+    CountingFileSystem.install(spark)
+    val local = graft.engine.Scratch.dir("spec_desc_counting")
+    spark.conf.set(graft.ops.BloomMaps.BloomColsKey, "k")
+    try {
+      AtomicPublish.publish(spark, local)(p =>
+        (1L to 40L).map(k => (k, s"v$k")).toDF("k", "v").write.parquet(p))
+      MergeInto.upsertInto(spark, local,
+        Seq((2L, "x2"), (50L, "x50")).toDF("k", "v"), Seq("k"))
+      MergeInto.upsertInto(spark, local,
+        Seq((3L, "y3"), (60L, "y60")).toDF("k", "v"), Seq("k"))
+      MergeInto.deleteFrom(spark, local, Seq(4L).toDF("k"), Seq("k"))
+    } finally spark.conf.unset(graft.ops.BloomMaps.BloomColsKey)
+    val table = CountingFileSystem.uri(local)
+    assert(AtomicPublish.currentSegments(spark, table).size === 4)
+    val expected = kv(AtomicPublish.read(spark, local))
+    AtomicPublish.read(spark, table) // cold: the descriptors load
+    CountingFileSystem.reset()
+    val again = AtomicPublish.read(spark, table)
+    val footers = CountingFileSystem.opens(_.endsWith(".parquet"))
+    val sidecars = CountingFileSystem.opens(_.startsWith("_graft_"))
+    val manifests = CountingFileSystem.opens(_ == "MANIFEST")
+    assert(footers === 0L, "a warm read re-opened parquet footers")
+    assert(sidecars === 0L, "a warm read re-opened segment sidecars")
+    assert(manifests === 1L, "the manifest is read once per read")
+    assert(kv(again) === expected)
+  }
 }
