@@ -31,19 +31,8 @@ case class CosineSimilarity(left: Expression, right: Expression)
   override def dataType: DataType = DoubleType
   override def prettyName: String = "cosine_sim"
 
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    var i = 0
-    while (i < n) {
-      val xi = x.getDouble(i); val yi = y.getDouble(i)
-      dot += xi * yi; na += xi * xi; nb += yi * yi
-      i += 1
-    }
-    dot / (math.sqrt(na) * math.sqrt(nb))
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    CosineSimilarity.cosine(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -66,4 +55,22 @@ case class CosineSimilarity(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =
     copy(left = l, right = r)
+}
+
+object CosineSimilarity {
+
+  /** The interpreted loop — the arithmetic the generated code repeats
+    * operation for operation, so a caller outside an expression (the
+    * indexed IVF top-k task) gets bit-identical doubles. */
+  def cosine(x: ArrayData, y: ArrayData): Double = {
+    val n = math.min(x.numElements(), y.numElements())
+    var dot = 0.0; var na = 0.0; var nb = 0.0
+    var i = 0
+    while (i < n) {
+      val xi = x.getDouble(i); val yi = y.getDouble(i)
+      dot += xi * yi; na += xi * xi; nb += yi * yi
+      i += 1
+    }
+    dot / (math.sqrt(na) * math.sqrt(nb))
+  }
 }

@@ -419,21 +419,23 @@ object AnnSearch {
   /** Shared quantizer fit for [[ivfTopK]] and
     * [[DedupIndex.ensureIvfIndex]] — ONE implementation so the
     * indexed twin's ≡-pin can never drift from the recompute path.
-    * `base` must carry (id, fv). */
+    * `base` must carry (id, fv). Its jobs carry `ivf quantizer:` labels. */
   private[graft] def fitIvfModel(spark: SparkSession, base: DataFrame,
                                  nlist: Int, seed: Long)
       : org.apache.spark.ml.clustering.KMeansModel = {
     import org.apache.spark.ml.clustering.KMeans
     val cap = spark.conf.getOption(IvfFitSampleKey)
       .map(_.toLong).getOrElse(IvfFitSampleDefault)
-    val n = base.count()
+    val n = graft.engine.JobLabel(spark, "ivf quantizer: sample count")(base.count())
     val m = math.max(1L, math.round(n / math.max(1.0, cap.toDouble)))
     val sample =
       if (m <= 1L) base
       else base.filter(pmod(xxhash64(col("id")), lit(m)) === 0)
-    new KMeans().setK(nlist).setSeed(seed).setMaxIter(10)
-      .setFeaturesCol("fv").setPredictionCol("cell")
-      .fit(sample.select(col("fv")))
+    graft.engine.JobLabel(spark, "ivf quantizer: k-means fit") {
+      new KMeans().setK(nlist).setSeed(seed).setMaxIter(10)
+        .setFeaturesCol("fv").setPredictionCol("cell")
+        .fit(sample.select(col("fv")))
+    }
   }
 
   /** The memoized IVF quantizer shared by [[ivfTopK]] and the IVF×PQ
@@ -500,10 +502,11 @@ object AnnSearch {
   /** (q_id, qe, cell) — each query row exploded to its `nprobe`
     * nearest cells by squared euclidean against a LITERAL centroid
     * matrix (evaluated per query row only — queries are the small
-    * side). Shared by [[ivfTopK]] and the persisted-index read path
-    * ([[DedupIndex.ivfTopKIndexed]]) so both assign queries with the
-    * exact same expressions — bit-identical probes from the same
-    * centroids. */
+    * side). Shared by [[ivfTopK]] and the persisted-index writers
+    * ([[DedupIndex.ensureIvfIndex]], [[DedupIndex.appendToIvfIndex]]);
+    * the persisted-index read path ([[DedupIndex.ivfTopKIndexed]])
+    * repeats this arithmetic on the driver — bit-identical probes from
+    * the same centroids. */
   private[graft] def probeCellsForQueries(q: DataFrame,
                                           centroids: Array[Array[Double]],
                                           nprobe: Int): DataFrame = {

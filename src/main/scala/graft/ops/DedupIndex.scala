@@ -1,7 +1,15 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
+import graft.engine.JobLabel
+import graft.functions.CosineSimilarity
 
 /** PERSISTED incremental-dedup indexes — the piece that turns
   * "incremental" from a plan property into an operating cost.
@@ -106,21 +114,39 @@ object DedupIndex {
   }
 
   private def readMeta(spark: SparkSession, tablePath: String): Option[Map[String, String]] =
-    AtomicPublish.currentDataDir(spark, tablePath).flatMap { d =>
-      val p = new org.apache.hadoop.fs.Path(s"$tablePath/$d", MetaFile)
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      if (!fs.exists(p)) None
-      else {
-        val in = fs.open(p)
-        try {
-          val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
-          in.readFully(bytes)
-          Some(new String(bytes, "UTF-8").linesIterator
-            .filter(_.contains("=")).map { l =>
-              val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1)
-            }.toMap)
-        } finally in.close()
-      }
+    AtomicPublish.currentDataDir(spark, tablePath)
+      .flatMap(d => readMetaAt(spark, s"$tablePath/$d"))
+
+  private def readMetaAt(spark: SparkSession,
+                         dataPath: String): Option[Map[String, String]] = {
+    val p = new org.apache.hadoop.fs.Path(dataPath, MetaFile)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try {
+        val bytes = new Array[Byte](fs.getFileStatus(p).getLen.toInt)
+        in.readFully(bytes)
+        Some(new String(bytes, "UTF-8").linesIterator
+          .filter(_.contains("=")).map { l =>
+            val i = l.indexOf('='); l.substring(0, i) -> l.substring(i + 1)
+          }.toMap)
+      } finally in.close()
+    }
+  }
+
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.ops.DedupIndex")
+
+  /** The published model `load` reads when a grown or compacted table
+    * rebuilds under its unchanged identity; None, after one warning
+    * naming the table and the cause, when it cannot be read — the
+    * caller then refits. Fatal errors propagate. */
+  private def publishedModel[A](tablePath: String)(load: => A): Option[A] =
+    try Some(load)
+    catch {
+      case NonFatal(e) =>
+        log.warn(s"index at $tablePath: published model unreadable, refitting", e)
+        None
     }
 
   /** Freshness for `ensure*` reuse: every identity parameter matches,
@@ -498,13 +524,10 @@ object DedupIndex {
       val priorMatches = readMeta(spark, tablePath).exists(m =>
         identity.forall { case (kk, v) => m.get(kk).contains(v) })
       val model =
-        if (priorMatches)
-          try loadModel(spark, tablePath)
-          catch { case _: Throwable =>
-            SemDedup.fit(spark, corpus, idCol, eCol, k, dim, corpusSize,
-              cacheKey = Some(s"dedupindex:$tablePath:$spec:$stamp")) }
-        else SemDedup.fit(spark, corpus, idCol, eCol, k, dim, corpusSize,
-          cacheKey = Some(s"dedupindex:$tablePath:$spec:$stamp"))
+        (if (priorMatches) publishedModel(tablePath)(loadModel(spark, tablePath))
+        else None).getOrElse(
+          SemDedup.fit(spark, corpus, idCol, eCol, k, dim, corpusSize,
+            cacheKey = Some(s"dedupindex:$tablePath:$spec:$stamp")))
       val p = spark.sessionState.conf.numShufflePartitions
       val assigned = corpus
         .select(col(idCol).as("id"), col(eCol).cast("array<double>").as("e"))
@@ -558,7 +581,9 @@ object DedupIndex {
     * `assign/` — the [[ensureSemanticIndex]] pattern for the SEARCH
     * family. `sim_search_ivf` memoizes its fit per JVM only; a fresh
     * session refit Lloyd and re-assigned the whole corpus per query
-    * session. Published once, a query session pays neither. */
+    * session. Published once, a query session pays neither. Every
+    * Spark job of a build carries an `ivf index:` / `ivf quantizer:`
+    * [[JobLabel]] naming its phase. */
   def ensureIvfIndex(spark: SparkSession, tablePath: String,
                      corpus: DataFrame, sourcePath: String, spec: String,
                      idCol: String, eCol: String,
@@ -594,8 +619,7 @@ object DedupIndex {
         identity.forall { case (kk, v) => m.get(kk).contains(v) })
       val centroids: Array[Array[Double]] =
         (if (priorMatches)
-          try Some(loadIvfCentroids(spark, tablePath))
-          catch { case _: Throwable => None }
+          publishedModel(tablePath)(currentIvfModel(spark, tablePath).centroids)
         else None).getOrElse(
           AnnSearch.ivfModelForStamped(spark, base, nlist, seed,
             prefix = s"ivfidx:$sourcePath:$spec", stamp = stamp)
@@ -611,70 +635,246 @@ object DedupIndex {
       val cents = centroids.zipWithIndex
         .map { case (c, i) => (i, c.toSeq) }.toSeq
         .toDF("cell", "centroid")
-      AtomicPublish.publish(spark, tablePath) { dataPath =>
-        assigned.write.parquet(s"$dataPath/assign")
-        cents.coalesce(1).write.parquet(s"$dataPath/model")
-        writeMeta(spark, dataPath, identity)
+      JobLabel(spark, "ivf index: publish") {
+        AtomicPublish.publish(spark, tablePath) { dataPath =>
+          JobLabel(spark, "ivf index: assign") {
+            assigned.write.parquet(s"$dataPath/assign")
+          }
+          cents.coalesce(1).write.parquet(s"$dataPath/model")
+          writeMeta(spark, dataPath, identity)
+        }
       }
     }
     dataPathOf(spark, tablePath)
   }
 
-  /** The published IVF coarse centroids, cell-ordered, from the base
-    * segment's `model/` parquet — bit-exact (doubles round-trip
-    * parquet exactly), shared by the query, append and rebuild paths.
-    * Sorted on the DRIVER: the model is nlist rows, and a distributed
-    * orderBy of it costs a sample + shuffle round per load (round 17). */
-  private def loadIvfCentroids(spark: SparkSession,
-                               tablePath: String): Array[Array[Double]] =
-    scanFooter(spark, Seq(s"${dataPathOf(spark, tablePath)}/model"))
-      .collect().sortBy(_.getInt(0))
-      .map(r => r.getSeq[Double](1).toArray)
+  /** A published IVF index's identity meta and its centroids, in cell
+    * order. */
+  private final case class IvfModel(meta: Map[String, String],
+                                    centroids: Array[Array[Double]])
+
+  /** [[IvfModel]]s by qualified BASE data dir, each read from disk once
+    * per JVM. A published data dir never changes after its manifest
+    * swap, and a republish or compaction lands under a new dir name —
+    * the invariant [[AtomicPublish.segmentMetas]] relies on — so an
+    * entry never goes stale; an append adds segments but keeps the base
+    * dir and its model. LRU, at most [[IvfModelEntries]] indexes. */
+  private val IvfModelEntries = 16
+  private val ivfModels =
+    new java.util.LinkedHashMap[String, IvfModel](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, IvfModel]): Boolean =
+        size > IvfModelEntries
+    }
+
+  /** The [[IvfModel]] of base data dir `baseDir` of `tablePath`. A miss
+    * reads the meta file and collects the nlist-row `model/` (sorted on
+    * the driver: a distributed orderBy of it costs a sample + shuffle
+    * round, round 17). */
+  private def ivfModel(spark: SparkSession, tablePath: String,
+                       baseDir: String): IvfModel = {
+    val dataPath = s"$tablePath/$baseDir"
+    val hp = new org.apache.hadoop.fs.Path(dataPath)
+    val key = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(hp).toString
+    ivfModels.synchronized(Option(ivfModels.get(key))).getOrElse {
+      val meta = readMetaAt(spark, dataPath).getOrElse(
+        throw new IllegalStateException(s"no published ivf index at $tablePath"))
+      require(meta.get("kind").contains("ivf"),
+        s"index at $tablePath is kind=${meta.get("kind")}, expected ivf")
+      val centroids = JobLabel(spark, "ivf index: load centroids") {
+          scanFooter(spark, Seq(s"$dataPath/model")).collect()
+        }.sortBy(_.getInt(0)).map(r => r.getSeq[Double](1).toArray)
+      val m = IvfModel(meta, centroids)
+      ivfModels.synchronized(ivfModels.put(key, m))
+      m
+    }
+  }
+
+  private def currentIvfModel(spark: SparkSession, tablePath: String): IvfModel =
+    ivfModel(spark, tablePath, AtomicPublish.currentDataDir(spark, tablePath)
+      .getOrElse(throw new IllegalStateException(s"no published ivf index at $tablePath")))
+
+  /** One scored candidate: query `q` (an index into the batch), index
+    * row `id`, its cosine `sim` (meaningless when `simNull`). */
+  private final case class Hit(q: Int, id: Long, sim: Double, simNull: Boolean)
+
+  /** Best first: `sim` descending in Spark's SQL ordering (NaN above
+    * every number, -0.0 = 0.0, null last), then `id` ascending — the
+    * order of the rank window `(sim DESC, id)` this path replaced. */
+  private val hitOrder: Ordering[Hit] = (a, b) =>
+    if (a.simNull != b.simNull) { if (a.simNull) 1 else -1 }
+    else {
+      val bySim = if (a.simNull) 0 else SQLOrderingUtil.compareDoubles(b.sim, a.sim)
+      if (bySim != 0) bySim else java.lang.Long.compare(a.id, b.id)
+    }
+
+  /** What each top-k task needs of the query batch: the ids, the
+    * vectors (null for a null vector), and per cell the batch indices of
+    * the queries that probe it. */
+  private final case class ProbedBatch(qIds: Array[Long],
+                                       qVecs: Array[Array[Double]],
+                                       byCell: Array[Array[Int]])
+
+  /** The `nprobe` nearest cells of one query vector, computed on the
+    * driver with the arithmetic of [[AnnSearch.probeCellsForQueries]]:
+    * squared differences summed in index order from 0.0, cells ascending
+    * by that distance in Spark's SQL ordering, ties to the lower cell. A
+    * null vector, a null element or a length other than the centroids'
+    * makes every distance null there, which leaves the cells in index
+    * order. */
+  private def nearestCells(qe: scala.collection.Seq[Any],
+                           centroids: Array[Array[Double]], nprobe: Int): Array[Int] = {
+    val cells = centroids.indices.toArray
+    if (qe == null || qe.contains(null) || centroids.exists(_.length != qe.length))
+      cells.take(nprobe)
+    else {
+      val dist = centroids.map { c =>
+        var s = 0.0
+        var i = 0
+        while (i < c.length) {
+          val d = qe(i).asInstanceOf[Double] - c(i)
+          s = s + d * d
+          i += 1
+        }
+        s
+      }
+      // sortWith is stable: equal distances keep index order
+      cells.sortWith((a, b) => SQLOrderingUtil.compareDoubles(dist(a), dist(b)) < 0)
+        .take(nprobe)
+    }
+  }
+
+  /** One task's share of the top-k job: every (row, probing query) pair
+    * with `id ≠ q_id` scored by [[CosineSimilarity.cosine]] with the
+    * expression's argument order `(qe, e)`, and each query's best `k`
+    * kept in a bounded heap whose head is its worst survivor. A null id
+    * never matches (`id ≠ q_id` is null); a null vector scores null. */
+  private def topKPerQuery(rows: Iterator[InternalRow], batch: ProbedBatch,
+                           idType: DataType, k: Int): Iterator[Hit] = {
+    val qa = batch.qVecs.map(v =>
+      if (v == null) null else UnsafeArrayData.fromPrimitiveArray(v))
+    val heaps = new Array[java.util.PriorityQueue[Hit]](qa.length)
+    rows.foreach { r =>
+      val rawId = r.get(0, idType)
+      if (rawId != null) {
+        val id = rawId.asInstanceOf[Number].longValue
+        val e = if (r.isNullAt(2)) null else r.getArray(2)
+        batch.byCell(r.getInt(1)).foreach { j =>
+          if (id != batch.qIds(j)) {
+            val hit =
+              if (e == null || qa(j) == null) Hit(j, id, 0.0, simNull = true)
+              else Hit(j, id, CosineSimilarity.cosine(qa(j), e), simNull = false)
+            if (heaps(j) == null) heaps(j) = new java.util.PriorityQueue(hitOrder.reverse)
+            val heap = heaps(j)
+            if (heap.size < k) heap.add(hit)
+            else if (hitOrder.lt(hit, heap.peek)) { heap.poll(); heap.add(hit) }
+          }
+        }
+      }
+    }
+    heaps.iterator.filter(_ != null).flatMap(_.iterator.asScala)
+  }
+
+  private val IntegralIds: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType)
 
   /** IVF top-k against a published index — NO corpus argument, NO
-    * refit, NO corpus assignment pass: centroids load from the
-    * manifest version, queries probe their `nprobe` nearest cells with
-    * the SAME expressions as [[AnnSearch.ivfTopK]] (shared helper, so
-    * probes are bit-identical), and the index read is FILTERED to the
-    * queries' probe cells over the cell-sorted layout — scan bytes
-    * bounded by the query set's footprint. One broadcast cell join +
-    * fused codegen cosine + per-query window rank; output identical to
-    * `ivfTopK` under the same centroids (DedupIndexSpec pins it). */
+    * refit, NO corpus assignment pass. A query batch costs ONE Spark job:
+    *
+    *  1. the index's meta and centroids come from a per-JVM memo keyed
+    *     by the qualified base data dir ([[ivfModel]]; a published dir
+    *     is immutable, so the memo never serves a stale model);
+    *  2. the batch is collected to the driver, capped at
+    *     [[MaxBatchCellsKey]] probe rows (queries × probes per query) —
+    *     over it, a loud refusal — and each query's `nprobe` cells are
+    *     computed there with exactly the arithmetic of
+    *     [[AnnSearch.probeCellsForQueries]] ([[nearestCells]]);
+    *  3. the job scans `assign/` of every live segment filtered to the
+    *     probed cells (row-group pruning on the cell-sorted layout bounds
+    *     the bytes by the batch's footprint), and each task keeps a
+    *     bounded top-k per query of `id ≠ q_id` rows, scored with the
+    *     cosine kernel's own loop so the doubles are bit-identical;
+    *  4. the driver merges at most tasks × |q| × k survivors into the
+    *     final ranking and returns it as a local DataFrame.
+    *
+    * Output `(q_id, rank, neighbor_id, sim)` — names, types and
+    * nullability — equals [[AnnSearch.ivfTopK]]'s rank-window result
+    * under the same centroids, `sim` bit for bit (DedupIndexSpec pins
+    * it): `sim` descending in SQL order (NaN first, null last), ties on
+    * `id` ascending; a query id appearing twice ranks the union of its
+    * rows, and a null query id matches nothing. Ids must be integral.
+    * Nothing is cached. */
   def ivfTopKIndexed(spark: SparkSession, tablePath: String,
                      queries: DataFrame, idCol: String, eCol: String,
                      k: Int = 10, nprobe: Int = 4): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val meta = readMeta(spark, tablePath).getOrElse(
-      throw new IllegalStateException(s"no published ivf index at $tablePath"))
-    require(meta.get("kind").contains("ivf"),
-      s"index at $tablePath is kind=${meta.get("kind")}, expected ivf")
-    val centroids = loadIvfCentroids(spark, tablePath)
-    // Caller-owned cache (see dailyMinHashCandidates); error paths —
-    // including the cell-cap refusal — release the probe set here.
-    val q = AnnSearch.probeCellsForQueries(
-        queries.select(col(idCol).as("q_id"), col(eCol).as("qe")),
-        centroids, nprobe)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val maxCells = spark.conf.getOption(MaxBatchCellsKey)
-        .map(_.toInt).getOrElse(MaxBatchCellsDefault)
-      val rawCells = q.select(col("cell")).limit(maxCells + 1).collect()
-        .map(_.getInt(0))
-      require(rawCells.length <= maxCells,
-        s"query set probes > $maxCells cells ($MaxBatchCellsKey): " +
-          "this is not a query batch — raise the cap or search in shards")
-      val idx = scanFooter(spark,
-          segmentPaths(spark, tablePath).map(p => s"$p/assign"))
-        .filter(col("cell").isInCollection(rawCells.distinct.toSeq))
-      val cand = idx.join(broadcast(q), Seq("cell"))
-        .filter(col("id") =!= col("q_id"))
-        .withColumn("sim", graft.engine.GraftFunctions.cosineSim(
-          spark, col("qe"), col("e")))
-      val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("id"))
-      cand.withColumn("rank", row_number().over(w))
-        .filter(col("rank") <= k)
-        .select(col("q_id"), col("rank"), col("id").as("neighbor_id"), col("sim"))
-    } catch { case t: Throwable => q.unpersist(); throw t }
+    require(nprobe >= 0, s"ivfTopKIndexed: nprobe must be >= 0, got $nprobe")
+    val segs = AtomicPublish.currentSegments(spark, tablePath)
+    if (segs.isEmpty)
+      throw new IllegalStateException(s"no published ivf index at $tablePath")
+    val centroids = ivfModel(spark, tablePath, segs.head).centroids
+    val idx = scanFooter(spark, segs.map(d => s"$tablePath/$d/assign"))
+    val q = queries.select(col(idCol).as("q_id"), col(eCol).as("qe"))
+    val (qIdF, qeF) = (q.schema("q_id"), q.schema("qe"))
+    val (idF, eF) = (idx.schema("id"), idx.schema("e"))
+    require(IntegralIds(qIdF.dataType) && IntegralIds(idF.dataType),
+      s"ivfTopKIndexed: ids must be integral, got query ${qIdF.dataType}, " +
+        s"index ${idF.dataType}")
+    val schema = StructType(Seq(
+      StructField("q_id", qIdF.dataType, qIdF.nullable),
+      StructField("rank", IntegerType, nullable = false),
+      StructField("neighbor_id", idF.dataType, idF.nullable),
+      StructField("sim", DoubleType, qeF.nullable || eF.nullable)))
+    def result(rows: Seq[Row]): DataFrame = spark.createDataFrame(rows.asJava, schema)
+    val perQuery = math.min(nprobe, centroids.length)
+    if (perQuery == 0) return result(Nil)
+    val maxCells = spark.conf.getOption(MaxBatchCellsKey)
+      .map(_.toInt).getOrElse(MaxBatchCellsDefault)
+    val maxQueries = math.max(0, maxCells / perQuery)
+    val rows = JobLabel(spark, "ivf index: collect queries") {
+      q.select(col("q_id"), col("qe").cast("array<double>"))
+        .limit(maxQueries + 1).collect()
+    }
+    require(rows.length.toLong * perQuery <= maxCells,
+      s"query set probes > $maxCells cells ($MaxBatchCellsKey): " +
+        "this is not a query batch — raise the cap or search in shards")
+    val live = rows.filterNot(_.isNullAt(0))
+    if (live.isEmpty || k <= 0) return result(Nil)
+    val qIds = live.map(_.get(0).asInstanceOf[Number].longValue)
+    val byCell = Array.fill(centroids.length)(Array.newBuilder[Int])
+    live.zipWithIndex.foreach { case (r, j) =>
+      nearestCells(r.getSeq[Any](1), centroids, perQuery).foreach(byCell(_) += j)
+    }
+    // a null element reads as 0.0 in the cosine, as the kernel reads it
+    val batch = ProbedBatch(qIds,
+      live.map(r => if (r.isNullAt(1)) null else r.getSeq[Any](1)
+        .map(x => if (x == null) 0.0 else x.asInstanceOf[Double]).toArray),
+      byCell.map(_.result()))
+    val cells = batch.byCell.indices.filter(batch.byCell(_).nonEmpty)
+    val idType = idF.dataType
+    val bc = spark.sparkContext.broadcast(batch)
+    val hits = try JobLabel(spark, "ivf index: top-k") {
+        idx.filter(col("cell").isInCollection(cells))
+          .select(col("id"), col("cell"), col("e"))
+          .queryExecution.toRdd
+          .mapPartitions(it => topKPerQuery(it, bc.value, idType, k))
+          .collect()
+      } finally bc.destroy()
+    val toIdType: Long => Any = idType match {
+      case ByteType => _.toByte
+      case ShortType => _.toShort
+      case IntegerType => _.toInt
+      case _ => identity
+    }
+    // grouped by id value: a repeated query id ranks the union of its
+    // queries' rows, as the window partitioned by q_id did
+    val merged = hits.groupBy(h => qIds(h.q)).toSeq.sortBy(_._1).flatMap {
+      case (_, hs) =>
+        val qId = live(hs.head.q).get(0)
+        hs.sorted(hitOrder).take(k).zipWithIndex.map { case (h, i) =>
+          Row(qId, i + 1, toIdType(h.id), if (h.simNull) null else h.sim)
+        }
+    }
+    result(merged)
   }
 
   /** APPEND a day's vectors to a published semantic index — the write
@@ -710,7 +910,7 @@ object DedupIndex {
     * for the dedup kinds only; IVF was rebuild-only, forcing a full
     * republish per day of corpus growth). New vectors are assigned
     * their single nearest centroid UNDER THE EXISTING published model
-    * with the SAME expressions queries probe with
+    * with the probe arithmetic queries use
     * ([[AnnSearch.probeCellsForQueries]], nprobe=1 — squared-euclidean
     * argmin, ties to the lowest cell id, matching MLlib's assignment),
     * cell-sorted, and land as a new manifest segment: batch-sized IO
@@ -719,12 +919,9 @@ object DedupIndex {
     * a rebuild exactly as for the dedup kinds. */
   def appendToIvfIndex(spark: SparkSession, tablePath: String,
                        newVecs: DataFrame): String = {
-    val meta = readMeta(spark, tablePath).getOrElse(
-      throw new IllegalStateException(s"no published ivf index at $tablePath"))
-    require(meta.get("kind").contains("ivf"),
-      s"index at $tablePath is kind=${meta.get("kind")}, expected ivf")
-    val centroids = loadIvfCentroids(spark, tablePath)
-    val idCol = meta("idCol"); val eCol = meta("eCol")
+    val model = currentIvfModel(spark, tablePath)
+    val centroids = model.centroids
+    val idCol = model.meta("idCol"); val eCol = model.meta("eCol")
     val p = spark.sessionState.conf.numShufflePartitions
     // same array<double> storage pin as ensureIvfIndex: an appended
     // segment must carry the base's parquet schema exactly
@@ -772,9 +969,7 @@ object DedupIndex {
       val priorMatches = readMeta(spark, tablePath).exists(mm =>
         identity.forall { case (kk, v) => mm.get(kk).contains(v) })
       val model =
-        (if (priorMatches)
-          try Some(loadPqModel(spark, tablePath))
-          catch { case _: Throwable => None }
+        (if (priorMatches) publishedModel(tablePath)(loadPqModel(spark, tablePath))
         else None).getOrElse(
           PqSearch.fitStamped(spark, base, "id", "e", m, k, seed,
             prefix = s"pqidx:$sourcePath:$spec", stamp = stamp))

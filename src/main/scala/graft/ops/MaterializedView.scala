@@ -158,9 +158,11 @@ object MaterializedView {
 
   /** [[refuseNullGroups]] over a JUST-WRITTEN staged directory, from
     * the parquet footers' per-column null counts — zero Spark jobs.
-    * Spark-written files always carry statistics; a file without them
-    * (never the case for our own staging writes) falls back to the
-    * loud count. */
+    * Footer counts are per LEAF, so they answer only for group columns
+    * that are top-level primitive leaves: a struct key's leaf counts a
+    * null FIELD of a non-null struct, which is no null group. Any nested
+    * group column, or a file without statistics (never the case for our
+    * own staging writes), falls back to the loud count. */
   private def refuseNullGroupsStaged(spark: SparkSession, stagedPath: String,
                                      groupCols: Seq[String],
                                      where: String): Unit = {
@@ -170,7 +172,7 @@ object MaterializedView {
     val fs = sp.getFileSystem(conf)
     val wanted = groupCols.map(_.toLowerCase).toSet
     var nNull = 0L
-    var statless = false
+    var loud = false
     fs.listStatus(sp)
       .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
       .foreach { f =>
@@ -179,16 +181,16 @@ object MaterializedView {
         val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
         try r.getFooter.getBlocks.asScala.foreach { b =>
           b.getColumns.asScala.foreach { c =>
-            val top = c.getPath.toArray.headOption.map(_.toLowerCase)
-            if (top.exists(wanted.contains)) {
+            val path = c.getPath.toArray
+            if (path.headOption.exists(n => wanted(n.toLowerCase))) {
               val st = c.getStatistics
-              if (st == null || !st.isNumNullsSet) statless = true
+              if (path.length > 1 || st == null || !st.isNumNullsSet) loud = true
               else nNull += st.getNumNulls
             }
           }
         } finally r.close()
       }
-    if (statless)
+    if (loud)
       nNull = spark.read.parquet(stagedPath)
         .filter(groupCols.map(col(_).isNull).reduce(_ || _)).count()
     require(nNull == 0,

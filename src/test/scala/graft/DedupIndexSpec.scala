@@ -1,8 +1,12 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
-import graft.engine.Tables
-import graft.ops.{AtomicPublish, DedupIndex, MinHashDedup, SemDedup}
+import org.apache.spark.sql.types._
+import graft.engine.{GraftFunctions, JobLabel, Tables}
+import graft.ops.{AnnSearch, AtomicPublish, DedupIndex, MinHashDedup, SemDedup}
 
 /** The persisted incremental-dedup index: outputs bit-identical to the
   * recompute paths, reuse without rebuild, staleness-driven rebuild,
@@ -101,30 +105,212 @@ class DedupIndexSpec extends SparkSpec {
       "persisted centroids differ from a fresh deterministic fit")
   }
 
-  test("indexed IVF top-k equals ivfTopK exactly; plan exchange-free up to the rank window") {
-    import org.apache.spark.sql.functions.col
-    val table = tmpTable("ivf")
-    DedupIndex.ensureIvfIndex(spark, table, emb,
+  /** One IVF index over the whole fixture, shared by the IVF query
+    * specs (the fit is memoized per source stamp; the publish is not). */
+  private lazy val ivfAll: String = {
+    val t = tmpTable("ivf")
+    DedupIndex.ensureIvfIndex(spark, t, emb,
       s"$sfDir/embeddings.parquet", "all", "vec_id", "e")
-    val daily = DedupIndex.ivfTopKIndexed(spark, table,
-      emb.filter(col("vec_id") < 5), "vec_id", "e", k = 10)
-    val recompute = graft.ops.AnnSearch.ivfTopK(spark, emb, "vec_id", "e",
-      col("id") < 5, k = 10)
-    def toSet(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getLong(0), r.getInt(1), r.getLong(2))).toSet
-    val d = toSet(daily)
-    val r = toSet(recompute)
-    assert(r.nonEmpty)
-    assert(d === r, s"extra: ${d.diff(r).take(3)}; missing: ${r.diff(d).take(3)}")
-    // the only exchange in the daily plan is the rank window's — the
-    // scan/join side is broadcast + cell-pruned read, no shuffle of
-    // the index stream before ranking. (AQE's toString repeats the
-    // initial plan below the final one — count the final section only.)
-    val planStr = daily.queryExecution.executedPlan.toString
-    val finalStr = planStr.split("== Initial Plan ==").head
-    val exchanges = finalStr.linesIterator
-      .count(_.contains("Exchange hashpartitioning"))
-    assert(exchanges <= 1, s"unexpected exchanges:\n$finalStr")
+    t
+  }
+
+  /** (q_id, rank, neighbor_id, sim bits) in rank order — sim compared
+    * bit for bit, a null sim as None. */
+  private def exactRows(df: DataFrame): Seq[(Long, Int, Long, Option[Long])] =
+    df.collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2),
+        if (r.isNullAt(3)) None
+        else Some(java.lang.Double.doubleToLongBits(r.getDouble(3)))))
+      .sortBy(t => (t._1, t._2)).toSeq
+
+  /** The rank-window plan over a published IVF index: probe cells from
+    * the shared expressions, broadcast cell join against every
+    * segment's `assign/`, codegen cosine, `row_number` per query. The
+    * pin for inputs `ivfTopK` cannot express — queries outside the
+    * corpus, null and zero vectors, appended segments. */
+  private def rankWindowTopK(table: String, queries: DataFrame,
+                             k: Int, nprobe: Int): DataFrame = {
+    import org.apache.spark.sql.expressions.Window
+    val base = AtomicPublish.currentDataDir(spark, table).get
+    val cents = spark.read.parquet(s"$table/$base/model").collect()
+      .sortBy(_.getInt(0)).map(_.getSeq[Double](1).toArray)
+    val q = AnnSearch.probeCellsForQueries(
+      queries.select(col("vec_id").as("q_id"), col("e").as("qe")), cents, nprobe)
+    val idx = spark.read.parquet(AtomicPublish.currentSegments(spark, table)
+      .map(d => s"$table/$d/assign"): _*)
+    val w = Window.partitionBy(col("q_id")).orderBy(col("sim").desc, col("id"))
+    idx.join(broadcast(q), Seq("cell"))
+      .filter(col("id") =!= col("q_id"))
+      .withColumn("sim", GraftFunctions.cosineSim(spark, col("qe"), col("e")))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("rank"), col("id").as("neighbor_id"), col("sim"))
+  }
+
+  /** A query frame held on the driver (a `LocalRelation`). */
+  private def localQueries(rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("vec_id", LongType), StructField("e", ArrayType(DoubleType)))))
+
+  /** The descriptions of the Spark jobs `f` launches. Two sentinel jobs
+    * bracket `f`: listener events arrive in order, so once the closing
+    * sentinel is seen every job of `f` has been seen. */
+  private def jobsOf[A](f: => A): (A, Seq[String]) = {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit = {
+        seen.add(Option(js.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse("")); ()
+      }
+    }
+    def sentinel(tag: String): Unit = JobLabel(spark, tag) {
+      spark.sparkContext.parallelize(Seq(1), 1).count(); ()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      sentinel("spec:begin")
+      val a = f
+      sentinel("spec:end")
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains("spec:end") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      (a, seen.asScala.toSeq.dropWhile(_ != "spec:begin").drop(1)
+        .takeWhile(_ != "spec:end"))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private def cacheManagerEmpty: Boolean =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager.isEmpty
+
+  test("indexed IVF top-k equals ivfTopK exactly, sim bits included, at nprobe 1, 4 and nlist") {
+    val queries = emb.filter(col("vec_id") < 20)
+    def recompute(k: Int, nprobe: Int) = AnnSearch.ivfTopK(spark, emb,
+      "vec_id", "e", col("id") < 20, k = k, nprobe = nprobe,
+      cacheKey = Some("spec:ivf-exact"))
+    Seq(1, 4, 16).foreach { nprobe =>
+      val got = DedupIndex.ivfTopKIndexed(spark, ivfAll, queries,
+        "vec_id", "e", k = 10, nprobe = nprobe)
+      val want = recompute(10, nprobe)
+      assert(got.schema === want.schema)
+      val g = exactRows(got)
+      assert(g.size === 20 * 10, s"nprobe=$nprobe")
+      assert(g === exactRows(want), s"nprobe=$nprobe")
+      // every query is an index member, excluded from its own result
+      assert(g.forall(r => r._1 != r._3), s"nprobe=$nprobe: a query found itself")
+    }
+    // k beyond the candidate count: every probed row, fully ranked
+    val all = exactRows(DedupIndex.ivfTopKIndexed(spark, ivfAll, queries,
+      "vec_id", "e", k = 100000, nprobe = 1))
+    assert(all === exactRows(recompute(100000, 1)))
+    val perQuery = all.groupBy(_._1).map(_._2.size)
+    assert(perQuery.size === 20 && perQuery.forall(n => n > 0 && n < 100000))
+  }
+
+  test("indexed IVF: duplicate vectors tie on sim and break on id; null and zero vectors, null ids") {
+    // the index holds 30 vectors twice, under ids 0..29 and 1000000..
+    val dupEmb = emb.unionByName(emb.filter(col("vec_id") < 30)
+      .select((col("vec_id") + 1000000L).as("vec_id"), col("e")))
+    val table = tmpTable("ivfdup")
+    DedupIndex.ensureIvfIndex(spark, table, dupEmb,
+      s"$sfDir/embeddings.parquet", "all#dup", "vec_id", "e")
+    val near = emb.filter(col("vec_id") < 6).collect().toSeq.map(r =>
+      Row(-1L - r.getLong(0), r.getSeq[Double](1).map(_ + 0.01)))
+    val dim = near.head.getSeq[Double](1).size
+    val queries = localQueries(near ++ Seq(
+      Row(-100L, null), Row(-101L, Seq.fill(dim)(0.0)),
+      Row(null, near.head.getSeq[Double](1))))
+    def check(nprobe: Int, k: Int): Unit = {
+      val got = DedupIndex.ivfTopKIndexed(spark, table, queries,
+        "vec_id", "e", k = k, nprobe = nprobe)
+      val want = rankWindowTopK(table, queries, k, nprobe)
+      assert(got.schema === want.schema)
+      val g = exactRows(got)
+      assert(g === exactRows(want), s"nprobe=$nprobe k=$k")
+      // a duplicated vector's two ids tie on sim, lower id first
+      val ties = g.filter(_._1 > -100L).groupBy(r => (r._1, r._4))
+        .values.filter(_.size > 1)
+      assert(ties.nonEmpty, "vacuous: no tied neighbours")
+      ties.foreach(t => assert(t.map(_._3) === t.map(_._3).sorted))
+      // the null vector ranks null sims by id; the zero vector NaN sims
+      assert(g.filter(_._1 == -100L).forall(_._4.isEmpty))
+      assert(g.filter(_._1 == -101L).map(_._4)
+        .forall(_.exists(b => java.lang.Double.longBitsToDouble(b).isNaN)))
+      assert(g.count(_._1 == -100L) === k && g.count(_._1 == -101L) === k)
+    }
+    check(nprobe = 4, k = 10)
+    check(nprobe = 1, k = 3)
+  }
+
+  test("a warm indexed IVF batch of local queries runs one labelled Spark job and caches nothing") {
+    val queries = localQueries(emb.filter(col("vec_id") < 64).collect().toSeq)
+    def batch() = DedupIndex.ivfTopKIndexed(spark, ivfAll, queries,
+      "vec_id", "e", k = 10).collect()
+    val cold = batch()
+    spark.catalog.clearCache()
+    val (warm, jobs) = jobsOf(batch())
+    assert(warm.toSeq === cold.toSeq)
+    assert(warm.length === 64 * 10)
+    assert(jobs.size === 1 && jobs.head.nonEmpty,
+      s"warm batch ran ${jobs.size} job(s): ${jobs.mkString("; ")}")
+    assert(cacheManagerEmpty, "a cached plan outlived the call")
+  }
+
+  test("a corrupt published model is refit on rebuild and the index still answers") {
+    // a grown table under an unchanged identity rebuilds from its
+    // published model/; an unreadable model must refit, not fail
+    val src = s"$sfDir/embeddings.parquet"
+    def corruptModel(table: String): Unit = {
+      val base = AtomicPublish.currentDataDir(spark, table).get
+      new java.io.File(s"$table/$base/model").listFiles().foreach { f =>
+        if (f.getName.endsWith(".crc")) f.delete()
+        else if (f.getName.endsWith(".parquet"))
+          java.nio.file.Files.write(f.toPath, "not parquet".getBytes("UTF-8"))
+      }
+    }
+    def growAndCorrupt(table: String, sub: String): Unit = {
+      val base = AtomicPublish.currentDataDir(spark, table).get
+      val empty = spark.read.parquet(s"$table/$base/$sub").limit(0)
+      AtomicPublish.appendSegment(spark, table)(p => empty.write.parquet(s"$p/$sub"))
+      corruptModel(table)
+    }
+    val ivf = tmpTable("ivfcorrupt")
+    def ensureIvf() = DedupIndex.ensureIvfIndex(spark, ivf, emb, src, "all",
+      "vec_id", "e")
+    ensureIvf()
+    growAndCorrupt(ivf, "assign")
+    ensureIvf()
+    assert(AtomicPublish.currentSegments(spark, ivf).size === 1)
+    assert(exactRows(DedupIndex.ivfTopKIndexed(spark, ivf,
+        emb.filter(col("vec_id") < 5), "vec_id", "e", k = 10)) ===
+      exactRows(AnnSearch.ivfTopK(spark, emb, "vec_id", "e", col("id") < 5,
+        k = 10, cacheKey = Some("spec:ivf-exact"))))
+
+    val corpus = emb.filter(col("vec_id") >= 100)
+    val n = corpus.count()
+    val sem = tmpTable("semcorrupt")
+    def ensureSem() = DedupIndex.ensureSemanticIndex(spark, sem, corpus, src,
+      "vec_id>=100", "vec_id", "e", dim = 64, corpusSize = n)
+    ensureSem()
+    growAndCorrupt(sem, "assign")
+    ensureSem()
+    val batch = emb.filter(col("vec_id") < 100)
+    def pairs(df: DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    val want = pairs(SemDedup.incrementalPairs(spark, corpus, batch,
+      "vec_id", "e", minCosine = 0.45, dim = 64, corpusSize = n))
+    assert(want.nonEmpty)
+    assert(pairs(DedupIndex.dailySemanticPairs(spark, sem, batch,
+      "vec_id", "e", minCosine = 0.45)) === want)
+
+    val pq = tmpTable("pqcorrupt")
+    def ensurePq() = DedupIndex.ensurePqIndex(spark, pq, emb, src, "all",
+      "vec_id", "e")
+    ensurePq()
+    growAndCorrupt(pq, "codes")
+    ensurePq()
+    assert(DedupIndex.loadPqModel(spark, pq).codebooks.flatten.flatten.toSeq ===
+      graft.ops.PqSearch.fit(spark, emb, "vec_id", "e").codebooks.flatten.flatten.toSeq)
   }
 
   test("minhash cycle: day-2 candidates over the appended index equal recompute over corpus ∪ day-1") {
@@ -278,6 +464,10 @@ class DedupIndexSpec extends SparkSpec {
       assert(hits.getOrElse(q, Set.empty).contains(q - 200000L),
         s"clone $q did not resolve its appended day-1 source in top-10")
     }
+    // both segments answer exactly as the rank-window plan over them
+    assert(exactRows(DedupIndex.ivfTopKIndexed(spark, table, clones,
+        "vec_id", "e", k = 10)) ===
+      exactRows(rankWindowTopK(table, clones, 10, 4)))
     // segmentation invariance: the same growth appended in TWO
     // segments yields the identical search output
     val table2 = tmpTable("ivfapp2")

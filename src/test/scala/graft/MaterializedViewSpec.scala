@@ -173,6 +173,39 @@ class MaterializedViewSpec extends SparkSpec {
       meta.sourceVersion === AtomicPublish.currentVersion(spark, src2).get)
   }
 
+  test("a struct group key with a null field is a group; a null struct is refused") {
+    import spark.implicits._
+    // parquet keeps per-LEAF null counts: the leaf under a non-null
+    // struct counts the null field, which says nothing about the key
+    def publishSource(tag: String, rows: Seq[(Long, String, Double)],
+                      nullStructAt: Long): String = {
+      val src = graft.engine.Scratch.dir(tag)
+      AtomicPublish.publish(spark, src)(p =>
+        rows.toDF("k", "name", "x")
+          .select(col("k"),
+            when(col("k") =!= nullStructAt,
+              struct(lit("s").as("src"), col("name").as("name"))).as("g"),
+            col("x"))
+          .write.parquet(p))
+      src
+    }
+    val rows = Seq((1L, "a", 10.0), (2L, null, 20.0), (3L, null, 5.0))
+    val src = publishSource("spec_mv_struct_src", rows, nullStructAt = -1L)
+    val mv = graft.engine.Scratch.dir("spec_mv_struct_view")
+    MaterializedView.create(spark, mv, src,
+      keys = Seq("k"), groupCols = Seq("g"), aggs = aggs)
+    val got = MaterializedView.read(spark, mv).collect()
+      .map(r => Option(r.getStruct(0).getString(1)) ->
+        (r.getAs[Long]("n"), r.getAs[Double]("total"))).toMap
+    assert(got === Map(Some("a") -> (1L, 10.0), None -> (2L, 25.0)))
+    val src2 = publishSource("spec_mv_struct_src2", rows, nullStructAt = 2L)
+    val e = intercept[IllegalArgumentException] {
+      MaterializedView.create(spark, graft.engine.Scratch.dir("spec_mv_struct_view2"),
+        src2, keys = Seq("k"), groupCols = Seq("g"), aggs = aggs)
+    }
+    assert(e.getMessage.contains("NULL key values"), e.getMessage)
+  }
+
   test("refresh over watermark-stamped upsert segments matches a " +
       "from-scratch view") {
     import spark.implicits._
