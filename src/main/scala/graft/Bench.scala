@@ -1,6 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
-import java.nio.file.{Files, Paths}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
+import java.nio.file.{Files, Path, Paths}
+import scala.collection.mutable
 
 /** Benchmark main. Times `count()` on every declared query at
   * SPARK_GRAFT_SF_DIR (default sf0.1), n iterations each (best-of-n so a
@@ -15,7 +18,13 @@ import java.nio.file.{Files, Paths}
   * listed in `failed` (and excluded from the total) instead of being
   * silently timed as fast successes. Every timed key also records its
   * own steal-jiffies delta and post-key loadavg (`queries_steal` /
-  * `queries_load`) so contended keys self-identify individually.
+  * `queries_load`) so contended keys self-identify individually, and
+  * the Spark work of its kept run plus its materialize verdict
+  * (`queries_counters`: jobs, stages, tasks, task-seconds, shuffle and
+  * input MB, and jobs and task-seconds per job label). A failed key's
+  * last error (class and first message line) is in `failed_reasons`.
+  * The board starts by removing the state an earlier capture left
+  * behind (published index fits, catalog tables).
   */
 object Bench {
   // Queries the summary line carries explicitly (≈BASELINE.md headliners).
@@ -197,6 +206,7 @@ object Bench {
   }
 
   def main(args: Array[String]): Unit = {
+    removeCarriedState()
     waitForQuiet(sys.env.getOrElse("SPARK_GRAFT_BENCH_QUIET_WAIT_MS",
       "120000").toLong)
     val wall0 = System.nanoTime()
@@ -218,6 +228,8 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    val counters = new Counters
+    spark.sparkContext.addSparkListener(counters)
     // Warm up the JVM/codegen/parquet-reader paths once so per-query
     // timings measure the queries, not first-touch initialization.
     try {
@@ -226,17 +238,189 @@ object Bench {
         .groupBy("l_returnflag").count().collect()
     } catch { case _: Throwable => () }
 
-    val keys = SparkEntry.queries.keys.toSeq.sorted
-      .filter(k => only.forall(_.contains(k)))
-    var failed = List.empty[String]
+    val keys = SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter(k => only.forall(_.contains(k._1)))
+    val (timed, failedWhy) = board(spark, counters, sfDir, keys, iters,
+      sys.env.getOrElse("SPARK_GRAFT_BENCH_STEAL_RETRIES", "2").toInt)
+    System.err.println(s"[bench] listener drains took ${jnum(counters.drainSec)} s")
+    val total = timed.map(_.sec).sum
+    // Validity stamp: a loaded box or sibling JVMs invalidate wall-clock
+    // timings; carrying the evidence in-artifact lets any reader judge.
+    val loadEnd = loadAvg()
+    val (sibs, sibsBusy) = siblingJvms()
+    val stealDelta =
+      if (stealStart < 0) -1L else math.max(-1L, stealJiffies() - stealStart)
+    val elapsedSec = (System.nanoTime() - wall0) / 1e9
+    // The gate verdict rides IN the artifact: a contaminated capture
+    // still writes its numbers (a reader may salvage quiet keys via the
+    // per-key steal map) but can never silently grade as a regression.
+    val rawInvalid = invalidReason(sibsStart, stealDelta, elapsedSec)
+    // HEALED VALIDITY (round 15, verdict item 8): two rounds of
+    // captures stamped themselves invalid on sustained whole-run steal
+    // even though the numbers a reader would take from them were fine.
+    // With per-run steal stamps and the steal-retry loop above, the
+    // whole-run gate can be refined: if EVERY reported key's kept run
+    // was quiet, the artifact's numbers are quiet-window measurements
+    // regardless of what the box did between them — stamp valid, carry
+    // the raw reason as evidence. Sibling-JVM contamination is never
+    // healed (contention leaves no counter trail to refute).
+    val perKeyQuiet = timed.nonEmpty && timed.forall(k => quietRun(k.steal, k.sec))
+    val healed = rawInvalid.exists(_.contains("host steal")) && perKeyQuiet
+    val invalid = if (healed) None else rawInvalid
+    val validity =
+      s""""load":${jnum(loadStart)},"load_end":${jnum(loadEnd)},"siblings_start":$sibsStart,"siblings_start_busy":$sibsStartBusy,"siblings":$sibs,"siblings_busy":$sibsBusy,"steal_jiffies":$stealDelta,"elapsed_sec":${jnum(elapsedSec)},"invalid":${invalid.nonEmpty},"invalid_reason":${invalid.map(r => "\"" + r + "\"").getOrElse("null")},"steal_healed":$healed${rawInvalid.filter(_ => healed).map(r => s""","healed_from":"$r"""").getOrElse("")}"""
+    invalid.foreach(r => System.err.println(s"[bench] INVALID capture: $r"))
+    def keyMap(ks: Seq[Kept])(v: Kept => String): String =
+      ks.map(k => s"\"${k.key}\":${v(k)}").mkString("{", ",", "}")
+    // Parallel per-key maps (the documented "queries" map stays plain
+    // numbers — existing parsers depend on that shape).
+    val failedJson = failedWhy.map(f => "\"" + f._1 + "\"").mkString("[", ",", "]")
+    val reasonsJson = failedWhy.map { case (k, r) => s"\"$k\":${jstr(r)}" }
+      .mkString("{", ",", "}")
+    // Output prefix is overridable so dedicated runs (scale sweeps,
+    // per-key probes) can never clobber the committed reference
+    // snapshot at bench_details.json/bench_summary.json.
+    val outPrefix = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREFIX", "bench")
+    val full =
+      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":$iters,"cpus":$cpus,"sf":"$sfDir",$validity,"failed":$failedJson,"queries":${keyMap(timed)(k => jnum(k.sec))},"queries_steal":${keyMap(timed)(_.steal.toString)},"queries_load":${keyMap(timed)(k => jnum(k.load))},"queries_counters":${keyMap(timed)(countersJson)},"failed_reasons":$reasonsJson}"""
+    Files.writeString(Paths.get(s"${outPrefix}_details.json"), full)
+    // Headliners only in the summary (full per-key map is in details):
+    // the summary line must stay well under a stdout capture limit.
+    val hq = timed.filter(k => headline.contains(k.key))
+    spark.stop()
+    // Short parse-safe summary: printed as the very last stdout line AND
+    // written to bench_summary.json, so a reader has a machine-readable
+    // total even when an sbt wrapper frames stdout with [info]/[success].
+    val short =
+      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":$iters,"n_queries":${timed.size},$validity,"failed":$failedJson,"queries":${keyMap(hq)(k => jnum(k.sec))},"queries_steal":${keyMap(hq)(_.steal.toString)},"sf":"$sfDir"}"""
+    Files.writeString(Paths.get(s"${outPrefix}_summary.json"), short)
+    println(short)
+  }
+
+  /** The Spark work of one run: totals, plus (jobs, task-ms) per job
+    * label. */
+  private[graft] final case class Work(
+      jobs: Long, stages: Long, tasks: Long, taskMs: Long,
+      shuffleReadBytes: Long, shuffleWriteBytes: Long, inputBytes: Long,
+      byLabel: Map[String, (Long, Long)])
+
+  /** The board's one Spark listener: jobs, stages, tasks, task time,
+    * shuffle and input bytes, and jobs and task time per job label.
+    * Host steal cannot move the job, stage and task counts, so they
+    * still compare across captures whose walls do not. A job's label
+    * is the first line of its `spark.job.description`: a
+    * [[graft.engine.JobLabel]] verbatim, and for a streaming
+    * micro-batch the query's name (none when unnamed) without the
+    * per-run ids that follow it. A stage's label is dropped when its
+    * job ends, so the map stays as small as the set of running jobs. */
+  private[graft] final class Counters extends SparkListener {
+    private var jobs, stages, tasks, taskMs, shuffleRead, shuffleWrite, input = 0L
+    private val labels = mutable.HashMap.empty[String, Array[Long]] // (jobs, task ms)
+    private val stageLabel = mutable.HashMap.empty[Int, String]
+    private val jobStages = mutable.HashMap.empty[Int, Seq[Int]]
+    private var drainNs = 0L
+
+    private def label(l: String) = labels.getOrElseUpdate(l, Array(0L, 0L))
+
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      jobs += 1
+      Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description")))
+        .flatMap(_.linesIterator.nextOption()).filter(_.nonEmpty)
+        .foreach { l =>
+          label(l)(0) += 1
+          jobStages(e.jobId) = e.stageIds
+          e.stageIds.foreach(stageLabel(_) = l)
+        }
+    }
+    override def onJobEnd(e: SparkListenerJobEnd): Unit = synchronized {
+      jobStages.remove(e.jobId).foreach(_.foreach(stageLabel.remove))
+    }
+    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+      synchronized { stages += 1 }
+    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = synchronized {
+      tasks += 1
+      Option(e.taskMetrics).foreach { m =>
+        taskMs += m.executorRunTime
+        shuffleRead += m.shuffleReadMetrics.totalBytesRead
+        shuffleWrite += m.shuffleWriteMetrics.bytesWritten
+        input += m.inputMetrics.bytesRead
+        stageLabel.get(e.stageId).foreach(label(_)(1) += m.executorRunTime)
+      }
+    }
+
+    def reset(): Unit = synchronized {
+      jobs = 0; stages = 0; tasks = 0; taskMs = 0
+      shuffleRead = 0; shuffleWrite = 0; input = 0
+      labels.clear()
+    }
+
+    def snapshot(): Work = synchronized {
+      Work(jobs, stages, tasks, taskMs, shuffleRead, shuffleWrite, input,
+        labels.map { case (l, a) => l -> ((a(0), a(1))) }.toMap)
+    }
+
+    /** Wait until the listener bus has delivered every event posted so
+      * far; the time spent waiting adds up in [[drainSec]]. */
+    def drain(spark: SparkSession): Unit = {
+      val t0 = System.nanoTime()
+      GraftSqlBridge.drainListenerBus(spark.sparkContext)
+      synchronized { drainNs += System.nanoTime() - t0 }
+    }
+
+    def drainSec: Double = synchronized(drainNs / 1e9)
+  }
+
+  /** One run: its wall seconds or the error that ended it, its steal
+    * delta, and the Spark work it did. */
+  private[graft] final case class Run(sec: Either[Throwable, Double],
+                                      steal: Long, work: Work)
+
+  /** Run `action` once under the board's counters. The bus is drained
+    * and the counters zeroed BEFORE the steal reading, and drained
+    * again only AFTER the closing steal reading, so neither wait falls
+    * inside the timed or steal window and no event of one run lands in
+    * another's counters. */
+  private[graft] def oneRun(spark: SparkSession, counters: Counters)(
+      action: => Unit): Run = {
+    counters.drain(spark)
+    counters.reset()
+    val r0 = stealJiffies()
+    val t0 = System.nanoTime()
+    val res =
+      try { action; Right((System.nanoTime() - t0) / 1e9) }
+      catch { case t: Throwable => Left(t) }
+    val steal = if (r0 < 0) -1L else math.max(-1L, stealJiffies() - r0)
+    counters.drain(spark)
+    Run(res, steal, counters.snapshot())
+  }
+
+  /** The exception class and the first line of its message. */
+  private def reason(t: Throwable): String =
+    t.getClass.getName + Option(t.getMessage)
+      .flatMap(_.linesIterator.nextOption()).map(": " + _).getOrElse("")
+
+  /** A timed key's reported (kept) run and its context. */
+  private[graft] final case class Kept(key: String, sec: Double, steal: Long,
+                                       load: Double, work: Work,
+                                       materialize: Boolean)
+
+  /** Time every key in order. A key none of whose runs succeeded goes to
+    * the failures, with the reason of its last failed run, and the
+    * board moves on to the next key. */
+  private[graft] def board(
+      spark: SparkSession, counters: Counters, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      iters: Int, extraN: Int): (Vector[Kept], Vector[(String, String)]) = {
+    val timed = Vector.newBuilder[Kept]
+    val failed = Vector.newBuilder[(String, String)]
     // Per-key validity: the steal-jiffies delta of the KEPT run — the
     // iteration whose time is reported (round 15; through round 14 the
     // stamp spanned all iterations, so one hot iteration tainted a
     // key whose reported minimum came from a quiet one). Four rounds
     // of driver captures ran hot with only whole-run stamps — per-key
     // deltas let a reader judge exactly the numbers in the artifact.
-    val timed = keys.flatMap { name =>
-      val fn = SparkEntry.queries(name)
+    queries.foreach { case (name, fn) =>
       // MEASUREMENT HONESTY (round 11): `count()` lets Catalyst DELETE
       // whole branches — e.g. a left outer join to a unique-keyed
       // aggregate with no surviving right columns is eliminated
@@ -250,7 +434,7 @@ object Bench {
       // comparability. Streaming keys do their work eagerly in
       // build(), so the probe would re-run the whole replay to decide
       // something that cannot hollow their timing — they keep count().
-      // graft.tools.CountPlanProbe is the standalone sweep.
+      // Each key's verdict is written to `queries_counters`.
       //
       // EAGER-BUILDER KEYS skip the probe (their materialize verdict is
       // pinned below): the probe invokes fn() once untimed, and a
@@ -258,12 +442,12 @@ object Bench {
       // (k-means fit + clustering for the semantic keys, index
       // ensure/collect for the *_indexed keys) would run its whole
       // pipeline an extra time AND pre-warm the memoized fit so no
-      // timed iteration could ever be cold. Pinned verdicts come from
-      // the CountPlanProbe sweep (the incremental keys' left-join
-      // tails ARE count()-eliminated; dedup_semantic_blocked's plan is
-      // not). Probe failures on other keys are LOGGED, not swallowed —
-      // a silent false would quietly revert a flagged key to hollow
-      // count() timing.
+      // timed iteration could ever be cold. Pinned verdicts are
+      // re-derived from the live plans by BenchGateSpec (the
+      // incremental keys' left-join tails ARE count()-eliminated;
+      // dedup_semantic_blocked's plan is not). Probe failures on other
+      // keys are LOGGED, not swallowed — a silent false would quietly
+      // revert a flagged key to hollow count() timing.
       val materialize = pinnedMaterialize.getOrElse(name,
         !name.startsWith("stream_") && (try {
           countEliminationProbe(fn(spark, sfDir))
@@ -285,92 +469,62 @@ object Bench {
       // the whole artifact invalid (see the healed-validity stamp in
       // main). Steal inflates wall-clock, so extra quiet runs can only
       // LOWER the reported minimum, never flatter it.
-      def oneRun(): (Option[Double], Long) = {
-        val r0 = stealJiffies()
-        val t0 = System.nanoTime()
-        val res =
-          try {
-            val df = fn(spark, sfDir)
-            if (materialize) df.queryExecution.toRdd.count() else df.count()
-            Some((System.nanoTime() - t0) / 1e9)
-          } catch { case _: Throwable => None }
-        (res, if (r0 < 0) -1L else math.max(-1L, stealJiffies() - r0))
+      def run(): Run = oneRun(spark, counters) {
+        val df = fn(spark, sfDir)
+        if (materialize) df.queryExecution.toRdd.count() else df.count()
+        ()
       }
-      var runs = (1 to iters).map(_ => oneRun()).toVector
-      def kept: Option[(Double, Long)] =
-        runs.collect { case (Some(t), sd) => (t, sd) }.sortBy(_._1).headOption
-      val extraN = sys.env.getOrElse("SPARK_GRAFT_BENCH_STEAL_RETRIES", "2").toInt
+      var runs = (1 to iters).map(_ => run()).toVector
+      def kept: Option[(Double, Run)] =
+        runs.collect { case r @ Run(Right(t), _, _) => (t, r) }.sortBy(_._1).headOption
       var extras = 0
-      while (extras < extraN && kept.exists { case (t, sd) => !quietRun(sd, t) }) {
+      while (extras < extraN && kept.exists { case (t, r) => !quietRun(r.steal, t) }) {
         extras += 1
-        runs :+= oneRun()
+        runs :+= run()
       }
       val ld = loadAvg()
       kept match {
-        case None => failed ::= name; None
-        case Some((t, sd)) => Some((name, t, sd, ld))
+        case None =>
+          failed += name -> runs.reverseIterator
+            .collectFirst { case Run(Left(t), _, _) => reason(t) }.getOrElse("no run")
+        case Some((t, r)) =>
+          timed += Kept(name, t, r.steal, ld, r.work, materialize)
       }
     }
-    val total = timed.map(_._2).sum
-    // Validity stamp: a loaded box or sibling JVMs invalidate wall-clock
-    // timings; carrying the evidence in-artifact lets any reader judge.
-    val loadEnd = loadAvg()
-    val (sibs, sibsBusy) = siblingJvms()
-    // Locale-pinned: a comma-decimal default locale would emit invalid JSON.
-    def jnum(d: Double): String =
-      String.format(java.util.Locale.ROOT, "%.4f", Double.box(d))
-    val stealDelta =
-      if (stealStart < 0) -1L else math.max(-1L, stealJiffies() - stealStart)
-    val elapsedSec = (System.nanoTime() - wall0) / 1e9
-    // The gate verdict rides IN the artifact: a contaminated capture
-    // still writes its numbers (a reader may salvage quiet keys via the
-    // per-key steal map) but can never silently grade as a regression.
-    val rawInvalid = invalidReason(sibsStart, stealDelta, elapsedSec)
-    // HEALED VALIDITY (round 15, verdict item 8): two rounds of driver
-    // captures stamped themselves invalid on sustained whole-run steal
-    // even though the numbers a reader would take from them were fine.
-    // With per-run steal stamps and the steal-retry loop above, the
-    // whole-run gate can be refined: if EVERY reported key's kept run
-    // was quiet, the artifact's numbers are quiet-window measurements
-    // regardless of what the box did between them — stamp valid, carry
-    // the raw reason as evidence. Sibling-JVM contamination is never
-    // healed (contention leaves no counter trail to refute).
-    val perKeyQuiet = timed.nonEmpty &&
-      timed.forall { case (_, t, sd, _) => quietRun(sd, t) }
-    val healed = rawInvalid.exists(_.contains("host steal")) && perKeyQuiet
-    val invalid = if (healed) None else rawInvalid
-    val validity =
-      s""""load":${jnum(loadStart)},"load_end":${jnum(loadEnd)},"siblings_start":$sibsStart,"siblings_start_busy":$sibsStartBusy,"siblings":$sibs,"siblings_busy":$sibsBusy,"steal_jiffies":$stealDelta,"elapsed_sec":${jnum(elapsedSec)},"invalid":${invalid.nonEmpty},"invalid_reason":${invalid.map(r => "\"" + r + "\"").getOrElse("null")},"steal_healed":$healed${rawInvalid.filter(_ => healed).map(r => s""","healed_from":"$r"""").getOrElse("")}"""
-    invalid.foreach(r => System.err.println(s"[bench] INVALID capture: $r"))
-    val detailJson = timed.map { case (k, v, _, _) => s"\"$k\":${jnum(v)}" }
-      .mkString("{", ",", "}")
-    // Parallel validity maps (the documented "queries" map stays plain
-    // numbers — the driver's parser depends on that shape).
-    val stealJson = timed.map { case (k, _, sd, _) => s"\"$k\":$sd" }
-      .mkString("{", ",", "}")
-    val loadJson = timed.map { case (k, _, _, l) => s"\"$k\":${jnum(l)}" }
-      .mkString("{", ",", "}")
-    val failedJson = failed.reverse.map("\"" + _ + "\"").mkString("[", ",", "]")
-    // Output prefix is overridable so dedicated runs (scale sweeps,
-    // per-key probes) can never clobber the committed reference
-    // snapshot at bench_details.json/bench_summary.json.
-    val outPrefix = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREFIX", "bench")
-    val full =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":$iters,"cpus":$cpus,"sf":"$sfDir",$validity,"failed":$failedJson,"queries":$detailJson,"queries_steal":$stealJson,"queries_load":$loadJson}"""
-    Files.writeString(Paths.get(s"${outPrefix}_details.json"), full)
-    val hq = timed.filter(t => headline.contains(t._1))
-      .map { case (k, v, _, _) => s"\"$k\":${jnum(v)}" }.mkString("{", ",", "}")
-    // Headliners only in the summary (full per-key map is in details):
-    // the summary line must stay well under the driver's capture limit.
-    val hqSteal = timed.filter(t => headline.contains(t._1))
-      .map { case (k, _, sd, _) => s"\"$k\":$sd" }.mkString("{", ",", "}")
-    spark.stop()
-    // Short parse-safe summary: printed as the very last stdout line AND
-    // written to bench_summary.json, so the driver has a machine-readable
-    // total even when an sbt wrapper frames stdout with [info]/[success].
-    val short =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":$iters,"n_queries":${timed.size},$validity,"failed":$failedJson,"queries":$hq,"queries_steal":$hqSteal,"sf":"$sfDir"}"""
-    Files.writeString(Paths.get(s"${outPrefix}_summary.json"), short)
-    println(short)
+    (timed.result(), failed.result())
+  }
+
+  /** State an earlier capture leaves in the working directory that a
+    * key would otherwise inherit (published index fits under
+    * [[graft.ops.DedupIndex.defaultTablePath]], catalog tables). Both
+    * are rebuilt on demand. */
+  private val carriedState = Seq("target/scratch/dedupindex", "spark-warehouse")
+
+  private def removeCarriedState(): Unit =
+    carriedState.map(Paths.get(_)).filter(Files.exists(_)).foreach { p =>
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(f => Files.delete(f))
+      finally walk.close()
+      System.err.println(s"[bench] removed $p left by an earlier run")
+    }
+
+  // Locale-pinned: a comma-decimal default locale would emit invalid JSON.
+  private def jnum(d: Double): String =
+    String.format(java.util.Locale.ROOT, "%.4f", Double.box(d))
+
+  private def jstr(s: String): String = s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  }.mkString("\"", "", "\"")
+
+  private def countersJson(k: Kept): String = {
+    val w = k.work
+    val labels = w.byLabel.toSeq.sortBy(_._1).map { case (l, (j, ms)) =>
+      s"""${jstr(l)}:{"jobs":$j,"task_s":${jnum(ms / 1e3)}}"""
+    }.mkString("{", ",", "}")
+    s"""{"jobs":${w.jobs},"stages":${w.stages},"tasks":${w.tasks},"task_s":${jnum(w.taskMs / 1e3)},"shuffle_read_mb":${jnum(w.shuffleReadBytes / 1e6)},"shuffle_write_mb":${jnum(w.shuffleWriteBytes / 1e6)},"input_mb":${jnum(w.inputBytes / 1e6)},"materialize":${k.materialize},"labels":$labels}"""
   }
 }

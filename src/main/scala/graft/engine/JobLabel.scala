@@ -3,9 +3,10 @@ package graft.engine
 import org.apache.spark.sql.SparkSession
 
 /** Job labelling (optimization guide §1.5): protocol code paths wrap
-  * their Spark actions so the UI / KeyStatsProbe job log attributes
-  * every job to the operator phase that launched it, instead of the
-  * anonymous call site of the enclosing foreachBatch. Descriptions are
+  * their Spark actions so the UI and the bench's per-label counters
+  * (`queries_counters` in `bench_details.json`) attribute every job to
+  * the operator phase that launched it, instead of the anonymous call
+  * site of the enclosing foreachBatch. Descriptions are
   * thread-local and restored on exit, so labels nest correctly and
   * never leak into a caller's own label.
   */

@@ -397,26 +397,21 @@ object DedupIndex {
     // needs no distinct; correct, still exchange-free, just unpruned).
     val maxIds = spark.conf.getOption(MaxPushdownIdsKey)
       .map(_.toInt).getOrElse(MaxPushdownIdsDefault)
-    // Cache lifecycle: the returned plan references the persisted probe
-    // set, so the CALLER owns its release (consume the DataFrame, then
-    // spark.catalog.clearCache() or rely on LRU eviction — the block is
-    // batch-sized). Error paths release it here so a refused batch
-    // cannot leak a block per retry in a long-lived daily driver.
-    val candP = cand.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val rawIds = candP.select(col("c_id")).limit(maxIds + 1).collect()
-        .map(_.getLong(0))
-      val source = readSource(meta("sourcePath"))
-      val texts =
-        (if (rawIds.length <= maxIds)
-          source.filter(col(idCol).isInCollection(rawIds.distinct.toSeq))
-        else
-          source.join(broadcast(candP.select(col("c_id").as(idCol))),
-            Seq(idCol), "left_semi"))
-          .select(col(idCol).as("c_id"), col(textCol).as("text_c"))
-      texts.join(broadcast(candP), Seq("c_id"))
-        .select(col("c_id"), col("b_id"), col("text_c"), col("text_b"))
-    } catch { case t: Throwable => candP.unpersist(); throw t }
+    // Nothing is cached: the id collect and the returned plan each
+    // evaluate the (batch-sized) candidate join, so no block outlives
+    // the call.
+    val rawIds = cand.select(col("c_id")).limit(maxIds + 1).collect()
+      .map(_.getLong(0))
+    val source = readSource(meta("sourcePath"))
+    val texts =
+      (if (rawIds.length <= maxIds)
+        source.filter(col(idCol).isInCollection(rawIds.distinct.toSeq))
+      else
+        source.join(broadcast(cand.select(col("c_id").as(idCol))),
+          Seq(idCol), "left_semi"))
+        .select(col(idCol).as("c_id"), col(textCol).as("text_c"))
+    texts.join(broadcast(cand), Seq("c_id"))
+      .select(col("c_id"), col("b_id"), col("text_c"), col("text_b"))
   }
 
   /** APPEND a day's documents to a published MinHash index — the write
@@ -1074,32 +1069,29 @@ object DedupIndex {
       .withColumn("cells",
         SemDedup.assignCells(spark, model, col("e"), effProbes))
       .select(col("b_id"), col("e").as("be"), explode(col("cells")).as("cell"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     // Probe-cell set collected RAW and deduped on the driver — a
     // distinct() here would put an exchange in the daily plan. The cap
     // is on raw probe rows (|batch| × probes): a "batch" beyond it is
     // not a daily batch — loud refusal with the remedy, house style.
-    // Caller-owned cache (see dailyMinHashCandidates); error paths —
-    // including the refusal — release the persisted probe set here.
-    try {
-      val maxCells = spark.conf.getOption(MaxBatchCellsKey)
-        .map(_.toInt).getOrElse(MaxBatchCellsDefault)
-      val rawCells = b.select(col("cell")).limit(maxCells + 1).collect()
-        .map(_.getInt(0))
-      require(rawCells.length <= maxCells,
-        s"daily batch probes > $maxCells cells ($MaxBatchCellsKey): " +
-          "this is not a daily batch — dedup it as a corpus (blockedPairs) " +
-          "or raise the cap")
-      val batchCells = rawCells.distinct
-      val idx = scanFooter(spark,
-          segmentPaths(spark, tablePath).map(p => s"$p/assign"))
-        .filter(col("cell").isInCollection(batchCells.toSeq))
-        .select(col("id").as("c_id"), col("e").as("ce"), col("cell"))
-      idx.join(broadcast(b), Seq("cell"))
-        .withColumn("sim", graft.engine.GraftFunctions.cosineSim(
-          spark, col("ce"), col("be")))
-        .filter(col("sim") >= minCosine)
-        .select(col("b_id"), col("c_id"), col("sim"))
-    } catch { case t: Throwable => b.unpersist(); throw t }
+    // Nothing is cached: the collect and the returned plan each assign
+    // the (batch-sized) probe set, so no block outlives the call.
+    val maxCells = spark.conf.getOption(MaxBatchCellsKey)
+      .map(_.toInt).getOrElse(MaxBatchCellsDefault)
+    val rawCells = b.select(col("cell")).limit(maxCells + 1).collect()
+      .map(_.getInt(0))
+    require(rawCells.length <= maxCells,
+      s"daily batch probes > $maxCells cells ($MaxBatchCellsKey): " +
+        "this is not a daily batch — dedup it as a corpus (blockedPairs) " +
+        "or raise the cap")
+    val batchCells = rawCells.distinct
+    val idx = scanFooter(spark,
+        segmentPaths(spark, tablePath).map(p => s"$p/assign"))
+      .filter(col("cell").isInCollection(batchCells.toSeq))
+      .select(col("id").as("c_id"), col("e").as("ce"), col("cell"))
+    idx.join(broadcast(b), Seq("cell"))
+      .withColumn("sim", graft.engine.GraftFunctions.cosineSim(
+        spark, col("ce"), col("be")))
+      .filter(col("sim") >= minCosine)
+      .select(col("b_id"), col("c_id"), col("sim"))
   }
 }

@@ -1761,9 +1761,10 @@ object AtomicPublish {
     * 1-task FOOTER-READING JOB (~30-90 ms of job-launch latency) — a
     * commit-heavy key pays that job once per snapshot/segment read per
     * refresh, so the protocol paths resolve schemas driver-side from
-    * the footer instead (KeyStatsProbe: 19 of mv_incremental's 55 jobs
-    * were these). `asNullable` matches the file-source read path, which
-    * relaxes every field. None when the sidecar metadata is absent
+    * the footer instead (in round 16, 19 of mv_incremental's 55 jobs
+    * were these; its bench `queries_counters` entry tracks the count).
+    * `asNullable` matches the file-source read path, which relaxes
+    * every field. None when the sidecar metadata is absent
     * (non-Spark parquet) — callers fall back to datasource resolution.
     *
     * UNCACHED: for directories that are not (yet) committed segments —

@@ -2,14 +2,14 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted}
 import org.apache.spark.sql.SparkSession
 
+import graft.Bench
 import graft.queries.Registry
 
 /** Shuffle-budget audit: EXECUTE every graded key and record the bytes
   * that actually crossed an exchange (shuffle write), plus input bytes
-  * read, via a stage-metrics listener. The committed artifact
+  * read, via the bench's Spark counters. The committed artifact
   * (`shuffle_audit.json`) quantifies the engine's central scale claim
   * key by key: map-only pipelines shuffle ZERO bytes, aggregates
   * shuffle only their combined partials, and nothing shuffles the
@@ -28,58 +28,27 @@ object ShuffleAudit {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-
-    // One listener, zeroed between keys. Stage-completion events are
-    // delivered asynchronously, so drain the listener bus before each
-    // read (waitUntilEmpty is test-visible API on the context's bus).
-    @volatile var shuffleWrite = 0L
-    @volatile var inputRead = 0L
-    val listener = new SparkListener {
-      override def onStageCompleted(sc: SparkListenerStageCompleted): Unit = {
-        shuffleWrite += sc.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten
-        inputRead += sc.stageInfo.taskMetrics.inputMetrics.bytesRead
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-
-    // The listener bus is async and its drain API is private[spark];
-    // settle by polling until the counters stop moving (two consecutive
-    // identical reads 100 ms apart). Runs BEFORE zeroing as well as
-    // after counting: a late stage-completion event from the previous
-    // key arriving after the reset would otherwise be misattributed to
-    // the next key's row in the committed artifact.
-    def settle(): Unit = {
-      var prev = -1L
-      var tries = 0
-      while (tries < 50 && prev != shuffleWrite + inputRead) {
-        prev = shuffleWrite + inputRead
-        Thread.sleep(100)
-        tries += 1
-      }
-    }
+    val counters = new Bench.Counters
+    spark.sparkContext.addSparkListener(counters)
 
     val rows = Registry.all.map { q =>
-      settle()
-      shuffleWrite = 0L
-      inputRead = 0L
-      val res =
-        try {
-          val df = q.build(spark, dir)
-          // same count()-elimination guard as Bench: the audit must
-          // record the bytes of the key's REAL plan, not of a plan
-          // count() legally truncated (see Bench's probe comment)
-          val eliminated =
-            df.groupBy().count().queryExecution.optimizedPlan.collectLeaves().size <
-              df.queryExecution.optimizedPlan.collectLeaves().size
-          val n = if (eliminated) df.queryExecution.toRdd.count() else df.count()
-          settle()
-          f""""${q.key}":{"rows":$n,"shuffle_bytes":$shuffleWrite,"input_bytes":$inputRead}"""
-        } catch {
-          case e: Throwable =>
-            s""""${q.key}":{"error":"${e.getClass.getSimpleName}"}"""
-        }
-      System.err.println(s"[audit] ${q.key} shuffle=$shuffleWrite input=$inputRead")
-      res
+      var n = 0L
+      val run = Bench.oneRun(spark, counters) {
+        val df = q.build(spark, dir)
+        // same count()-elimination guard as Bench: the audit must
+        // record the bytes of the key's REAL plan, not of a plan
+        // count() legally truncated (see Bench's probe comment)
+        n = if (Bench.countEliminationProbe(df)) df.queryExecution.toRdd.count()
+            else df.count()
+      }
+      val w = run.work
+      System.err.println(s"[audit] ${q.key} shuffle=${w.shuffleWriteBytes} input=${w.inputBytes}")
+      run.sec match {
+        case Right(_) =>
+          s""""${q.key}":{"rows":$n,"shuffle_bytes":${w.shuffleWriteBytes},"input_bytes":${w.inputBytes}}"""
+        case Left(e) =>
+          s""""${q.key}":{"error":"${e.getClass.getSimpleName}"}"""
+      }
     }
     Files.writeString(Paths.get(out), rows.mkString("{", ",\n", "}\n"))
     println(s"wrote $out")

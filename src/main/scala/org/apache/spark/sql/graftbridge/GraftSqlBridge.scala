@@ -3,7 +3,8 @@
  * a DataFrame) and the Column↔Expression conversions have no public
  * equivalent in Spark 4.1; every extension library that builds custom
  * logical operators or parameterized expressions uses this same
- * package-placement pattern to reach them. Nothing else is accessed.
+ * package-placement pattern to reach them. The bench also drains the
+ * private[spark] listener bus through it. Nothing else is accessed.
  */
 package org.apache.spark.sql.graftbridge
 
@@ -70,4 +71,9 @@ object GraftSqlBridge {
       reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistry): Unit = {
     ext.registerFunctions(reg); ()
   }
+
+  /** Block until the listener bus has delivered every event posted so
+    * far (`listenerBus` is private[spark]). */
+  def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty(30000L)
 }

@@ -39,4 +39,48 @@ class BenchGateSpec extends SparkSpec {
           s"count() plan ${if (live) "DOES" else "does NOT"} eliminate a leaf scan")
     }
   }
+
+  test("a run's counters are exact, attributed to its job label, and its own") {
+    val counters = new Bench.Counters
+    spark.sparkContext.addSparkListener(counters)
+    try {
+      // one job of two stages: 4 map tasks write a shuffle, 4 reduce tasks
+      val first = Bench.oneRun(spark, counters) {
+        graft.engine.JobLabel(spark, "spec: shuffle") {
+          spark.sparkContext.parallelize(1 to 8, 4).map(i => (i % 2, i))
+            .reduceByKey(_ + _).count()
+        }; ()
+      }
+      assert(first.sec.isRight)
+      val w = first.work
+      assert((w.jobs, w.stages, w.tasks) === ((1L, 2L, 8L)))
+      assert(w.shuffleWriteBytes > 0 && w.shuffleReadBytes > 0)
+      assert(w.byLabel.keySet === Set("spec: shuffle"))
+      assert(w.byLabel("spec: shuffle")._1 === 1L)
+      assert(w.byLabel("spec: shuffle")._2 === w.taskMs)
+      // the next run sees only its own unlabelled one-stage job
+      val second = Bench.oneRun(spark, counters) {
+        spark.sparkContext.parallelize(1 to 4, 2).count(); ()
+      }
+      val v = second.work
+      assert((v.jobs, v.stages, v.tasks) === ((1L, 1L, 2L)))
+      assert(v.byLabel.isEmpty && v.shuffleWriteBytes === 0L)
+    } finally spark.sparkContext.removeSparkListener(counters)
+  }
+
+  test("a key that throws records its reason and the board goes on") {
+    val counters = new Bench.Counters
+    spark.sparkContext.addSparkListener(counters)
+    try {
+      val queries: Seq[(String, (org.apache.spark.sql.SparkSession, String) =>
+          org.apache.spark.sql.DataFrame)] = Seq(
+        "a_throws" -> ((_, _) => throw new IllegalStateException("no table\nat line 2")),
+        "b_counts" -> ((s, _) => s.range(10).toDF()))
+      val (timed, failed) = Bench.board(spark, counters, sfDir, queries,
+        iters = 2, extraN = 0)
+      assert(failed === Vector("a_throws" -> "java.lang.IllegalStateException: no table"))
+      assert(timed.map(_.key) === Vector("b_counts"))
+      assert(timed.head.work.jobs >= 1L && !timed.head.materialize)
+    } finally spark.sparkContext.removeSparkListener(counters)
+  }
 }

@@ -30,6 +30,7 @@ class DedupIndexSpec extends SparkSpec {
     val table = tmpTable("mh")
     DedupIndex.ensureMinHashIndex(spark, table, corpus,
       s"$sfDir/documents.parquet", "doc_id>=100", "doc_id", "text", 32, 8)
+    spark.catalog.clearCache()
     val daily = DedupIndex.dailyMinHashCandidates(spark, table, batch,
       _ => docs)
     val recompute = MinHashDedup.incrementalCandidates(
@@ -38,6 +39,7 @@ class DedupIndexSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1), r.getString(2), r.getString(3)))
       .toSet
     val d = toSet(daily)
+    assert(cacheManagerEmpty, "the daily candidates left a cached plan behind")
     val r = toSet(recompute)
     assert(r.nonEmpty, "graded corpus has no incremental candidate — vacuous")
     assert(d === r, s"extra: ${d.diff(r).take(3)}; missing: ${r.diff(d).take(3)}")
@@ -74,16 +76,18 @@ class DedupIndexSpec extends SparkSpec {
     DedupIndex.ensureSemanticIndex(spark, table, corpus,
       s"$sfDir/embeddings.parquet", "vec_id>=100", "vec_id", "e",
       dim = 64, corpusSize = n)
+    spark.catalog.clearCache()
     val daily = DedupIndex.dailySemanticPairs(spark, table, batch,
       "vec_id", "e", minCosine = 0.45)
     assert(!daily.queryExecution.executedPlan.toString
       .contains("Exchange hashpartitioning"),
       s"semantic daily plan shuffles:\n${daily.queryExecution.executedPlan}")
-    val recompute = SemDedup.incrementalPairs(spark, corpus, batch,
-      "vec_id", "e", minCosine = 0.45, dim = 64, corpusSize = n)
     def toSet(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
     val d = toSet(daily)
+    assert(cacheManagerEmpty, "the daily pairs left a cached plan behind")
+    val recompute = SemDedup.incrementalPairs(spark, corpus, batch,
+      "vec_id", "e", minCosine = 0.45, dim = 64, corpusSize = n)
     val r = toSet(recompute)
     assert(r.nonEmpty, "graded corpus has no incremental semantic dup — vacuous")
     assert(d === r, s"extra: ${d.diff(r).take(3)}; missing: ${r.diff(d).take(3)}")
