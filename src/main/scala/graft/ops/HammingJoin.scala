@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import graft.engine.GraftConf
 
 /** All pairs of 64-bit fingerprints within a Hamming distance bound,
   * via the standard multi-index pigeonhole — the scale-safe replacement
@@ -91,43 +92,37 @@ object HammingJoin {
       pairsPerDoc * n.toDouble * choose(k - 1, m)
   }
 
-  /** Conf key bounding the modeled row budget an exact Hamming join may
-    * plan for the RELATIONAL path (index rows + candidates). Mirrors
-    * [[AnnSearch.MaxBruteCosinesKey]]: the right ceiling depends on
-    * cluster parallelism, so it is a conf, not a constant. */
-  val MaxModeledCostKey = "spark.graft.hamming.maxModeledCost"
-
-  /** Conf key bounding the MEASURED bucket-product volume (Σ cnt²,
-    * estimated from a fingerprint sample) the partition-local path may
-    * plan. Products cost one XOR+popcount each (~2-3 ns/core); the
-    * default 3e11 is ~10 min on the 32-thread reference box and scales
-    * linearly with cluster cores — raise it on a real cluster. */
-  val MaxProductsKey = "spark.graft.hamming.maxProducts"
-
-  /** Conf key: corpora at or below this row count use the relational
-    * join (codegen, AQE, no sampling pass); larger ones use the
-    * partition-local popcount engine with sampled-occupancy planning. */
-  val LocalMinRowsKey = "spark.graft.hamming.localMinRows"
-
-  /** Conf key: hard cap on one bucket's rows in the local engine (the
-    * run buffer is two primitive arrays of this length; a run this hot
-    * means the products estimate was evaded — fail loud, not OOM). */
-  val MaxBucketRowsKey = "spark.graft.hamming.maxBucketRows"
-
-  /** Conf key: partition-count multiplier for the local engine's
-    * bucket-keyed repartition. Product mass is bucket-skewed, so at
-    * exactly cores=partitions the hottest partition straggles; 4×
-    * oversplit measured TWICE at sf100/32 threads: round 10 saw
-    * 183-152 s vs ~201 s (~10-20%), and the round-13 A/B (one JVM per
-    * leg, steal-stamped: 2030 vs 6359 jiffies) read 179 s vs 289 s.
-    * When SET, this conf wins everywhere. When UNSET (round 14):
-    * [[pairsWithinAdaptive]] DERIVES the factor from the sampled
-    * bucket-mass distribution it already measures
-    * ([[deriveOversplit]]), and a direct [[pairsWithinLocal]] call —
-    * which has no sample — keeps the measured default 4. Output is
-    * partitioning-blind either way (canonical emission, spec-gated). */
-  val OversplitKey = "spark.graft.hamming.oversplit"
-  val OversplitDefault = 4
+  // Session knobs, read through GraftConf:
+  //  - HammingMaxModeledCost bounds the modeled row budget an exact
+  //    Hamming join may plan for the RELATIONAL path (index rows +
+  //    candidates). Like MaxBruteCosines, the right ceiling depends on
+  //    cluster parallelism, so it is a conf, not a constant.
+  //  - HammingMaxProducts bounds the MEASURED bucket-product volume
+  //    (Σ cnt², estimated from a fingerprint sample) the partition-local
+  //    path may plan. Products cost one XOR+popcount each (~2-3
+  //    ns/core); the default 3e11 is ~10 min on the 32-thread reference
+  //    box and scales linearly with cluster cores — raise it on a real
+  //    cluster.
+  //  - HammingLocalMinRows: corpora at or below this row count use the
+  //    relational join (codegen, AQE, no sampling pass); larger ones use
+  //    the partition-local popcount engine with sampled-occupancy
+  //    planning.
+  //  - HammingMaxBucketRows: hard cap on one bucket's rows in the local
+  //    engine (the run buffer is two primitive arrays of this length; a
+  //    run this hot means the products estimate was evaded — fail loud,
+  //    not OOM).
+  //  - HammingOversplit: partition-count multiplier for the local
+  //    engine's bucket-keyed repartition. Product mass is bucket-skewed,
+  //    so at exactly cores=partitions the hottest partition straggles;
+  //    4× oversplit measured TWICE at sf100/32 threads: round 10 saw
+  //    183-152 s vs ~201 s (~10-20%), and the round-13 A/B (one JVM per
+  //    leg, steal-stamped: 2030 vs 6359 jiffies) read 179 s vs 289 s.
+  //    When SET, this conf wins everywhere. When UNSET (round 14):
+  //    pairsWithinAdaptive DERIVES the factor from the sampled
+  //    bucket-mass distribution it already measures (deriveOversplit),
+  //    and a direct pairsWithinLocal call — which has no sample — keeps
+  //    the measured default 4. Output is partitioning-blind either way
+  //    (canonical emission, spec-gated).
 
   /** Per-TASK overhead expressed in bucket-product equivalents for the
     * oversplit makespan model: the popcount loop enumerates ~4·10⁸
@@ -199,7 +194,7 @@ object HammingJoin {
 
   /** Heavy-tail allowance multiplied onto the SAMPLED hottest-bucket
     * estimate (s_max/p is a floor — heavy tails hide from samples)
-    * before comparing against [[MaxBucketRowsKey]] at PLAN time: a
+    * before comparing against [[GraftConf.HammingMaxBucketRows]] at PLAN time: a
     * corpus whose sampled hottest bucket is already within this factor
     * of the run cap refuses before the join starts, instead of failing
     * the runtime abort after potentially long partial work. */
@@ -319,11 +314,11 @@ object HammingJoin {
   }
 
   /** Stats-planned exact Hamming pairs. Small corpora (≤
-    * [[LocalMinRowsKey]], default 100 000) take the relational join
-    * under the uniform model and [[MaxModeledCostKey]]. Larger corpora
+    * [[GraftConf.HammingLocalMinRows]], default 100 000) take the relational join
+    * under the uniform model and [[GraftConf.HammingMaxModeledCost]]. Larger corpora
     * are planned from MEASURED bucket occupancy ([[estimateProducts]]
     * on a sample) and run on the partition-local popcount engine,
-    * with a LOUD plan-time refusal over [[MaxProductsKey]] — never a
+    * with a LOUD plan-time refusal over [[GraftConf.HammingMaxProducts]] — never a
     * silent multi-hour join. The refusal message names the escapes;
     * the half-word recursion ([[pairsWithinHalved]]) is deliberately
     * NOT an automatic rung — it is exact and equality-gated, but
@@ -337,11 +332,8 @@ object HammingJoin {
                           df: DataFrame, idCol: String, fpCol: String,
                           maxDist: Int, n: Long,
                           pairsPerDoc: Double = 2.0): DataFrame = {
-    val localMin = spark.conf.getOption(LocalMinRowsKey)
-      .map(_.toLong).getOrElse(100000L)
-    if (n <= localMin) {
-      val budget = spark.conf.getOption(MaxModeledCostKey)
-        .map(_.toDouble).getOrElse(2e9)
+    if (n <= GraftConf.HammingLocalMinRows.get(spark)) {
+      val budget = GraftConf.HammingMaxModeledCost.get(spark)
       planStrategy(n, maxDist, budget, pairsPerDoc) match {
         case Left(msg) => throw new IllegalArgumentException(msg)
         case Right(k) => pairsWithin(df, idCol, fpCol, maxDist, k)
@@ -349,10 +341,8 @@ object HammingJoin {
     } else {
       requireLongIds(df, idCol, "pairsWithinAdaptive (local-engine regime)")
       val k = provisionBlocks(n, maxDist, pairsPerDoc = pairsPerDoc)
-      val budget = spark.conf.getOption(MaxProductsKey)
-        .map(_.toDouble).getOrElse(3e11)
-      val maxRun = spark.conf.getOption(MaxBucketRowsKey)
-        .map(_.toDouble).getOrElse(16000000.0)
+      val budget = GraftConf.HammingMaxProducts.get(spark)
+      val maxRun = GraftConf.HammingMaxBucketRows.get(spark).toDouble
       val occ = sampleOccupancy(df, idCol, fpCol, maxDist, k, n = n)
       val products = occ.products
       val hottest = occ.hottest
@@ -360,7 +350,7 @@ object HammingJoin {
         f"exact Hamming join over n=$n%d fingerprints at radius $maxDist " +
           f"measures ~$products%.2g bucket products (sampled occupancy, " +
           f"k=$k, hottest bucket ~$hottest%.2g rows) — over budget " +
-          f"$budget%.2g ($MaxProductsKey). Reduce the radius, pre-shard " +
+          f"$budget%.2g (${GraftConf.HammingMaxProducts.key}). Reduce the radius, pre-shard " +
           "the corpus, call pairsWithinHalved explicitly if the corpus's " +
           "half-distance distribution is benign, or raise the budget for " +
           "a larger cluster.")
@@ -373,14 +363,14 @@ object HammingJoin {
           f"exact Hamming join over n=$n%d fingerprints at radius " +
             f"$maxDist: sampled hottest bucket ~$hottest%.2g rows is " +
             f"within ${HotBucketTailAllowance}%.0f× of the " +
-            f"$maxRun%.2g-row run cap ($MaxBucketRowsKey) — and sampling " +
+            f"$maxRun%.2g-row run cap (${GraftConf.HammingMaxBucketRows.key}) — and sampling " +
             "floors heavy tails, so the runtime abort would likely fire " +
             "mid-join. Reduce the radius, pre-shard the corpus, or raise " +
             "the cap on a larger-memory cluster.")
       // oversplit: explicit conf wins; otherwise derive it from the
       // bucket-mass distribution this very sampling pass measured,
       // plus the exact index-row volume n·C(k,m) for the sort floor
-      val oversplit = spark.conf.getOption(OversplitKey).map(_.toInt)
+      val oversplit = GraftConf.HammingOversplit.getOption(spark)
         .getOrElse(deriveOversplit(occ.topMasses, occ.tailMass,
           spark.sessionState.conf.numShufflePartitions,
           indexRowsFor(n, maxDist, k)))
@@ -400,7 +390,7 @@ object HammingJoin {
     else Left(
       f"exact Hamming join over n=$n%d fingerprints at radius $maxDist " +
         f"models $c1%.2g index+candidate rows with best k=$k1 — over " +
-        f"budget $budget%.2g ($MaxModeledCostKey). Reduce the radius, " +
+        f"budget $budget%.2g (${GraftConf.HammingMaxModeledCost.key}). Reduce the radius, " +
         "pre-shard the corpus, call pairsWithinHalved explicitly if the " +
         "corpus's half-distance distribution is benign, or raise the " +
         "budget for a larger cluster.")
@@ -490,13 +480,13 @@ object HammingJoin {
     * (repartition by bucket key), one partition sort, zero joins.
     *
     * The run buffer holds one bucket (two primitive long arrays);
-    * [[MaxBucketRowsKey]] (default 16 M) fails loud if a bucket
+    * [[GraftConf.HammingMaxBucketRows]] (default 16 M) fails loud if a bucket
     * exceeds it — that regime means the [[estimateProducts]] gate was
     * bypassed, and the fix is radius/sharding, not a silent OOM.
     *
     * Parallelism follows the session's `spark.sql.shuffle.partitions`
     * (the right knob — a cluster sizes it to cores), multiplied by
-    * [[OversplitKey]]: the product mass is bucket-skewed, so at
+    * [[GraftConf.HammingOversplit]]: the product mass is bucket-skewed, so at
     * exactly cores=partitions the longest product-heavy partition can
     * straggle; measured at sf100/32 threads, 4× oversplit bought
     * ~10-20% (183-152 s vs ~201 s, run-to-run noise of the same
@@ -528,13 +518,11 @@ object HammingJoin {
     val L = layout(maxDist, blocks, width = 64)
     val oversplit =
       if (oversplitOverride > 0) oversplitOverride
-      else spark.conf.getOption(OversplitKey)
-        .map(_.toInt).getOrElse(OversplitDefault)
+      else GraftConf.HammingOversplit.get(spark)
     require(oversplit >= 1 && oversplit <= 64,
-      s"$OversplitKey must be in [1, 64], got $oversplit")
+      s"${GraftConf.HammingOversplit.key} must be in [1, 64], got $oversplit")
     val p = spark.sessionState.conf.numShufflePartitions * oversplit
-    val maxRun = spark.conf.getOption(MaxBucketRowsKey)
-      .map(_.toInt).getOrElse(16000000)
+    val maxRun = GraftConf.HammingMaxBucketRows.get(spark)
     val d = maxDist
     val k = L.k
     val offs = L.offsets
@@ -578,7 +566,7 @@ object HammingJoin {
               c += 1
               if (c > maxRun) throw new IllegalStateException(
                 s"Hamming index bucket (band=$band) exceeds $maxRun rows " +
-                  s"($MaxBucketRowsKey): the sampled-occupancy gate was " +
+                  s"(${GraftConf.HammingMaxBucketRows.key}): the sampled-occupancy gate was " +
                   "bypassed — reduce the radius or pre-shard the corpus")
             }
             ids = idB.result(); fps = fpB.result(); n = c; i = 0; j = 1

@@ -2,6 +2,7 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.engine.GraftConf
 
 /** Table-maintenance operators: MERGE upsert and small-file
   * compaction. Both are first-class jobs in a 100 TB pipeline — the
@@ -27,7 +28,7 @@ import org.apache.spark.sql.functions._
   * staging → live name, sidecar writes, manifest swap, GC) — so a
   * multi-hour 100 TB rewrite can never starve concurrent appenders
   * into lock-timeout failures. Read-modify-write commits (compaction,
-  * copy-on-write MERGE) get their lost-update protection from the
+  * replaceWhere, keyless DELETE/UPDATE) get their lost-update protection from the
   * OPTIMISTIC compare-and-swap in [[casRewrite]] instead of from lock
   * tenure; blind writes (publish = replace, append = commutative) never
   * needed tenure in the first place.
@@ -35,7 +36,7 @@ import org.apache.spark.sql.functions._
   * Superseded versions are garbage collected by AGE, not by commit
   * count: a commit records each newly-unreferenced directory's
   * supersession time in a tombstone marker, and only directories
-  * superseded longer than [[RetentionMsKey]] ago are deleted. The
+  * superseded longer than [[GraftConf.RetentionMs]] ago are deleted. The
   * pre-round-14 policy ("two versions retained") deleted version N−1's
   * data at version N+1's commit — at a per-micro-batch commit cadence
   * (the streaming MERGE sink) that window is SECONDS, and any
@@ -63,33 +64,19 @@ object AtomicPublish {
   // (exclusive-create), covers only the metadata window, and is the
   // single serialization point for every committer.
 
-  /** Conf: how long a committer waits for the cross-process lock before
-    * failing loudly (another publisher is mid-commit). */
-  val LockTimeoutMsKey = "spark.graft.manifest.lockTimeoutMs"
-  val LockTimeoutMsDefault = 60000L
-
-  /** Conf: lock age past which the holder is presumed dead (crashed
-    * mid-commit) and the lock may be broken. Live holders heartbeat, and
-    * since round 15 the lock spans only the METADATA window (rename +
-    * swap + GC), never a data rewrite. */
-  val LockStaleMsKey = "spark.graft.manifest.lockStaleMs"
-  val LockStaleMsDefault = 600000L
-
-  /** Conf: how long a SUPERSEDED data version stays on disk before GC
-    * may delete it — the reader-safety window AND the time-travel
-    * window. A reader that resolved the manifest at version N keeps
-    * scanning safely while any number of later commits land, as long as
-    * its scan finishes within this window of N's supersession; a
-    * [[readAt]] of version N stays valid on the same clock. Size it to
-    * the longest expected scan of the table; the storage bill is
-    * bounded by (commit rate × version size × retention) — every
-    * publish here is a FULL version, so minute-cadence sinks should
-    * keep this modest (the default retains ~10 one-minute commits),
-    * while slow-scan analytical tables should raise it. 0 restores
-    * delete-at-commit (only safe single-reader-single-writer, and
-    * forfeits time travel). */
-  val RetentionMsKey = "spark.graft.manifest.retentionMs"
-  val RetentionMsDefault = 600000L
+  // Retention (GraftConf.RetentionMs): how long a SUPERSEDED data
+  // version stays on disk before GC may delete it — the reader-safety
+  // window AND the time-travel window. A reader that resolved the
+  // manifest at version N keeps scanning safely while any number of
+  // later commits land, as long as its scan finishes within this window
+  // of N's supersession; a readAt of version N stays valid on the same
+  // clock. Size it to the longest expected scan of the table; the
+  // storage bill is bounded by (commit rate × version size ×
+  // retention) — every publish here is a FULL version, so
+  // minute-cadence sinks should keep this modest (the default retains
+  // ~10 one-minute commits), while slow-scan analytical tables should
+  // raise it. 0 restores delete-at-commit (only safe
+  // single-reader-single-writer, and forfeits time travel).
 
   /** FAULT-INJECTION SEAM, test-only: invoked at the start of every
     * commit's METADATA window (lock held, nothing swapped yet). The
@@ -211,9 +198,9 @@ object AtomicPublish {
     * lease is what makes the manifest read-modify-write safe when two
     * committers race — a scheduler retry or a backfill racing the
     * daily appender previously lost a segment silently (last manifest
-    * swap won). A held lock is waited on up to [[LockTimeoutMsKey]], then
+    * swap won). A held lock is waited on up to [[GraftConf.LockTimeoutMs]], then
     * the commit fails loudly; a lock whose mtime is older than
-    * [[LockStaleMsKey]] is presumed orphaned by a DEAD holder and
+    * [[GraftConf.LockStaleMs]] is presumed orphaned by a DEAD holder and
     * broken atomically ([[breakStaleLock]]). Staleness keys on mtime,
     * not creation, because a LIVE holder HEARTBEATS the lock (a daemon
     * thread re-touches it every staleMs/3). Since round 15 every data
@@ -234,10 +221,8 @@ object AtomicPublish {
                                (body: String => A): A = {
     val lockPath = new org.apache.hadoop.fs.Path(root, LockFile)
     val conf = spark.sparkContext.hadoopConfiguration
-    val timeoutMs = spark.conf.getOption(LockTimeoutMsKey)
-      .map(_.toLong).getOrElse(LockTimeoutMsDefault)
-    val staleMs = spark.conf.getOption(LockStaleMsKey)
-      .map(_.toLong).getOrElse(LockStaleMsDefault)
+    val timeoutMs = GraftConf.LockTimeoutMs.get(spark)
+    val staleMs = GraftConf.LockStaleMs.get(spark)
     val token = java.util.UUID.randomUUID().toString
     val deadline = System.currentTimeMillis() + timeoutMs
     var acquired = false
@@ -259,9 +244,9 @@ object AtomicPublish {
             if (System.currentTimeMillis() > deadline)
               throw new IllegalStateException(
                 s"manifest commit lock at $lockPath held past $timeoutMs ms " +
-                  s"($LockTimeoutMsKey): another publisher is committing this " +
+                  s"(${GraftConf.LockTimeoutMs.key}): another publisher is committing this " +
                   s"table — retry after it finishes, or if its holder is dead " +
-                  s"the lock breaks itself after $staleMs ms ($LockStaleMsKey)")
+                  s"the lock breaks itself after $staleMs ms (${GraftConf.LockStaleMs.key})")
             Thread.sleep(25)
         }
       }
@@ -320,7 +305,7 @@ object AtomicPublish {
     * no longer references; MUST run under the commit lock. Each
     * unreferenced `data-*` directory gets a tombstone marker stamping
     * its supersession time on first observation, and is deleted only
-    * once that stamp is older than [[RetentionMsKey]] — so a reader
+    * once that stamp is older than [[GraftConf.RetentionMs]] — so a reader
     * that resolved any earlier manifest keeps its data for at least the
     * retention window no matter how fast later commits land. Tombstones
     * are `_`-prefixed (invisible to parquet readers and source
@@ -333,8 +318,7 @@ object AtomicPublish {
                            fs: org.apache.hadoop.fs.FileSystem,
                            root: org.apache.hadoop.fs.Path,
                            live: Set[String]): Unit = {
-    val retentionMs = spark.conf.getOption(RetentionMsKey)
-      .map(_.toLong).getOrElse(RetentionMsDefault)
+    val retentionMs = GraftConf.RetentionMs.get(spark)
     val now = System.currentTimeMillis()
     val entries = fs.listStatus(root)
     val dirs = entries.filter(_.isDirectory).map(_.getPath.getName)
@@ -720,7 +704,7 @@ object AtomicPublish {
     * needs at 100 TB.
     *
     * Schema contract (round-15 evolution support): the source may ADD
-    * columns only when [[MergeInto.AllowEvolutionKey]] is set (readers
+    * columns only when [[GraftConf.AllowSchemaEvolution]] is set (readers
     * null-backfill older segments); a source MISSING existing columns
     * is refused loudly — silently dropping a column under merge
     * semantics corrupts every non-matched row. All upsert segments of
@@ -1016,11 +1000,9 @@ object AtomicPublish {
     val added = stagedFields.filterNot(n =>
       currentNames.contains(n.toLowerCase))
     if (added.nonEmpty) {
-      val allow = spark.conf.getOption(MergeInto.AllowEvolutionKey)
-        .exists(_.toBoolean)
-      require(allow,
+      require(GraftConf.AllowSchemaEvolution.get(spark),
         s"upsert into $tablePath: source batch ADDS column(s) " +
-          s"${added.mkString(", ")}; set ${MergeInto.AllowEvolutionKey}=true " +
+          s"${added.mkString(", ")}; set ${GraftConf.AllowSchemaEvolution.key}=true " +
           "to accept schema evolution (existing rows read back NULL there)")
     }
   }
@@ -1070,8 +1052,7 @@ object AtomicPublish {
     * metadata-only move. A holder that crashes mid-rewrite leaks its
     * staging directory; entry sweeps day-old leftovers. */
   private[graft] def casRewrite(spark: SparkSession, tablePath: String,
-                                maxAttempts: Int, minSegments: Int,
-                                fold: Boolean = true)
+                                maxAttempts: Int, minSegments: Int)
                                (write: (Seq[String], String) => Unit): CompactOutcome = {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1: $maxAttempts")
     val conf = spark.sparkContext.hadoopConfiguration
@@ -1108,12 +1089,7 @@ object AtomicPublish {
           // must never forget an applied (appId, version) or a sink
           // replay after the fold would re-land its batch
           writeTxnMarks(fs, root, dataDir, txnMarks(spark, tablePath, observed))
-          // `fold` declares the commit content-preserving; a cow-mode
-          // MERGE/DELETE/SYNC rewrite CHANGES rows and must not claim
-          // it — pre-round-16 every casRewrite stamped fold, so the
-          // change feed silently diffed THROUGH a cow merge emitting
-          // zero change rows for rows that actually changed
-          swapManifest(fs, conf, root, dataDir, token, fold = fold)
+          swapManifest(fs, conf, root, dataDir, token, fold = true)
           gcSuperseded(spark, fs, root, live = Set(dataDir))
           true
         } else false
@@ -1602,7 +1578,7 @@ object AtomicPublish {
     * Schema evolution: segments are union'd BY NAME with null backfill
     * for columns a segment predates; column order is first-appearance
     * (base segment's order, then additions in commit order). Only
-    * reachable when [[MergeInto.AllowEvolutionKey]] admitted the
+    * reachable when [[GraftConf.AllowSchemaEvolution]] admitted the
     * evolution at write time. */
   def readOver(spark: SparkSession, tablePath: String,
                segs: Seq[String]): DataFrame = {
@@ -2172,7 +2148,7 @@ object AtomicPublish {
       throw new IllegalStateException(
         s"time travel: version $version of $tablePath is not in the " +
           s"version log (latest: ${latest.getOrElse("none")}) — either it " +
-          s"never committed or it aged past $RetentionMsKey")
+          s"never committed or it aged past ${GraftConf.RetentionMs.key}")
     }
     val in = fs.open(vp)
     val segs =
@@ -2187,12 +2163,12 @@ object AtomicPublish {
     if (missing.nonEmpty) throw new IllegalStateException(
       s"time travel: version $version of $tablePath references " +
         s"${missing.mkString(", ")}, already garbage-collected — raise " +
-        s"$RetentionMsKey to lengthen the travel window")
+        s"${GraftConf.RetentionMs.key} to lengthen the travel window")
     segs
   }
 
   /** Read the table AS OF a committed version — valid within the
-    * retention window ([[RetentionMsKey]]; superseded data directories
+    * retention window ([[GraftConf.RetentionMs]]; superseded data directories
     * are kept exactly that long, so the bytes are already there).
     * Reconciles upsert segments exactly like [[read]]: a version
     * captured mid-merge-on-read reproduces that moment's merged view.
@@ -2221,7 +2197,7 @@ object AtomicPublish {
       s"timestampAsOf: ${java.time.Instant.ofEpochMilli(epochMs)} predates " +
         s"the oldest retained commit of $tablePath " +
         s"(${java.time.Instant.ofEpochMilli(entries.head._2)}, version " +
-        s"${entries.head._1}) — older state aged past $RetentionMsKey")
+        s"${entries.head._1}) — older state aged past ${GraftConf.RetentionMs.key}")
     if (epochMs > entries.last._2) throw new IllegalArgumentException(
       s"timestampAsOf: ${java.time.Instant.ofEpochMilli(epochMs)} is after " +
         s"the newest commit of $tablePath " +
@@ -2678,7 +2654,7 @@ object AtomicPublish {
     * all landed inside the retention window, keeps its superseded
     * `data-*` directories until someone commits again. This runs the
     * same tombstone-and-reap pass under the commit lock without
-    * publishing anything. Honors [[RetentionMsKey]] — a vacuum cannot
+    * publishing anything. Honors [[GraftConf.RetentionMs]] — a vacuum cannot
     * delete data a lagging reader is still entitled to. */
   def vacuum(spark: SparkSession, tablePath: String): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
@@ -2714,29 +2690,6 @@ object AtomicPublish {
 
 object MergeInto {
 
-  /** Conf: MERGE write strategy. `mor` (merge-on-read, default) lands
-    * each source batch as an upsert SEGMENT — per-commit cost ∝ the
-    * batch — and defers reconciliation to read time / the next fold;
-    * `cow` (copy-on-write) rewrites the whole reconciled table per
-    * merge under the optimistic CAS — per-commit cost ∝ the table, but
-    * reads stay join-free. The lakehouse trade, selectable per
-    * session. */
-  val ModeKey = "spark.graft.merge.mode"
-  val ModeDefault = "mor"
-
-  /** Conf: fold (compact) a merge-on-read table once its segment count
-    * reaches this, amortizing reconciliation cost across merges the
-    * way an LSM folds levels. 0 disables auto-folding (explicit
-    * [[compactMerged]] only). */
-  val CompactAfterKey = "spark.graft.merge.compactAfterSegments"
-  val CompactAfterDefault = 16
-
-  /** Conf: accept source batches that ADD columns (readers
-    * null-backfill rows that predate them). Off by default — silent
-    * schema drift is a pipeline bug more often than a feature. Dropped
-    * columns are always refused loudly. */
-  val AllowEvolutionKey = "spark.graft.merge.allowSchemaEvolution"
-
   /** SCD-1 MERGE INTO: rows of `source` win on key match (UPDATE),
     * land on no match (INSERT); unmatched `target` rows pass through.
     * Schemas must be union-compatible by name.
@@ -2754,68 +2707,32 @@ object MergeInto {
       .join(source.select(keys.map(col): _*).distinct(), keys, "left_anti")
       .unionByName(source)
 
-  /** MERGE-and-commit against a published table.
-    *
-    * Default (merge-on-read, [[ModeKey]]=`mor`): the batch lands as an
+  /** MERGE-and-commit against a published table: the batch lands as an
     * UPSERT SEGMENT ([[AtomicPublish.appendUpsertSegment]]) — write ∝
     * THE BATCH, the commit lock held only for the manifest CAS — and
     * readers reconcile (latest upsert segment wins per key) until
     * [[compactMerged]] folds the segments back to one base, which
-    * happens automatically at [[CompactAfterKey]] segments. This is
-    * the shape that keeps a per-micro-batch MERGE sink's recurring
-    * cost FLAT as the table grows to 100 TB; the pre-round-15
-    * copy-on-write default re-wrote the ENTIRE table inside the commit
-    * lock on every merge — recurring cost ∝ corpus, and a long merge
-    * starved concurrent appenders into lock timeouts.
+    * happens automatically at [[GraftConf.MergeCompactAfter]]
+    * pending segments. This is the shape that keeps a per-micro-batch
+    * MERGE sink's recurring cost FLAT as the table grows to 100 TB; the
+    * pre-round-15 copy-on-write default re-wrote the ENTIRE table inside
+    * the commit lock on every merge — recurring cost ∝ corpus, and a
+    * long merge starved concurrent appenders into lock timeouts.
     *
-    * Copy-on-write ([[ModeKey]]=`cow`) still exists for read-hot
-    * tables: the reconciled table + batch is rewritten under the
-    * optimistic CAS ([[AtomicPublish.casRewrite]]) — the rewrite holds
-    * NO lock, racing appends abort the swap and the merge retries
-    * against the new list, so the round-14 lost-update protection
-    * survives without the round-14 lock tenure.
-    *
-    * Either way a reader concurrent with the merge sees the pre-merge
-    * or post-merge table in full, never a mix. */
+    * A reader concurrent with the merge sees the pre-merge or
+    * post-merge table in full, never a mix. */
   def upsertInto(spark: SparkSession, tablePath: String, source: DataFrame,
                  keys: Seq[String]): DataFrame = {
-    val mode = spark.conf.getOption(ModeKey).getOrElse(ModeDefault)
-    mode match {
-      case "mor" =>
-        // batch-sized staged segment: a driver-local MERGE source (an
-        // MV refresh's ≤inListMax recomputed groups) otherwise
-        // parallelizes to defaultParallelism write tasks — 32 files +
-        // 32 writer inits for a handful of rows, paid again by every
-        // downstream reconcile read of the segment (guide §6). Size-
-        // conditional: a large batch keeps its write parallelism.
-        AtomicPublish.appendUpsertSegment(spark, tablePath, keys) { p =>
-          graft.engine.Sizing.coalesceForStaging(source).write.parquet(p)
-        }
-        maybeAutoFold(spark, tablePath)
-      case "cow" =>
-        val outcome = AtomicPublish.casRewrite(spark, tablePath,
-          maxAttempts = 5, minSegments = 1, fold = false) { (paths, staging) =>
-          val dirs = paths.map(p => p.substring(p.lastIndexOf('/') + 1))
-          val target = AtomicPublish.readOver(spark, tablePath, dirs)
-          val aligned = alignForEvolution(spark, tablePath, target, source)
-          upsert(aligned._1, aligned._2, keys).write.parquet(staging)
-        }
-        outcome match {
-          case AtomicPublish.CompactOutcome.LostRace =>
-            throw new IllegalStateException(
-              s"upsertInto(cow) at $tablePath: 5 attempts each found the " +
-                "segment list changed under the rewrite — the table is being " +
-                "appended faster than a copy-on-write merge can land; use " +
-                s"$ModeKey=mor for this workload")
-          case AtomicPublish.CompactOutcome.AlreadyCompact =>
-            throw new IllegalStateException(
-              s"upsertInto: no published version (MANIFEST) at $tablePath")
-          case _ => ()
-        }
-      case other =>
-        throw new IllegalArgumentException(
-          s"$ModeKey must be `mor` or `cow`, got `$other`")
+    // batch-sized staged segment: a driver-local MERGE source (an
+    // MV refresh's ≤inListMax recomputed groups) otherwise
+    // parallelizes to defaultParallelism write tasks — 32 files +
+    // 32 writer inits for a handful of rows, paid again by every
+    // downstream reconcile read of the segment (guide §6). Size-
+    // conditional: a large batch keeps its write parallelism.
+    AtomicPublish.appendUpsertSegment(spark, tablePath, keys) { p =>
+      graft.engine.Sizing.coalesceForStaging(source).write.parquet(p)
     }
+    maybeAutoFold(spark, tablePath)
     AtomicPublish.read(spark, tablePath)
   }
 
@@ -2828,16 +2745,10 @@ object MergeInto {
     * location is the natural choice), version = `batchId`. A replay
     * returns false without staging any data; auto-fold fires exactly
     * like [[upsertInto]], and the fold CARRIES the txn marks forward,
-    * so a replay arriving after a compaction is still recognized.
-    * Merge-on-read only: `cow` has no per-batch segment to carry the
-    * mark — loud, not silently non-idempotent. */
+    * so a replay arriving after a compaction is still recognized. */
   def upsertIntoTxn(spark: SparkSession, tablePath: String,
                     source: DataFrame, keys: Seq[String],
                     appId: String, version: Long): Boolean = {
-    val mode = spark.conf.getOption(ModeKey).getOrElse(ModeDefault)
-    require(mode == "mor",
-      s"upsertIntoTxn requires $ModeKey=mor (exactly-once marks ride " +
-        "merge-on-read segments); cow rewrites have no per-batch segment")
     val applied = AtomicPublish.appendUpsertSegmentTxn(
       spark, tablePath, keys, appId, version)(p =>
         graft.engine.Sizing.coalesceForStaging(source).write.parquet(p))
@@ -2847,59 +2758,29 @@ object MergeInto {
   }
 
   /** Row-level DELETE by key against a published table — the
-    * merge-on-read twin of [[upsertInto]].
-    *
-    * Default ([[ModeKey]]=`mor`): the distinct keys of `keysSource`
-    * land as a DELETE TOMBSTONE segment
+    * merge-on-read twin of [[upsertInto]]: the distinct keys of
+    * `keysSource` land as a DELETE TOMBSTONE segment
     * ([[AtomicPublish.appendDeleteSegment]]) — write ∝ THE DELETED-KEY
     * SET, the commit lock held only for the manifest CAS. Readers drop
     * any earlier row the tombstone claims (a LATER upsert re-inserts
     * the key); [[compactMerged]] folds tombstones away, auto-firing at
-    * [[CompactAfterKey]] like the upsert path. A 1-row delete against
-    * a 100 TB table writes one tiny parquet file — the Iceberg
-    * equality-delete shape; the pre-tombstone alternative (rewrite the
-    * table minus the rows) costs the corpus per delete.
-    *
-    * Copy-on-write ([[ModeKey]]=`cow`): the reconciled table MINUS the
-    * keys is rewritten under the optimistic CAS — no lock tenure,
-    * racing appends abort the swap and the delete retries.
+    * [[GraftConf.MergeCompactAfter]] like the upsert path.
+    * A 1-row delete against a 100 TB table writes one tiny parquet
+    * file — the Iceberg equality-delete shape; the pre-tombstone
+    * alternative (rewrite the table minus the rows) costs the corpus
+    * per delete.
     *
     * Rows with NULL merge keys are never deleted (SQL join semantics),
     * matching [[upsertInto]]'s never-overridden contract for them. */
   def deleteFrom(spark: SparkSession, tablePath: String,
                  keysSource: DataFrame, keys: Seq[String]): DataFrame = {
     val tombstones = keysSource.select(keys.map(col): _*).distinct()
-    val mode = spark.conf.getOption(ModeKey).getOrElse(ModeDefault)
-    mode match {
-      case "mor" =>
-        // tombstone sets are key-sized; same writer-sizing rule as the
-        // upsert staging above
-        AtomicPublish.appendDeleteSegment(spark, tablePath, keys) { p =>
-          graft.engine.Sizing.coalesceForStaging(tombstones).write.parquet(p)
-        }
-        maybeAutoFold(spark, tablePath)
-      case "cow" =>
-        val outcome = AtomicPublish.casRewrite(spark, tablePath,
-          maxAttempts = 5, minSegments = 1, fold = false) { (paths, staging) =>
-          val dirs = paths.map(p => p.substring(p.lastIndexOf('/') + 1))
-          val target = AtomicPublish.readOver(spark, tablePath, dirs)
-          target.join(tombstones, keys, "left_anti").write.parquet(staging)
-        }
-        outcome match {
-          case AtomicPublish.CompactOutcome.LostRace =>
-            throw new IllegalStateException(
-              s"deleteFrom(cow) at $tablePath: 5 attempts each found the " +
-                "segment list changed under the rewrite; use " +
-                s"$ModeKey=mor for this workload")
-          case AtomicPublish.CompactOutcome.AlreadyCompact =>
-            throw new IllegalStateException(
-              s"deleteFrom: no published version (MANIFEST) at $tablePath")
-          case _ => ()
-        }
-      case other =>
-        throw new IllegalArgumentException(
-          s"$ModeKey must be `mor` or `cow`, got `$other`")
+    // tombstone sets are key-sized; same writer-sizing rule as the
+    // upsert staging above
+    AtomicPublish.appendDeleteSegment(spark, tablePath, keys) { p =>
+      graft.engine.Sizing.coalesceForStaging(tombstones).write.parquet(p)
     }
+    maybeAutoFold(spark, tablePath)
     AtomicPublish.read(spark, tablePath)
   }
 
@@ -2926,8 +2807,8 @@ object MergeInto {
     * [[upsertInto]] — so the write cost is ∝ THE MATCHED ROWS under
     * merge-on-read (one segment + a manifest CAS; a 3-row update
     * against a 100 TB table writes 3 rows), the change feed sees the
-    * commit as `update_postimage` rows for free, auto-fold and both
-    * `mor`/`cow` modes apply unchanged. The snapshot scan that turns
+    * commit as `update_postimage` rows for free, and auto-fold
+    * applies unchanged. The snapshot scan that turns
     * the predicate into rows is predicate-pushed and zonemap-pruned
     * ([[AtomicPublish.read]]); it is the irreducible cost of finding
     * what to update. Read-committed like [[deleteWhere]]: rows landing
@@ -2935,7 +2816,7 @@ object MergeInto {
     *
     * Refused loudly: SET names a column the table lacks (UPDATE never
     * adds columns — that is schema evolution, [[upsertInto]] +
-    * [[AllowEvolutionKey]]'s job) and SET touches a merge key (under
+    * [[GraftConf.AllowSchemaEvolution]]'s job) and SET touches a merge key (under
     * upsert semantics the old row would stay live — that is an
     * INSERT + DELETE, not an UPDATE). A predicate matching nothing
     * commits nothing — no empty segment, no manifest traffic. */
@@ -2950,7 +2831,7 @@ object MergeInto {
     require(unknown.isEmpty,
       s"updateWhere at $tablePath: SET names unknown column(s) " +
         s"${unknown.mkString(", ")} — UPDATE never adds columns; use " +
-        s"upsertInto with $AllowEvolutionKey for schema evolution")
+        s"upsertInto with ${GraftConf.AllowSchemaEvolution.key} for schema evolution")
     val keyHit = set.keys.filter(n => keys.exists(_.equalsIgnoreCase(n)))
     require(keyHit.isEmpty,
       s"updateWhere at $tablePath: SET touches merge key(s) " +
@@ -2981,53 +2862,22 @@ object MergeInto {
     * is the KEY-COLUMN scan that finds stale keys (column-pruned —
     * the irreducible cost of "not matched by source"). Read-committed
     * like [[deleteWhere]]: rows landing concurrently with the
-    * stale-key scan are not covered by the tombstone.
-    *
-    * Copy-on-write: one CAS rewrite to `source ∪ null-key rows` —
-    * cost ∝ the corpus, reads stay join-free; same trade as every
-    * other cow path. */
+    * stale-key scan are not covered by the tombstone. */
   def syncInto(spark: SparkSession, tablePath: String, source: DataFrame,
                keys: Seq[String]): DataFrame = {
     require(keys.nonEmpty, s"syncInto at $tablePath: empty key list")
     val anyKeyNull = keys.map(col(_).isNull).reduce(_ || _)
-    val mode = spark.conf.getOption(ModeKey).getOrElse(ModeDefault)
-    mode match {
-      case "mor" =>
-        val srcKeys = source.select(keys.map(col): _*)
-          .filter(!anyKeyNull).distinct()
-        val stale = AtomicPublish.read(spark, tablePath)
-          .select(keys.map(col): _*).filter(!anyKeyNull).distinct()
-          .join(srcKeys, keys, "left_anti")
-        AtomicPublish.appendSegments(spark, tablePath, Seq(
-          (Some(("upsert", keys)),
-            (p: String) => source.write.parquet(p)),
-          (Some(("delete", keys)),
-            (p: String) => stale.write.parquet(p))))
-        maybeAutoFold(spark, tablePath)
-      case "cow" =>
-        val outcome = AtomicPublish.casRewrite(spark, tablePath,
-          maxAttempts = 5, minSegments = 1, fold = false) { (paths, staging) =>
-          val dirs = paths.map(p => p.substring(p.lastIndexOf('/') + 1))
-          val target = AtomicPublish.readOver(spark, tablePath, dirs)
-          val aligned = alignForEvolution(spark, tablePath, target, source)
-          aligned._1.filter(anyKeyNull).unionByName(aligned._2)
-            .write.parquet(staging)
-        }
-        outcome match {
-          case AtomicPublish.CompactOutcome.LostRace =>
-            throw new IllegalStateException(
-              s"syncInto(cow) at $tablePath: 5 attempts each found the " +
-                "segment list changed under the rewrite; use " +
-                s"$ModeKey=mor for this workload")
-          case AtomicPublish.CompactOutcome.AlreadyCompact =>
-            throw new IllegalStateException(
-              s"syncInto: no published version (MANIFEST) at $tablePath")
-          case _ => ()
-        }
-      case other =>
-        throw new IllegalArgumentException(
-          s"$ModeKey must be `mor` or `cow`, got `$other`")
-    }
+    val srcKeys = source.select(keys.map(col): _*)
+      .filter(!anyKeyNull).distinct()
+    val stale = AtomicPublish.read(spark, tablePath)
+      .select(keys.map(col): _*).filter(!anyKeyNull).distinct()
+      .join(srcKeys, keys, "left_anti")
+    AtomicPublish.appendSegments(spark, tablePath, Seq(
+      (Some(("upsert", keys)),
+        (p: String) => source.write.parquet(p)),
+      (Some(("delete", keys)),
+        (p: String) => stale.write.parquet(p))))
+    maybeAutoFold(spark, tablePath)
     AtomicPublish.read(spark, tablePath)
   }
 
@@ -3143,46 +2993,16 @@ object MergeInto {
     }.map(split).getOrElse(Nil)
   }
 
-  /** Apply the evolution contract to a (target, source) pair for the
-    * copy-on-write path: refuse dropped columns loudly; null-backfill
-    * the target for added ones when [[AllowEvolutionKey]] admits them.
-    * (The merge-on-read path enforces the same contract at segment
-    * commit — AtomicPublish.checkUpsertContract.) */
-  private def alignForEvolution(spark: SparkSession, tablePath: String,
-                                target: DataFrame, source: DataFrame)
-      : (DataFrame, DataFrame) = {
-    val tNames = target.schema.fieldNames
-    val sNames = source.schema.fieldNames
-    val dropped = tNames.filterNot(n => sNames.exists(_.equalsIgnoreCase(n)))
-    require(dropped.isEmpty,
-      s"upsert into $tablePath: source batch is MISSING existing column(s) " +
-        s"${dropped.mkString(", ")} — align the source schema")
-    val added = source.schema.fields.filterNot(f =>
-      tNames.exists(_.equalsIgnoreCase(f.name)))
-    if (added.isEmpty) (target, source)
-    else {
-      val allow = spark.conf.getOption(AllowEvolutionKey).exists(_.toBoolean)
-      require(allow,
-        s"upsert into $tablePath: source batch ADDS column(s) " +
-          s"${added.map(_.name).mkString(", ")}; set $AllowEvolutionKey=true " +
-          "to accept schema evolution")
-      val widened = added.foldLeft(target)((df, f) =>
-        df.withColumn(f.name, lit(null).cast(f.dataType)))
-      (widened, source)
-    }
-  }
-
   /** The merge paths' auto-fold trigger: fires [[compactMerged]] when
     * the PENDING merge-on-read segment count (upsert + delete
-    * sidecars) reaches [[CompactAfterKey]]. Pending segments — not
+    * sidecars) reaches [[GraftConf.MergeCompactAfter]]. Pending segments — not
     * total segments — are what read-time reconciliation pays for; the
     * pre-round-16 total-count trigger folded a 16-segment CLUSTERED
     * table on its very first merge, flattening the optimize layout and
     * re-paying the corpus per merge. Best-effort by design: a
     * LostRace just defers to the next merge. */
   private def maybeAutoFold(spark: SparkSession, tablePath: String): Unit = {
-    val foldAt = spark.conf.getOption(CompactAfterKey)
-      .map(_.toInt).getOrElse(CompactAfterDefault)
+    val foldAt = GraftConf.MergeCompactAfter.get(spark)
     if (foldAt > 0) {
       val segs = AtomicPublish.currentSegments(spark, tablePath)
       if (AtomicPublish.upsertSidecarsFor(spark, tablePath, segs).size
@@ -3248,7 +3068,7 @@ object MergeInto {
     * false` on the commit: a row-changing rewrite must not claim
     * content preservation, so the change feed refuses across it
     * loudly instead of silently diffing through (same contract as
-    * [[replaceWhere]] / cow-mode DML). */
+    * [[replaceWhere]]). */
   private def cowRewriteMatching(spark: SparkSession, tablePath: String,
                                  predicate: org.apache.spark.sql.Column,
                                  maxAttempts: Int, what: String)

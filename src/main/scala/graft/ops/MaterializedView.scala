@@ -63,8 +63,7 @@ object MaterializedView {
   /** Driver-side ceiling for shipping the affected-group set as a
     * literal IN filter (pushes into the scan → zonemap + row-group
     * pruning). Bigger sets fall back to a broadcast semi-join. */
-  val InListMaxKey = "spark.graft.mv.inListMax"
-  val InListMaxDefault = 1000
+  val InListMax = 1000
 
   /** One aggregate column: `name` is the output column, `expr` a
     * deterministic SQL aggregate over the source's columns. */
@@ -213,7 +212,7 @@ object MaterializedView {
     * (`spark.newSession`), which shares the data but not the conf. AQE
     * materializes every exchange as its own scheduler job round to
     * re-optimize downstream stages; for the refresh's BOUNDED queries
-    * (outputs conf-capped at [[InListMaxKey]] rows, inputs ∝ the
+    * (outputs capped at [[InListMax]] rows, inputs ∝ the
     * change batch by construction) those rounds buy nothing — there is
     * no skew to split and nothing worth coalescing in a ≤1000-row
     * shuffle — while each round costs a job launch, the dominant term
@@ -303,8 +302,6 @@ object MaterializedView {
         .map(d => AtomicPublish.committedScan(spark, meta.sourceTable, Seq(d))
           .select(meta.keys.map(col): _*))
         .reduce(_ unionByName _).filter(keyNotNull).distinct())
-    val inListMax0 = spark.conf.getOption(InListMaxKey)
-      .map(_.toInt).getOrElse(InListMaxDefault)
     val fromSnapshot = AtomicPublish.readAt(spark, meta.sourceTable,
       meta.sourceVersion)
     // small single-column key sets ship as a literal IN: the probe then
@@ -315,12 +312,12 @@ object MaterializedView {
     val changedKeyRows =
       if (meta.keys.size == 1 && changedKeys.nonEmpty)
         graft.engine.JobLabel(spark, "mv refresh: changed keys") {
-          withoutAqe(spark) { changedKeys.get.limit(inListMax0 + 1).collect() }
+          withoutAqe(spark) { changedKeys.get.limit(InListMax + 1).collect() }
         }
       else Array.empty[org.apache.spark.sql.Row]
     val preGroups = withDims(spark,
       if (changedKeys.isEmpty) fromSnapshot.limit(0)
-      else if (meta.keys.size == 1 && changedKeyRows.length <= inListMax0) {
+      else if (meta.keys.size == 1 && changedKeyRows.length <= InListMax) {
         if (changedKeyRows.isEmpty) fromSnapshot.limit(0)
         else fromSnapshot.filter(col(meta.keys.head)
           .isin(changedKeyRows.map(_.get(0)).toIndexedSeq: _*))
@@ -330,8 +327,6 @@ object MaterializedView {
       .select(gCols: _*)
     val affected = postGroups.map(_.unionByName(preGroups))
       .getOrElse(preGroups).distinct()
-    val inListMax = spark.conf.getOption(InListMaxKey)
-      .map(_.toInt).getOrElse(InListMaxDefault)
     // ONE bounded collect replaces the pre-round-16 null-check count +
     // count + collect triple (three actions, each re-running the feed's
     // broadcast builds — at ≤1000 group rows the driver round-trip is
@@ -342,12 +337,12 @@ object MaterializedView {
     // the big-refresh fallback below then re-derives it distributed.
     val affectedRows = graft.engine.JobLabel(spark,
       "mv refresh: affected groups") {
-      withoutAqe(spark) { affected.limit(inListMax + 1).collect() }
+      withoutAqe(spark) { affected.limit(InListMax + 1).collect() }
     }
     if (affectedRows.isEmpty)
       { writeMeta(spark, mvPath, meta.copy(sourceVersion = toV))
         return RefreshStats(meta.sourceVersion, toV, 0L, 0L, 0L) }
-    if (affectedRows.length <= inListMax) {
+    if (affectedRows.length <= InListMax) {
       // the COMPLETE affected-group set is in hand: null-check it
       // driver-side, slice the source by literal IN (single group col —
       // pushes to the scan, zonemaps/row-groups prune) or a broadcast
@@ -371,7 +366,7 @@ object MaterializedView {
         } else source.join(broadcast(affectedLocal), meta.groupCols, "left_semi")
       val recomputed = computeGroups(sourceSlice, meta.groupCols, meta.aggs)
       // ONE action executes the recompute: the result is ≤ nAffected ≤
-      // inListMax group rows (key + a few aggregates) — the same
+      // InListMax group rows (key + a few aggregates) — the same
       // conf-capped bound that admitted the IN-list. The merge then
       // upserts a LOCAL relation, so the commit's staging write neither
       // re-scans the source nor re-builds its broadcasts.
@@ -396,7 +391,7 @@ object MaterializedView {
       RefreshStats(meta.sourceVersion, toV, nAffected,
         recRows.length.toLong, vanishedRows.length.toLong)
     } else {
-      // BIG-REFRESH fallback (> inListMax affected groups): the
+      // BIG-REFRESH fallback (> InListMax affected groups): the
       // pre-round-16 distributed path — counts and joins over a cached
       // affected set; the extra jobs are noise once the recompute
       // itself is group-set-sized

@@ -3,6 +3,7 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.JobLabel
 
 /** PRODUCT-QUANTIZED similarity search (IVF-ADC's coding half) — the
   * memory-bounded ANN regime the flat family can't reach: `sim_search`
@@ -49,11 +50,10 @@ import org.apache.spark.sql.functions._
   */
 object PqSearch {
 
-  /** Conf: fit-sample ceiling per codebook (the same economics as
-    * [[AnnSearch.IvfFitSampleKey]] — Lloyd on a hash-sampled subset;
+  /** Fit-sample ceiling per codebook (the same economics as
+    * [[AnnSearch.IvfFitSample]] — Lloyd on a hash-sampled subset;
     * codebooks are 16 × 8 doubles, the fit never needs the corpus). */
-  val PqFitSampleKey = "spark.graft.pq.fitSample"
-  val PqFitSampleDefault = 100000L
+  val PqFitSample = 100000L
 
   /** `codebooks(j)(c)` = centroid `c` of subspace `j` (dsub doubles). */
   final case class PqModel(m: Int, dsub: Int, k: Int,
@@ -69,26 +69,27 @@ object PqSearch {
   }
 
   /** Train `m` per-subspace codebooks (seeded, hash-sampled) on the
-    * normalized vectors. Deterministic per (data, m, k, seed). */
+    * normalized vectors. Deterministic per (data, m, k, seed). Its jobs
+    * carry `pq codebooks:` labels. */
   def fit(spark: SparkSession, emb: DataFrame, idCol: String, eCol: String,
           m: Int = 16, k: Int = 32, seed: Long = 42L,
           cacheKey: Option[String] = None): PqModel = {
     def doFit(): PqModel = {
       import org.apache.spark.ml.functions.array_to_vector
-      val dim = emb.select(size(col(eCol))).head.getInt(0)
+      val dim = JobLabel(spark, "pq codebooks: dimension") {
+        emb.select(size(col(eCol))).head.getInt(0)
+      }
       require(dim % m == 0, s"PQ: dim $dim not divisible by m=$m")
       val dsub = dim / m
-      val cap = spark.conf.getOption(PqFitSampleKey)
-        .map(_.toLong).getOrElse(PqFitSampleDefault)
-      val n = emb.count()
-      val mod = math.max(1L, math.round(n / math.max(1.0, cap.toDouble)))
+      val n = JobLabel(spark, "pq codebooks: sample count")(emb.count())
+      val mod = math.max(1L, math.round(n / math.max(1.0, PqFitSample.toDouble)))
       val base = emb.select(col(idCol).as("id"),
           normalized(col(eCol)).as("en"))
       val sample =
         (if (mod <= 1L) base
          else base.filter(pmod(xxhash64(col("id")), lit(mod)) === 0))
           .cache()
-      try {
+      try JobLabel(spark, "pq codebooks: k-means fit") {
         val books = (0 until m).map { j =>
           val sub = sample.select(array_to_vector(
             slice(col("en"), j * dsub + 1, dsub)).as("fv"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import graft.functions.NearestCells
+import graft.engine.GraftConf
 
 /** K-means-blocked semantic near-duplicate pairs — the SCALE regime of
   * the SemDeDup recipe (cluster-then-prune over embedding cosine,
@@ -42,66 +43,54 @@ import graft.functions.NearestCells
   */
 object SemDedup {
 
-  /** Conf: target rows per cell — k is derived as ceil(n/targetCell).
-    * Smaller cells shift cost from the pair scan to assignment;
-    * the optimum is near sqrt(n·dim / pair-cost-ratio), but the flat
-    * default keeps BOTH terms linear-in-n and is within ~2× of optimal
-    * across the graded decades (measured, BASELINE.md round 11). */
-  val TargetCellKey = "spark.graft.semdedup.targetCell"
-  val TargetCellDefault = 1024
+  // Session knobs, read through GraftConf:
+  //  - SemDedupTargetCell: target rows per cell — k is derived as
+  //    ceil(n/targetCell). Smaller cells shift cost from the pair scan
+  //    to assignment; the optimum is near sqrt(n·dim / pair-cost-ratio),
+  //    but the flat default keeps BOTH terms linear-in-n and is within
+  //    ~2× of optimal across the graded decades (measured, BASELINE.md
+  //    round 11).
+  //  - SemDedupMaxCellRows: hard cap on one cell's rows in the local
+  //    pair loop (the run buffer holds the cell's vectors; a cell this
+  //    hot means k-means collapsed — fail loud with the remedy, not OOM).
+  //  - SemDedupRouteThreshold: leaf-cell count at which assignment
+  //    switches from the flat n·k·dim NearestCells projection to the
+  //    two-level IVF router (NearestCellsRouted, ~n·3√k·dim). Below the
+  //    threshold the flat scan is both faster and exact; above it the
+  //    assignment term otherwise turns effectively quadratic in the
+  //    corpus (k ≈ n/targetCell). Graded corpora sit far below the
+  //    default, so graded results are bit-identical to the flat path.
+  //  - SemDedupMaxDriverCentroidBytes: ceiling on the DRIVER-RESIDENT
+  //    centroid bytes a fit may hold (the quantizer is a driver-side
+  //    model: seeds collect, per-iteration means collect, flattened
+  //    cents, and the router's regrouped copy — ~CentroidResidentCopies
+  //    simultaneous k×dim×8 B arrays). k is derived as n/targetCell, so
+  //    past ~10⁹ corpus vectors at the defaults the model itself
+  //    outgrows a driver; the correct behavior is the house-style loud
+  //    refusal with the remedy named, not an OOM mid-fit. The router's
+  //    driver CPU (~4·k·√k·dim multiplies) crosses from seconds to
+  //    hours in the same k range, so one ceiling guards both.
 
-  /** Conf: hard cap on one cell's rows in the local pair loop (the run
-    * buffer holds the cell's vectors; a cell this hot means k-means
-    * collapsed — fail loud with the remedy, not OOM). */
-  val MaxCellRowsKey = "spark.graft.semdedup.maxCellRows"
-  val MaxCellRowsDefault = 65536
+  /** Lloyd fit sample-size ceiling (deterministic id-hash sample). The
+    * fit is a sketch of the density, not the dedup itself — 100 k
+    * vectors pin centroids well past k ≈ 2000. */
+  val FitSample = 100000L
 
-  /** Conf: Lloyd fit sample-size ceiling (deterministic id-hash
-    * sample). The fit is a sketch of the density, not the dedup
-    * itself — 100 k vectors pin centroids well past k ≈ 2000. */
-  val FitSampleKey = "spark.graft.semdedup.fitSample"
-  val FitSampleDefault = 100000L
-
-  /** Conf: Lloyd iterations (2 moves centroids off the hash seeds and
-    * onto density; more buys little for blocking purposes). */
-  val LloydItersKey = "spark.graft.semdedup.lloydIters"
-  val LloydItersDefault = 2
-
-  /** Conf: leaf-cell count at which assignment switches from the flat
-    * n·k·dim [[NearestCells]] projection to the two-level IVF router
-    * ([[graft.functions.NearestCellsRouted]], ~n·3√k·dim). Below the
-    * threshold the flat scan is both faster and exact; above it the
-    * assignment term otherwise turns effectively quadratic in the
-    * corpus (k ≈ n/targetCell). Graded corpora sit far below the
-    * default, so graded results are bit-identical to the flat path. */
-  val RouteThresholdKey = "spark.graft.semdedup.routeThreshold"
-  val RouteThresholdDefault = 256
-
-  /** Conf: ceiling on the DRIVER-RESIDENT centroid bytes a fit may
-    * hold (the quantizer is a driver-side model: seeds collect,
-    * per-iteration means collect, flattened cents, and the router's
-    * regrouped copy — ~[[CentroidResidentCopies]] simultaneous k×dim×8 B
-    * arrays). k is derived as n/targetCell, so past ~10⁹ corpus
-    * vectors at the defaults the model itself outgrows a driver; the
-    * correct behavior is the house-style loud refusal with the remedy
-    * named, not an OOM mid-fit. The router's driver CPU
-    * (~4·k·√k·dim multiplies) crosses from seconds to hours in the
-    * same k range, so one ceiling guards both. */
-  val MaxDriverCentroidBytesKey = "spark.graft.semdedup.maxDriverCentroidBytes"
-  val MaxDriverCentroidBytesDefault = 2000000000L
+  /** Lloyd iterations (2 moves centroids off the hash seeds and onto
+    * density; more buys little for blocking purposes). */
+  val LloydIters = 2
 
   /** Simultaneously-live driver copies of the k×dim centroid table
     * during fit+route: seeds, cents, next (Lloyd), routedCents+coarse
     * (router) — 4 is the measured high-water count. */
   val CentroidResidentCopies = 4L
 
-  /** Conf: coarse groups probed by the router (recall/cost knob).
+  /** Coarse groups probed by the router (recall/cost knob).
     * 4 measured: top-1-vs-flat agreement 0.84 → ~0.95 on the
     * worst-case near-orthogonal graded corpus; what the BLOCKING
     * actually relies on — similar vectors routing together — is
     * ε-stable regardless (clone pair recall 1.0 either way, gated). */
-  val CoarseProbesKey = "spark.graft.semdedup.coarseProbes"
-  val CoarseProbesDefault = 4
+  val CoarseProbes = 4
 
   /** A fitted spherical quantizer: k unit centroids, row-major. */
   final case class Model(k: Int, dim: Int, cents: Array[Double])
@@ -113,7 +102,7 @@ object SemDedup {
                           groupStart: Array[Int], leafGid: Array[Int])
 
   /** A DISTRIBUTED quantizer — the round-13 rung past
-    * [[MaxDriverCentroidBytesKey]]: only the k1 ≈ √k coarse centroids
+    * [[GraftConf.SemDedupMaxDriverCentroidBytes]]: only the k1 ≈ √k coarse centroids
     * are driver-resident; the k leaf centroids live in a DataFrame
     * keyed by coarse group and NEVER collect. `leaves` columns:
     * (gid, cell, centroid) with `cell` the global leaf id. */
@@ -163,33 +152,20 @@ object SemDedup {
     // routes there automatically; direct callers of fit() (the
     // incremental/index paths, which genuinely need a driver-resident
     // [[Model]]) get this refusal naming both remedies.
-    val maxCentBytes = spark.conf.getOption(MaxDriverCentroidBytesKey)
-      .map(_.toLong).getOrElse(MaxDriverCentroidBytesDefault)
+    val maxCentBytes = GraftConf.SemDedupMaxDriverCentroidBytes.get(spark)
     val centBytes = k.toLong * dim * 8L * CentroidResidentCopies
     if (centBytes > maxCentBytes) throw new IllegalStateException(
       f"semantic-dedup fit refuses: k=$k%d centroids × dim=$dim%d × 8 B × " +
         f"$CentroidResidentCopies%d driver-resident copies = $centBytes%,d bytes " +
-        f"> $MaxDriverCentroidBytesKey=$maxCentBytes%,d (the quantizer is a " +
+        f"> ${GraftConf.SemDedupMaxDriverCentroidBytes.key}=$maxCentBytes%,d (the quantizer is a " +
         "driver-side model, and the coarse router additionally pays " +
         f"~${4L * k * math.ceil(math.sqrt(k.toDouble)).toLong * dim}%,d driver " +
-        s"multiplies) — raise $TargetCellKey to shrink k, raise the " +
+        s"multiplies) — raise ${GraftConf.SemDedupTargetCell.key} to shrink k, raise the " +
         "ceiling on a driver sized for the model, or use the distributed " +
         "rung (SemDedup.fitBig/assignBig — what blockedPairs does " +
         "automatically past this ceiling)")
     def doFit(): Model = {
-      val debug = spark.conf.getOption("spark.graft.semdedup.debug")
-        .contains("true")
-      def tl[A](tag: String)(f: => A): A = {
-        val s = System.nanoTime(); val r = f
-        if (debug) System.err.println(
-          f"[semdedup.fit] $tag ${(System.nanoTime() - s) / 1e9}%.2f s")
-        r
-      }
-      val fitSample = spark.conf.getOption(FitSampleKey)
-        .map(_.toLong).getOrElse(FitSampleDefault)
-      val iters = spark.conf.getOption(LloydItersKey)
-        .map(_.toInt).getOrElse(LloydItersDefault)
-      val m = math.max(1L, math.round(n / math.max(1.0, fitSample.toDouble)))
+      val m = math.max(1L, math.round(n / math.max(1.0, FitSample.toDouble)))
       val base = emb.select(col(idCol).as("id"),
         col(eCol).cast("array<double>").as("e"))
       val sample =
@@ -197,15 +173,15 @@ object SemDedup {
          else base.filter(pmod(xxhash64(col("id")), lit(m)) === 0))
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       try {
-        val seeds = tl("seeds") { sample
+        val seeds = sample
           .orderBy(xxhash64(lit(1L), col("id")), col("id"))
           .limit(k)
           .select(col("e")).collect()
-          .map(r => normalized(r.getSeq[Double](0).toArray)) }
+          .map(r => normalized(r.getSeq[Double](0).toArray))
         require(seeds.nonEmpty, "semantic-dedup fit: empty corpus sample")
         var cents = seeds
         var it = 0
-        while (it < iters) {
+        while (it < LloydIters) {
           val flat = cents.flatten
           val cellCol = GraftSqlBridge.column(NearestCells(
             GraftSqlBridge.expression(col("e")), flat, cents.length, dim, 1))
@@ -214,7 +190,7 @@ object SemDedup {
           // Project ABOVE the Generate and is re-evaluated once per
           // EXPLODED row — k·dim multiplies × dim rows, measured 40 s
           // instead of ~2 s per Lloyd iteration at k=1954
-          val means = tl(s"lloyd iter $it") { sample
+          val means = sample
             .select(element_at(cellCol, 1).as("cell"), col("e"))
             .select(col("cell"), posexplode(col("e")))
             .withColumnRenamed("col", "v")
@@ -224,7 +200,7 @@ object SemDedup {
             .groupBy(col("cell"))
             .agg(array_sort(collect_list(struct(col("pos"), col("mv")))).as("pm"))
             .select(col("cell"), expr("transform(pm, x -> x.mv)").as("mean"))
-            .collect() }
+            .collect()
           val next = cents.map(identity) // cells with no members keep position
           means.foreach { r =>
             next(r.getInt(0)) = normalized(r.getSeq[Double](1).toArray)
@@ -242,7 +218,7 @@ object SemDedup {
   }
 
   /** DISTRIBUTED quantizer fit — the rung past
-    * [[MaxDriverCentroidBytesKey]] (round 13; previously a hard
+    * [[GraftConf.SemDedupMaxDriverCentroidBytes]] (round 13; previously a hard
     * refusal). Two levels, neither of which ever holds k centroids on
     * the driver:
     *
@@ -270,11 +246,7 @@ object SemDedup {
       val k2 = math.max(1, math.ceil(k.toDouble / k1).toInt)
       val coarseModel = fit(spark, emb, idCol, eCol, k1, dim, n,
         cacheKey.map(ck => s"$ck#coarse"))
-      val fitSample = spark.conf.getOption(FitSampleKey)
-        .map(_.toLong).getOrElse(FitSampleDefault)
-      val iters = spark.conf.getOption(LloydItersKey)
-        .map(_.toInt).getOrElse(LloydItersDefault)
-      val m = math.max(1L, math.round(n / math.max(1.0, fitSample.toDouble)))
+      val m = math.max(1L, math.round(n / math.max(1.0, FitSample.toDouble)))
       val base = emb.select(col(idCol).as("id"),
         col(eCol).cast("array<double>").as("e"))
       val sample =
@@ -282,7 +254,7 @@ object SemDedup {
         else base.filter(pmod(xxhash64(col("id")), lit(m)) === 0)
       import spark.implicits._
       val k2Cap = k2
-      val itersCap = iters
+      val itersCap = LloydIters
       val leaves = sample
         .withColumn("gid", element_at(probeCells(coarseModel, col("e"), 1), 1))
         .withColumn("h", xxhash64(lit(1L), col("id")))
@@ -353,7 +325,7 @@ object SemDedup {
     *
     *   1. each vector probes its `pc` nearest coarse groups (codegen,
     *      driver-held √k×dim coarse table — same recall knob as the
-    *      driver router's [[CoarseProbesKey]]);
+    *      driver router's [[CoarseProbes]]);
     *   2. one equi-join on `gid` against the distributed leaf table —
     *      Catalyst picks broadcast while leaves are small and
     *      shuffle-hash at true scale — with the fused codegen cosine
@@ -371,8 +343,7 @@ object SemDedup {
   def assignBig(spark: SparkSession, big: BigModel, df: DataFrame,
                 nprobe: Int): DataFrame = {
     val coarseM = Model(big.k1, big.dim, big.coarse)
-    val pc = math.min(big.k1, math.max(spark.conf.getOption(CoarseProbesKey)
-      .map(_.toInt).getOrElse(CoarseProbesDefault), nprobe))
+    val pc = math.min(big.k1, math.max(CoarseProbes, nprobe))
     val v = df
       .withColumn("gids", probeCells(coarseM, col("e"), pc))
       .select(col("id"), col("e"), explode(col("gids")).as("gid"))
@@ -481,21 +452,19 @@ object SemDedup {
     })
 
   /** The assignment column for a fitted model: the flat fused
-    * [[NearestCells]] scan below [[RouteThresholdKey]] leaf cells,
+    * [[NearestCells]] scan below [[GraftConf.SemDedupRouteThreshold]] leaf cells,
     * the two-level router above it. */
   def assignCells(spark: SparkSession, model: Model,
                   e: org.apache.spark.sql.Column,
                   nprobe: Int): org.apache.spark.sql.Column = {
     val np = math.min(nprobe, model.k)
-    val threshold = spark.conf.getOption(RouteThresholdKey)
-      .map(_.toInt).getOrElse(RouteThresholdDefault)
+    val threshold = GraftConf.SemDedupRouteThreshold.get(spark)
     if (model.k < threshold)
       GraftSqlBridge.column(NearestCells(
         GraftSqlBridge.expression(e), model.cents, model.k, model.dim, np))
     else {
       val r = routedOf(model)
-      val pc = math.min(r.k1, math.max(spark.conf.getOption(CoarseProbesKey)
-        .map(_.toInt).getOrElse(CoarseProbesDefault), np))
+      val pc = math.min(r.k1, math.max(CoarseProbes, np))
       GraftSqlBridge.column(graft.functions.NearestCellsRouted(
         GraftSqlBridge.expression(e), r.coarse, r.routedCents,
         r.groupStart, r.leafGid, r.k1, model.k, model.dim, pc, np))
@@ -516,8 +485,7 @@ object SemDedup {
       s"blockedPairs requires a BIGINT id column; `$idCol` is " +
         s"${idType.simpleString} — cast ids to long first")
     require(probes >= 1 && probes <= 8, s"probes must be in [1, 8]: $probes")
-    val maxCell = spark.conf.getOption(MaxCellRowsKey)
-      .map(_.toInt).getOrElse(MaxCellRowsDefault)
+    val maxCell = GraftConf.SemDedupMaxCellRows.get(spark)
     val k = cellCount(spark, n, probes)
     val p = spark.sessionState.conf.numShufflePartitions
     val base = emb.select(col(idCol).as("id"),
@@ -528,8 +496,7 @@ object SemDedup {
     // the only semantic delta is the quantizer's cell geometry (recall
     // gated in SemDedupSpec under a forced-tiny ceiling). Below the
     // ceiling the path is bit-identical to round 12.
-    val maxCentBytes = spark.conf.getOption(MaxDriverCentroidBytesKey)
-      .map(_.toLong).getOrElse(MaxDriverCentroidBytesDefault)
+    val maxCentBytes = GraftConf.SemDedupMaxDriverCentroidBytes.get(spark)
     val assigned =
       if (k.toLong * dim * 8L * CentroidResidentCopies > maxCentBytes) {
         val big = fitBig(spark, base, "id", "e", k, dim, n, cacheKey)
@@ -590,8 +557,8 @@ object SemDedup {
               c += 1
               if (c > maxRun) throw new IllegalStateException(
                 s"semantic-dedup cell $runCell exceeds $maxRun rows " +
-                  s"($MaxCellRowsKey): k-means collapsed for this corpus — " +
-                  "raise k (lower " + TargetCellKey + ") or the cap")
+                  s"(${GraftConf.SemDedupMaxCellRows.key}): k-means collapsed for this corpus — " +
+                  "raise k (lower " + GraftConf.SemDedupTargetCell.key + ") or the cap")
             }
             ids = idB.result(); cls = clB.result(); vecs = veB.result()
             nRun = c
@@ -685,8 +652,7 @@ object SemDedup {
     * under the session's target cell size (shared so memoized models
     * are hit across the batch/incremental/streaming paths). */
   def cellCount(spark: SparkSession, n: Long, probes: Int = 2): Int = {
-    val targetCell = spark.conf.getOption(TargetCellKey)
-      .map(_.toInt).getOrElse(TargetCellDefault)
+    val targetCell = GraftConf.SemDedupTargetCell.get(spark)
     math.max(math.min(probes + 1, 4),
       math.ceil(n.toDouble / targetCell).toInt)
   }
@@ -759,8 +725,7 @@ object SemDedup {
       case Some((tables, bits)) =>
         AnnSearch.neardupPairs(spark, emb, idCol, eCol, minCosine, tables, bits)
       case None =>
-        val budget = spark.conf.getOption(AnnSearch.MaxBruteCosinesKey)
-          .map(_.toDouble).getOrElse(AnnSearch.MaxBruteCosinesDefault)
+        val budget = GraftConf.MaxBruteCosines.get(spark)
         if (n.toDouble * n / 2 <= budget)
           AnnSearch.bruteNeardupPairs(spark, emb, idCol, eCol, minCosine)
         else

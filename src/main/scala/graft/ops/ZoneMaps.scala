@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions._
 
+import scala.util.control.NonFatal
+
 /** Per-SEGMENT zonemaps for [[AtomicPublish]] tables: at commit time
   * each `data-*` segment gets a sidecar recording every supported
   * top-level column's min/max (plus null evidence), harvested from the
@@ -28,14 +30,6 @@ object ZoneMaps {
   /** Sidecar name prefix at the table root: `_graft_zone_<dataDir>`.
     * `_`-prefixed so parquet readers and source stamping ignore it. */
   val ZonePrefix = "_graft_zone_"
-
-  /** Conf: zonemap harvesting at commit time. `auto` (default) stamps
-    * every supported top-level primitive column; `off` disables; a
-    * comma-separated column list restricts stamping to those columns
-    * (the right setting for very wide tables — footer harvesting is
-    * metadata-only but the sidecar is one JSON entry per column). */
-  val ZonemapColsKey = "spark.graft.manifest.zonemap"
-  val ZonemapColsDefault = "auto"
 
   /** One column's zone: `tag` is the comparison domain ("long",
     * "double", "date" = epoch days, "ts" = epoch micros, "string");
@@ -177,18 +171,12 @@ object ZoneMaps {
     else if (BigDecimal(a) >= BigDecimal(b)) a else b
 
   /** Harvest a whole segment directory (its `*.parquet` leaves) into a
-    * zonemap, honoring [[ZonemapColsKey]]. Footer reads are
+    * zonemap: every supported top-level primitive column. Footer reads are
     * metadata-only; past a small file count they run ON EXECUTORS
     * (sc.parallelize over paths), so a 100k-file publish harvests at
     * cluster width — the driver only folds per-file summaries. Returns
-    * empty when disabled or when nothing is mappable. */
+    * empty when nothing is mappable. */
   def harvestSegment(spark: SparkSession, segDir: String): Map[String, ColZone] = {
-    val confCols = spark.conf.getOption(ZonemapColsKey)
-      .getOrElse(ZonemapColsDefault).trim
-    if (confCols.equalsIgnoreCase("off")) return Map.empty
-    val wanted: Option[Set[String]] =
-      if (confCols.equalsIgnoreCase("auto")) None
-      else Some(confCols.split(",").map(_.trim.toLowerCase).filter(_.nonEmpty).toSet)
     val p = new org.apache.hadoop.fs.Path(segDir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(p)) return Map.empty
@@ -215,8 +203,7 @@ object ZoneMaps {
       folded(n) = (tag, merged, prev._3 || hasNulls, ok)
     }
     folded.iterator.collect {
-      case (n, (tag, mm, hasNulls, true))
-          if wanted.forall(_.contains(n.toLowerCase)) =>
+      case (n, (tag, mm, hasNulls, true)) =>
         n.toLowerCase -> ColZone(tag, mm.map(_._1), mm.map(_._2), hasNulls)
     }.toMap
   }
@@ -226,6 +213,7 @@ object ZoneMaps {
   // ---------------------------------------------------------------
 
   private val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.ops.ZoneMaps")
 
   def write(fs: org.apache.hadoop.fs.FileSystem,
             root: org.apache.hadoop.fs.Path, dataDir: String,
@@ -243,12 +231,13 @@ object ZoneMaps {
     try out.write(jackson.writeValueAsBytes(node)) finally out.close()
   }
 
-  /** Read a segment's zonemap sidecar; empty when absent or malformed
+  /** Read a segment's zonemap sidecar; empty when absent, and empty with
+    * one warning naming the file when it cannot be read or parsed
     * (absence of evidence is never pruning evidence). */
   def read(fs: org.apache.hadoop.fs.FileSystem,
-           root: org.apache.hadoop.fs.Path, dataDir: String): Map[String, ColZone] =
+           root: org.apache.hadoop.fs.Path, dataDir: String): Map[String, ColZone] = {
+    val p = new org.apache.hadoop.fs.Path(root, ZonePrefix + dataDir)
     try {
-      val p = new org.apache.hadoop.fs.Path(root, ZonePrefix + dataDir)
       if (!fs.exists(p)) Map.empty
       else {
         val in = fs.open(p)
@@ -267,7 +256,11 @@ object ZoneMaps {
             Option(v.get("hasNulls")).exists(_.asBoolean()))
         }.toMap
       }
-    } catch { case _: Throwable => Map.empty }
+    } catch { case NonFatal(e) =>
+      log.warn(s"unreadable zone map sidecar $p: the segment is not pruned", e)
+      Map.empty
+    }
+  }
 
   // ---------------------------------------------------------------
   // Pruning (scan side)

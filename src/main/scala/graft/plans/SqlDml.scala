@@ -56,7 +56,7 @@ import graft.sources.GraftManagedTable
   * [[GraftMergeCommand]]), conditional matched/not-matched clauses,
   * partial-column `UPDATE SET` inside MERGE, and
   * `WITH SCHEMA EVOLUTION` (the API spells it
-  * [[MergeInto.AllowEvolutionKey]]).
+  * [[graft.engine.GraftConf.AllowSchemaEvolution]]).
   */
 case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
 
@@ -147,7 +147,7 @@ case class GraftDmlRule(session: SparkSession) extends Rule[LogicalPlan] {
                            t: GraftManagedTable): LogicalPlan = {
     if (m.withSchemaEvolution) refuse(
       "MERGE … WITH SCHEMA EVOLUTION is not supported through SQL — set " +
-        s"${MergeInto.AllowEvolutionKey}=true and use MergeInto.upsertInto")
+        s"${graft.engine.GraftConf.AllowSchemaEvolution.key}=true and use MergeInto.upsertInto")
     val targetOut = m.targetTable.outputSet
     val sourceOut = m.sourceTable.outputSet
 

@@ -268,7 +268,7 @@ object GraftSqlTarget {
 /** `VACUUM t [RETAIN n HOURS]` → [[AtomicPublish.vacuum]]: reap
   * superseded segment directories older than the retention window and
   * age out their version-log entries — under the commit lock, exactly
-  * the API's reaper. RETAIN overrides [[AtomicPublish.RetentionMsKey]]
+  * the API's reaper. RETAIN overrides [[graft.engine.GraftConf.RetentionMs]]
   * for THIS call only (restored after, even on failure). Returns the
   * number of directories deleted — bounded driver work (a directory
   * listing of the table root, metadata-sized). */
@@ -288,7 +288,7 @@ case class GraftVacuumCommand(target: GraftSqlTarget,
     val before = dirs
     retainHours match {
       case Some(h) =>
-        val key = AtomicPublish.RetentionMsKey
+        val key = graft.engine.GraftConf.RetentionMs.key
         val old = spark.conf.getOption(key)
         spark.conf.set(key, (h * 3600L * 1000L).toString)
         try AtomicPublish.vacuum(spark, path)
@@ -305,8 +305,8 @@ case class GraftVacuumCommand(target: GraftSqlTarget,
   * [[AtomicPublish.optimizeTable]]; when the table's recorded layout
   * already clusters by the same columns the run is incremental
   * (`onlyNew = true` — cost ∝ new data), otherwise the full clustering
-  * rewrite (the pay-once-to-prune-forever pass). Output segment count
-  * from `spark.graft.sql.optimize.segments` (default 8). */
+  * rewrite (the pay-once-to-prune-forever pass) into
+  * [[GraftOptimizeCommand.Segments]] output segments. */
 case class GraftOptimizeCommand(target: GraftSqlTarget,
                                 zorderBy: Seq[String])
   extends LeafRunnableCommand {
@@ -321,13 +321,10 @@ case class GraftOptimizeCommand(target: GraftSqlTarget,
     val (op, out) =
       if (zorderBy.isEmpty) ("COMPACT", MergeInto.compactMerged(spark, path))
       else {
-        val segments = spark.conf
-          .getOption(GraftOptimizeCommand.SegmentsKey)
-          .map(_.toInt).getOrElse(GraftOptimizeCommand.SegmentsDefault)
         val sameLayout = AtomicPublish.clusterMeta(spark, path)
           .exists(_._1.map(_.toLowerCase) == zorderBy.map(_.toLowerCase))
         ("ZORDER", AtomicPublish.optimizeTable(spark, path, zorderBy,
-          segments, onlyNew = sameLayout))
+          GraftOptimizeCommand.Segments, onlyNew = sameLayout))
       }
     val outcome = out match {
       case AtomicPublish.CompactOutcome.Compacted(_) => "COMPACTED"
@@ -339,10 +336,9 @@ case class GraftOptimizeCommand(target: GraftSqlTarget,
 }
 
 object GraftOptimizeCommand {
-  /** Conf: output segment count for `OPTIMIZE … ZORDER BY` through
-    * SQL (the API takes it as a parameter). */
-  val SegmentsKey = "spark.graft.sql.optimize.segments"
-  val SegmentsDefault = 8
+  /** Output segment count for `OPTIMIZE … ZORDER BY` through SQL (the
+    * API takes it as a parameter). */
+  val Segments = 8
 }
 
 /** `RESTORE [TABLE] t TO VERSION AS OF n` →

@@ -415,7 +415,7 @@ object JoinQueries extends QueryGroup {
     // SCHEMA EVOLUTION ON MERGE (round 15): the CDC batch ADDS a column
     // the published table never had (a re-labeling pass stamping a
     // review flag — the commonest evolution in a training-data
-    // pipeline). Behind spark.graft.merge.allowSchemaEvolution the
+    // pipeline). Behind GraftConf.AllowSchemaEvolution the
     // merge-on-read commit accepts it; the reconciled read unions BY
     // NAME with null backfill, so every pre-evolution row reads back
     // NULL in the new column and every merged row carries its value.
@@ -432,9 +432,9 @@ object JoinQueries extends QueryGroup {
         val src = target.filter($"c_custkey" % 10 === 3)
           .withColumn("c_acctbal", $"c_acctbal" + 100.0)
           .withColumn("review_flag", lit(1L))
-        s.conf.set(graft.ops.MergeInto.AllowEvolutionKey, "true")
+        s.conf.set(graft.engine.GraftConf.AllowSchemaEvolution.key, "true")
         try graft.ops.MergeInto.upsertInto(s, table, src, Seq("c_custkey"))
-        finally s.conf.unset(graft.ops.MergeInto.AllowEvolutionKey)
+        finally s.conf.unset(graft.engine.GraftConf.AllowSchemaEvolution.key)
         graft.ops.AtomicPublish.read(s, table).orderBy($"c_custkey")
       },
       Some("""SELECT c_custkey, c_name, c_nationkey,

@@ -885,11 +885,11 @@ object LlmQueries extends QueryGroup {
         // pass (or an evicted candidate cache recomputing from the old
         // paths) can never race the GC clock at large sf
         val prevThreshold = s.conf.getOption(
-          graft.ops.DedupIndex.CompactAfterSegmentsKey)
+          graft.engine.GraftConf.IndexCompactAfter.key)
         val prevRetention = s.conf.getOption(
-          graft.ops.AtomicPublish.RetentionMsKey)
-        s.conf.set(graft.ops.DedupIndex.CompactAfterSegmentsKey, "3")
-        s.conf.set(graft.ops.AtomicPublish.RetentionMsKey,
+          graft.engine.GraftConf.RetentionMs.key)
+        s.conf.set(graft.engine.GraftConf.IndexCompactAfter.key, "3")
+        s.conf.set(graft.engine.GraftConf.RetentionMs.key,
           (24L * 3600 * 1000).toString)
         def restore(key: String, prev: Option[String]): Unit = prev match {
           case Some(v) => s.conf.set(key, v)
@@ -900,8 +900,8 @@ object LlmQueries extends QueryGroup {
           graft.ops.DedupIndex.appendToMinHashIndex(s, table, day)
           out
         } finally {
-          restore(graft.ops.DedupIndex.CompactAfterSegmentsKey, prevThreshold)
-          restore(graft.ops.AtomicPublish.RetentionMsKey, prevRetention)
+          restore(graft.engine.GraftConf.IndexCompactAfter.key, prevThreshold)
+          restore(graft.engine.GraftConf.RetentionMs.key, prevRetention)
         }
         outs.reduce(_ unionByName _).orderBy($"doc_id")
       },

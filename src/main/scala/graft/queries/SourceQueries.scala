@@ -633,9 +633,9 @@ object SourceQueries extends QueryGroup {
                 paths.map(p => p.substring(p.lastIndexOf('/') + 1)))
               .write.parquet(staging)
         }
-        s.conf.set(graft.ops.AtomicPublish.RetentionMsKey, "0")
+        s.conf.set(graft.engine.GraftConf.RetentionMs.key, "0")
         try graft.ops.AtomicPublish.vacuum(s, table)
-        finally s.conf.unset(graft.ops.AtomicPublish.RetentionMsKey)
+        finally s.conf.unset(graft.engine.GraftConf.RetentionMs.key)
         val root = new org.apache.hadoop.fs.Path(table)
         val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
         val dataDirs = fs.listStatus(root).count(f =>
@@ -1088,7 +1088,7 @@ object SourceQueries extends QueryGroup {
     // range (hash/arrival-ordered appends, the common LSM layout; here
     // customer lands as three `% 3` slices, so min/max overlap
     // completely). Opt-in per-column bloom sidecars
-    // (spark.graft.manifest.bloom, harvested at commit with one
+    // (GraftConf.BloomColumns, harvested at commit with one
     // column-pruned scan of THE SEGMENT) answer the equality question:
     // the IN-probe schedules only the segments whose filter fires —
     // the Iceberg/Delta stats-file shape for needle lookups over a
@@ -1100,7 +1100,7 @@ object SourceQueries extends QueryGroup {
         import s.implicits._
         val table = scratch("bloom_customer")
         val cust = Tables(s, dir, "customer")
-        s.conf.set(graft.ops.BloomMaps.BloomColsKey, "c_custkey")
+        s.conf.set(graft.engine.GraftConf.BloomColumns.key, "c_custkey")
         try {
           graft.ops.AtomicPublish.publish(s, table)(p =>
             cust.filter($"c_custkey" % 3 === 0).write.parquet(p))
@@ -1108,7 +1108,7 @@ object SourceQueries extends QueryGroup {
             cust.filter($"c_custkey" % 3 === 1).write.parquet(p))
           graft.ops.AtomicPublish.appendSegment(s, table)(p =>
             cust.filter($"c_custkey" % 3 === 2).write.parquet(p))
-        } finally s.conf.unset(graft.ops.BloomMaps.BloomColsKey)
+        } finally s.conf.unset(graft.engine.GraftConf.BloomColumns.key)
         s.sql(s"""CREATE OR REPLACE TEMPORARY VIEW graft_bloom_customer
                   USING graft OPTIONS (path '$table')""")
         s.sql("""SELECT c_custkey, c_name, c_acctbal, c_mktsegment

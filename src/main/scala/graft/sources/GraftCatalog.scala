@@ -3,6 +3,7 @@ package graft.sources
 import java.util.{Map => JMap}
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.analysis.{NamespaceAlreadyExistsException, NoSuchNamespaceException, NoSuchTableException, TableAlreadyExistsException}
@@ -79,6 +80,7 @@ object GraftCatalog {
       "option.path", "path")
 
   private val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
+  private val log = org.slf4j.LoggerFactory.getLogger("graft.sources.GraftCatalog")
 
   private def propsPath(tableRoot: String): org.apache.hadoop.fs.Path =
     new org.apache.hadoop.fs.Path(tableRoot, "_graft_props.json")
@@ -106,10 +108,12 @@ object GraftCatalog {
     try out.write(jackson.writeValueAsBytes(node)) finally out.close()
   }
 
+  /** A table's properties file; empty when absent, and empty with one
+    * warning naming the file when it cannot be read or parsed. */
   private[graft] def readProps(spark: SparkSession,
-                               tableRoot: String): Map[String, String] =
+                               tableRoot: String): Map[String, String] = {
+    val p = propsPath(tableRoot)
     try {
-      val p = propsPath(tableRoot)
       val fs = fsOf(spark, p)
       if (!fs.exists(p)) Map.empty
       else {
@@ -124,7 +128,11 @@ object GraftCatalog {
         node.properties().asScala.map(e =>
           e.getKey -> e.getValue.asText()).toMap
       }
-    } catch { case _: Throwable => Map.empty }
+    } catch { case NonFatal(e) =>
+      log.warn(s"unreadable table properties file $p: reading no properties", e)
+      Map.empty
+    }
+  }
 }
 
 class GraftCatalog extends TableCatalog with SupportsNamespaces {
@@ -301,7 +309,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     * DROPPED — committed merge segments were claimed under it, and
     * reinterpreting them under different keys would corrupt every
     * reconciled read. Schema ALTERs still refuse: evolution is
-    * admitted at write time (MergeInto.AllowEvolutionKey) and recorded
+    * admitted at write time ([[graft.engine.GraftConf.AllowSchemaEvolution]]) and recorded
     * by the segments themselves. */
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     val path = tablePath(ident)
@@ -338,7 +346,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
       case (_, other) => throw new UnsupportedOperationException(
         s"graft catalog: ALTER TABLE ${other.getClass.getSimpleName} is " +
           "not supported — schema evolution is admitted at write time " +
-          "(MergeInto.AllowEvolutionKey) and recorded by the segments " +
+          s"(${graft.engine.GraftConf.AllowSchemaEvolution.key}) and recorded by the segments " +
           "themselves")
     }
     writeProps(path, updated)

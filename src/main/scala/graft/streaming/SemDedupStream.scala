@@ -44,9 +44,8 @@ object SemDedupStream {
   private implicit val verdictEnc = Encoders.product[ProbeVerdict]
   private implicit val keyEnc = Encoders.scalaInt
 
-  /** Conf: cap on one cell's retained vectors (state is keep-all by
+  /** Default cap on one cell's retained vectors (state is keep-all by
     * semantics; a cell this hot means the quantizer collapsed). */
-  val MaxCellStateKey = "spark.graft.semdedup.stream.maxCellState"
   val MaxCellStateDefault = 65536
 
   private def cos(a: Array[Double], b: Array[Double]): Double = {
@@ -93,7 +92,7 @@ object SemDedupStream {
       retained += 1
       if (retained > maxCellState) throw new IllegalStateException(
         s"semantic-dedup stream cell $cell exceeds $maxCellState " +
-          s"retained vectors ($MaxCellStateKey): the quantizer " +
+          "retained vectors (maxCellState): the quantizer " +
           "collapsed for this stream — refit with more cells")
     }
     state.update(CellState(ids, vecs))
@@ -188,7 +187,7 @@ object SemDedupStream {
               if (pMs > maxTs) maxTs = pMs
               if (ids.length > maxCellState) throw new IllegalStateException(
                 s"semantic-dedup stream cell $cell exceeds $maxCellState " +
-                  s"retained vectors ($MaxCellStateKey) within one TTL window")
+                  "retained vectors (maxCellState) within one TTL window")
             }
             state.update(CellStateT(ids, vecs, tss))
             state.setTimeoutTimestamp(maxTs + ttlMs + 1)

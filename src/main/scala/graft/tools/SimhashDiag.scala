@@ -32,7 +32,7 @@ object SimhashDiag {
     if (args.length > 2 &&
         (args(2) == "adaptive" || args(2).startsWith("uniform"))) {
       sys.env.get("SPARK_GRAFT_DIAG_OVERSPLIT").foreach(v =>
-        spark.conf.set(graft.ops.HammingJoin.OversplitKey, v))
+        spark.conf.set(graft.engine.GraftConf.HammingOversplit.key, v))
       require(args(2) == "adaptive" || args(2).matches("uniform:\\d+"),
         s"mode `${args(2)}`: use `adaptive` or `uniform:<rowCount>`")
       val raw =
@@ -47,7 +47,7 @@ object SimhashDiag {
       // report the pick the planner will (re-)derive: conf value, or a
       // recomputation of the deterministic derivation (one extra ~2 s
       // sampling pass — diag-only)
-      val pick = spark.conf.getOption(graft.ops.HammingJoin.OversplitKey)
+      val pick = spark.conf.getOption(graft.engine.GraftConf.HammingOversplit.key)
         .getOrElse {
           val k = graft.ops.HammingJoin.provisionBlocks(n, 6, pairsPerDoc = 11.3)
           val occ = graft.ops.HammingJoin.sampleOccupancy(

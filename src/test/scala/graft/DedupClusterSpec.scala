@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{DedupCluster, MinHashDedup}
-import graft.engine.Tables
+import graft.engine.{GraftConf, Tables}
 
 /** Transitive-closure properties of duplicate-cluster resolution. */
 class DedupClusterSpec extends SparkSpec {
@@ -61,11 +61,11 @@ class DedupClusterSpec extends SparkSpec {
     assert(dist === gx)
     // the dispatcher takes the distributed rung past the conf ceiling —
     // same output
-    spark.conf.set(DedupCluster.MaxDriverPairsKey, "0")
+    spark.conf.set(GraftConf.MaxDriverPairs.key, "0")
     try {
       val forced = snap(DedupCluster.clusters(docs.select($"doc_id"), "doc_id", pairs))
       assert(forced === gx)
-    } finally spark.conf.unset(DedupCluster.MaxDriverPairsKey)
+    } finally spark.conf.unset(GraftConf.MaxDriverPairs.key)
   }
 
   test("deep chain converges on both rungs (under the round cap)") {

@@ -5,7 +5,7 @@ import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
-import graft.engine.{GraftFunctions, JobLabel, Tables}
+import graft.engine.{GraftConf, GraftFunctions, JobLabel, Tables}
 import graft.ops.{AnnSearch, AtomicPublish, DedupIndex, MinHashDedup, SemDedup}
 
 /** The persisted incremental-dedup index: outputs bit-identical to the
@@ -58,14 +58,14 @@ class DedupIndexSpec extends SparkSpec {
       s"pushdown-mode daily plan shuffles:\n${pushdown.queryExecution.executedPlan}")
     val pRows = pushdown.collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     // force the over-cap fallback (broadcast semi over full scan)
-    spark.conf.set(DedupIndex.MaxPushdownIdsKey, "0")
+    spark.conf.set(GraftConf.MaxPushdownIds.key, "0")
     try {
       val fallback = run()
       assert(!fallback.queryExecution.executedPlan.toString
         .contains("Exchange hashpartitioning"),
         s"fallback-mode daily plan shuffles:\n${fallback.queryExecution.executedPlan}")
       assert(fallback.collect().map(r => (r.getLong(0), r.getLong(1))).toSet === pRows)
-    } finally spark.conf.unset(DedupIndex.MaxPushdownIdsKey)
+    } finally spark.conf.unset(GraftConf.MaxPushdownIds.key)
   }
 
   test("indexed semantic daily pairs equal incrementalPairs exactly; plan exchange-free") {
@@ -493,7 +493,7 @@ class DedupIndexSpec extends SparkSpec {
     val table = tmpTable("mhcompact")
     DedupIndex.ensureMinHashIndex(spark, table, corpus,
       s"$sfDir/documents.parquet", "doc_id>=100#compact", "doc_id", "text", 32, 8)
-    spark.conf.set(DedupIndex.CompactAfterSegmentsKey, "0") // hold off
+    spark.conf.set(GraftConf.IndexCompactAfter.key, "0") // hold off
     try {
       (0 until 10).foreach { i =>
         DedupIndex.appendToMinHashIndex(spark, table,
@@ -519,7 +519,7 @@ class DedupIndexSpec extends SparkSpec {
         s"$sfDir/documents.parquet", "doc_id>=100#compact", "doc_id", "text", 32, 8)
       assert(AtomicPublish.currentDataDir(spark, table).get !== compactedDir,
         "ensure* reused a compacted (grown) table as a fresh corpus index")
-    } finally spark.conf.unset(DedupIndex.CompactAfterSegmentsKey)
+    } finally spark.conf.unset(GraftConf.IndexCompactAfter.key)
   }
 
   test("LSM cycle: 4 days with threshold 3 compacts TWICE mid-cycle, verdicts ≡ disabled twin") {
@@ -534,7 +534,7 @@ class DedupIndexSpec extends SparkSpec {
       val table = tmpTable(tag)
       DedupIndex.ensureMinHashIndex(spark, table, corpus,
         s"$sfDir/documents.parquet", s"doc_id>=100#$tag", "doc_id", "text", 32, 8)
-      spark.conf.set(DedupIndex.CompactAfterSegmentsKey, threshold)
+      spark.conf.set(GraftConf.IndexCompactAfter.key, threshold)
       try {
         val segCounts = Seq.newBuilder[Int]
         val outs = days.map { day =>
@@ -545,7 +545,7 @@ class DedupIndexSpec extends SparkSpec {
           cand
         }
         (table, outs, segCounts.result())
-      } finally spark.conf.unset(DedupIndex.CompactAfterSegmentsKey)
+      } finally spark.conf.unset(GraftConf.IndexCompactAfter.key)
     }
     val (_, lsmOuts, lsmSegs) = runCycle("lsm3", "3")
     val (_, plainOuts, plainSegs) = runCycle("lsm0", "0")
@@ -571,9 +571,9 @@ class DedupIndexSpec extends SparkSpec {
       DedupIndex.ensureSemanticIndex(spark, t, corpus,
         s"$sfDir/embeddings.parquet", "vec_id>=100#auto", "vec_id", "e",
         dim = 64, corpusSize = n)
-      spark.conf.set(DedupIndex.CompactAfterSegmentsKey, threshold)
+      spark.conf.set(GraftConf.IndexCompactAfter.key, threshold)
       try DedupIndex.appendToSemanticIndex(spark, t, day1)
-      finally spark.conf.unset(DedupIndex.CompactAfterSegmentsKey)
+      finally spark.conf.unset(GraftConf.IndexCompactAfter.key)
       t
     }
     val auto = build("semauto", "2")   // trigger: base+append = 2 >= 2

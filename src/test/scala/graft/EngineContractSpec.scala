@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.types._
+import graft.engine.GraftConf
 
 /** The testdata schema contract (VERDICT r8 #2): one loud assertion
   * naming any drifted column, instead of N silently-broken keys the
@@ -59,9 +60,9 @@ class EngineContractSpec extends SparkSpec {
     assert(Sizing.coalesceForStaging(big).rdd.getNumPartitions === 8)
     // ceiling is conf-driven (scale-parameterised, round rules): lower
     // it and the small frame stops coalescing too
-    spark.conf.set(Sizing.StagingCoalesceBytesKey, "1")
+    spark.conf.set(GraftConf.StagingCoalesceBytes.key, "1")
     try assert(Sizing.coalesceForStaging(small).rdd.getNumPartitions === 8)
-    finally spark.conf.unset(Sizing.StagingCoalesceBytesKey)
+    finally spark.conf.unset(GraftConf.StagingCoalesceBytes.key)
   }
 
   test("staging coalesce: a local relation is sized without the optimizer; " +
@@ -79,14 +80,54 @@ class EngineContractSpec extends SparkSpec {
     assert(raw.queryExecution.logical
       .isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation])
     assert(Sizing.coalesceForStaging(raw).rdd.getNumPartitions === 1)
-    spark.conf.set(Sizing.StagingCoalesceBytesKey, "1")
+    spark.conf.set(GraftConf.StagingCoalesceBytes.key, "1")
     try assert(Sizing.coalesceForStaging(raw).rdd.getNumPartitions ===
       raw.rdd.getNumPartitions)
-    finally spark.conf.unset(Sizing.StagingCoalesceBytesKey)
-    spark.conf.set(Sizing.StagingCoalesceBytesKey, "128MB")
+    finally spark.conf.unset(GraftConf.StagingCoalesceBytes.key)
+    spark.conf.set(GraftConf.StagingCoalesceBytes.key, "128MB")
     try {
       val e = intercept[IllegalArgumentException](Sizing.coalesceForStaging(raw))
-      assert(e.getMessage.contains(Sizing.StagingCoalesceBytesKey), e.getMessage)
-    } finally spark.conf.unset(Sizing.StagingCoalesceBytesKey)
+      assert(e.getMessage.contains(GraftConf.StagingCoalesceBytes.key), e.getMessage)
+    } finally spark.conf.unset(GraftConf.StagingCoalesceBytes.key)
+  }
+
+  test("GraftConf: every entry parses its default back and refuses a malformed value by key") {
+    assert(GraftConf.all.size === 20)
+    assert(GraftConf.all.map(_.key).distinct.size === GraftConf.all.size)
+    val sc = spark.sparkContext
+    val group = "graftconf-spec"
+    sc.setJobGroup(group, "GraftConf parsing")
+    try GraftConf.all.foreach { e =>
+      assert(spark.conf.getOption(e.key).isEmpty, s"${e.key} is set by another spec")
+      assert(e.get(spark) == e.default, e.key)
+      // the rendered default (what the bench records) reads back as itself
+      spark.conf.set(e.key, s" ${e.resolved(spark)} ")
+      try assert(e.get(spark) == e.default, e.key)
+      finally spark.conf.unset(e.key)
+      spark.conf.set(e.key, "x,,y")
+      try {
+        val ex = intercept[IllegalArgumentException](e.get(spark))
+        assert(ex.getMessage.contains(e.key) && ex.getMessage.contains("x,,y"),
+          ex.getMessage)
+      } finally spark.conf.unset(e.key)
+    } finally sc.clearJobGroup()
+    assert(sc.statusTracker.getJobIdsForGroup(group).isEmpty,
+      "reading the conf registry must launch no Spark job")
+  }
+
+  test("every spark.graft.* key is declared in GraftConf and nowhere else in src/main") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    val registry = root.resolve("graft/engine/GraftConf.scala")
+    val stray = Files.walk(root).iterator.asScala
+      .filter(p => p.toString.endsWith(".scala") && p != registry)
+      .flatMap { p =>
+        Files.readAllLines(p).asScala.zipWithIndex.collect {
+          case (line, i) if line.contains("\"spark.graft.") => s"$p:${i + 1}"
+        }
+      }.toList
+    assert(Files.exists(registry))
+    assert(stray.isEmpty, s"declare these keys in GraftConf: ${stray.mkString(", ")}")
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.engine.{GraftFunctions, Tables}
+import graft.engine.{GraftConf, GraftFunctions, Tables}
 import graft.ops.{AnnSearch, MinHashDedup}
 
 /** Properties for the non-oracle LLM ops: determinism, containment of
@@ -271,7 +271,7 @@ class LlmOpsSpec extends SparkSpec {
     // The measured-DNF regime (5M docs at radius 6 ran past a 900 s
     // budget): refusal naming the conf knob, never a silent join.
     HammingJoin.planStrategy(5000000L, 6, 2e9, 11.3) match {
-      case Left(msg) => assert(msg.contains(HammingJoin.MaxModeledCostKey))
+      case Left(msg) => assert(msg.contains(GraftConf.HammingMaxModeledCost.key))
       case Right(k) => fail(s"5M docs must refuse, planned k=$k")
     }
   }
@@ -376,14 +376,14 @@ class LlmOpsSpec extends SparkSpec {
     // Force the scale path on the graded corpus: tiny localMin. With a
     // budget below the measured products it must refuse naming the
     // conf; with a generous budget it must match the relational join.
-    spark.conf.set(HammingJoin.LocalMinRowsKey, "10")
+    spark.conf.set(GraftConf.HammingLocalMinRows.key, "10")
     try {
-      spark.conf.set(HammingJoin.MaxProductsKey, (trueP / 2).max(1L).toString)
+      spark.conf.set(GraftConf.HammingMaxProducts.key, (trueP / 2).max(1L).toString)
       val ex = intercept[IllegalArgumentException] {
         HammingJoin.pairsWithinAdaptive(spark, fp, "doc_id", "fp", 6, n, 11.3)
       }
-      assert(ex.getMessage.contains(HammingJoin.MaxProductsKey))
-      spark.conf.set(HammingJoin.MaxProductsKey, "1e15")
+      assert(ex.getMessage.contains(GraftConf.HammingMaxProducts.key))
+      spark.conf.set(GraftConf.HammingMaxProducts.key, "1e15")
       def norm(d: org.apache.spark.sql.DataFrame) =
         d.select("id_a", "id_b", "hamming").collect()
           .map(r => (r.getLong(0), r.getLong(1),
@@ -393,8 +393,8 @@ class LlmOpsSpec extends SparkSpec {
       val rel = norm(HammingJoin.pairsWithin(fp, "doc_id", "fp", 6, blocks = k))
       assert(adaptive === rel)
     } finally {
-      spark.conf.unset(HammingJoin.LocalMinRowsKey)
-      spark.conf.unset(HammingJoin.MaxProductsKey)
+      spark.conf.unset(GraftConf.HammingLocalMinRows.key)
+      spark.conf.unset(GraftConf.HammingMaxProducts.key)
     }
   }
 
@@ -433,14 +433,39 @@ class LlmOpsSpec extends SparkSpec {
     import spark.implicits._
     import graft.ops.HammingJoin
     val df = (0 until 200).map(i => (i.toLong, 0L)).toDF("doc_id", "fp")
-    spark.conf.set(HammingJoin.MaxBucketRowsKey, "100")
+    spark.conf.set(GraftConf.HammingMaxBucketRows.key, "100")
     try {
       val ex = intercept[org.apache.spark.SparkException] {
         HammingJoin.pairsWithinLocal(df, "doc_id", "fp", 6, blocks = 9).count()
       }
-      assert(ex.getMessage.contains(HammingJoin.MaxBucketRowsKey) ||
-        Option(ex.getCause).exists(_.getMessage.contains(HammingJoin.MaxBucketRowsKey)))
-    } finally spark.conf.unset(HammingJoin.MaxBucketRowsKey)
+      assert(ex.getMessage.contains(GraftConf.HammingMaxBucketRows.key) ||
+        Option(ex.getCause).exists(_.getMessage.contains(GraftConf.HammingMaxBucketRows.key)))
+    } finally spark.conf.unset(GraftConf.HammingMaxBucketRows.key)
+  }
+
+  test("maxBucketRows has one parser: 2e7 fails at the planner and the local engine, naming the key") {
+    import spark.implicits._
+    import graft.ops.HammingJoin
+    val df = (0 until 200).map(i => (i.toLong, i.toLong * 0x9E3779B97F4A7C15L))
+      .toDF("doc_id", "fp")
+    spark.conf.set(GraftConf.HammingLocalMinRows.key, "10")
+    spark.conf.set(GraftConf.HammingMaxBucketRows.key, "2e7")
+    try {
+      // one parser for both sites: neither accepts what the other refuses
+      val planner = intercept[IllegalArgumentException] {
+        HammingJoin.pairsWithinAdaptive(spark, df, "doc_id", "fp", maxDist = 3, n = 200)
+      }
+      val local = intercept[IllegalArgumentException] {
+        HammingJoin.pairsWithinLocal(df, "doc_id", "fp", maxDist = 3)
+      }
+      Seq(planner, local).foreach { e =>
+        assert(e.getMessage.contains(GraftConf.HammingMaxBucketRows.key), e.getMessage)
+        assert(e.getMessage.contains("2e7"), e.getMessage)
+      }
+    } finally {
+      spark.conf.unset(GraftConf.HammingLocalMinRows.key)
+      spark.conf.unset(GraftConf.HammingMaxBucketRows.key)
+    }
   }
 
   test("LSH neardup pairs equal the quadratic cosine scan on graded data") {
@@ -609,14 +634,14 @@ class LlmOpsSpec extends SparkSpec {
     }
     // The brute budget is conf-driven (cluster-sized, not hard-coded):
     // with a tiny conf budget, even n=1000 must refuse the exact path.
-    spark.conf.set(AnnSearch.MaxBruteCosinesKey, "100")
+    spark.conf.set(GraftConf.MaxBruteCosines.key, "100")
     try {
       val e3 = intercept[IllegalArgumentException] {
         AnnSearch.neardupPairsAdaptive(spark, emb, "vec_id", "e", 0.45,
           corpusSize = Some(1000L))
       }
-      assert(e3.getMessage.contains(AnnSearch.MaxBruteCosinesKey))
-    } finally spark.conf.unset(AnnSearch.MaxBruteCosinesKey)
+      assert(e3.getMessage.contains(GraftConf.MaxBruteCosines.key))
+    } finally spark.conf.unset(GraftConf.MaxBruteCosines.key)
     // Footer-metadata row count equals the scan count.
     val meta = AnnSearch.parquetRowCount(spark, s"$sfDir/embeddings.parquet")
     assert(meta === Tables(spark, sfDir, "embeddings").count())
@@ -878,30 +903,30 @@ class LlmOpsSpec extends SparkSpec {
     // (3) plan-time hot-bucket pre-emption: a sampled hottest bucket
     // within the tail allowance of the run cap refuses BEFORE the join
     // (the runtime abort is the backstop, not the first line of defense).
-    spark.conf.set(HammingJoin.LocalMinRowsKey, "10")
-    spark.conf.set(HammingJoin.MaxBucketRowsKey, "2")
+    spark.conf.set(GraftConf.HammingLocalMinRows.key, "10")
+    spark.conf.set(GraftConf.HammingMaxBucketRows.key, "2")
     try {
       val e3 = intercept[IllegalArgumentException] {
         HammingJoin.pairsWithinAdaptive(spark, fp, "doc_id", "fp",
           maxDist = 6, n = 200)
       }
-      assert(e3.getMessage.contains(HammingJoin.MaxBucketRowsKey), e3.getMessage)
+      assert(e3.getMessage.contains(GraftConf.HammingMaxBucketRows.key), e3.getMessage)
     } finally {
-      spark.conf.unset(HammingJoin.LocalMinRowsKey)
-      spark.conf.unset(HammingJoin.MaxBucketRowsKey)
+      spark.conf.unset(GraftConf.HammingLocalMinRows.key)
+      spark.conf.unset(GraftConf.HammingMaxBucketRows.key)
     }
     // (4) the oversplit conf multiplies the local engine's bucket-keyed
     // repartition (straggler defense on skewed product mass).
     val base = spark.sessionState.conf.numShufflePartitions
-    spark.conf.set(HammingJoin.OversplitKey, "8")
+    spark.conf.set(GraftConf.HammingOversplit.key, "8")
     try {
       val parts = HammingJoin.pairsWithinLocal(fp, "doc_id", "fp", maxDist = 3)
         .rdd.getNumPartitions
       assert(parts === base * 8, s"expected ${base * 8} partitions, got $parts")
-    } finally spark.conf.unset(HammingJoin.OversplitKey)
+    } finally spark.conf.unset(GraftConf.HammingOversplit.key)
     // default (conf unset) is the measured 4x straggler defense
     val partsDefault = HammingJoin
       .pairsWithinLocal(fp, "doc_id", "fp", maxDist = 3).rdd.getNumPartitions
-    assert(partsDefault === base * HammingJoin.OversplitDefault)
+    assert(partsDefault === base * GraftConf.HammingOversplit.default)
   }
 }

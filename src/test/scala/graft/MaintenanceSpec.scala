@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{AtomicPublish, Compact, MergeInto}
+import graft.engine.GraftConf
 
 /** Table-maintenance semantics: MERGE upsert row accounting and plan
   * shape, compaction file-count collapse with exact content round-trip.
@@ -168,7 +169,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(snapshot() === newSet, "post-commit reader must see the new version")
     // with retention DISABLED, a publish GCs every directory the new
     // manifest doesn't reference: only the live version remains
-    spark.conf.set(AtomicPublish.RetentionMsKey, "0")
+    spark.conf.set(GraftConf.RetentionMs.key, "0")
     try {
       AtomicPublish.publish(spark, table)(p =>
         Seq((99L, "x")).toDF("k", "v").write.parquet(p))
@@ -177,7 +178,7 @@ class MaintenanceSpec extends SparkSpec {
       val dataDirs = fs.listStatus(new org.apache.hadoop.fs.Path(table))
         .filter(_.isDirectory).map(_.getPath.getName).filter(_.startsWith("data-"))
       assert(dataDirs.length <= 1, s"GC left ${dataDirs.mkString(",")}")
-    } finally spark.conf.unset(AtomicPublish.RetentionMsKey)
+    } finally spark.conf.unset(GraftConf.RetentionMs.key)
   }
 
   test("retention GC: a reader two commits behind still completes its scan") {
@@ -199,7 +200,7 @@ class MaintenanceSpec extends SparkSpec {
       "a reader two commits behind lost its data inside the retention window")
     // and with retention 0 (delete-at-commit escape hatch) the same
     // lag collapses to one live directory
-    spark.conf.set(AtomicPublish.RetentionMsKey, "0")
+    spark.conf.set(GraftConf.RetentionMs.key, "0")
     try {
       AtomicPublish.publish(spark, table)(p =>
         Seq((30L, "v4")).toDF("k", "v").write.parquet(p))
@@ -210,7 +211,7 @@ class MaintenanceSpec extends SparkSpec {
       val dataDirs = fs.listStatus(new org.apache.hadoop.fs.Path(table))
         .filter(_.isDirectory).map(_.getPath.getName).filter(_.startsWith("data-"))
       assert(dataDirs.length === 1, s"retention=0 left ${dataDirs.mkString(",")}")
-    } finally spark.conf.unset(AtomicPublish.RetentionMsKey)
+    } finally spark.conf.unset(GraftConf.RetentionMs.key)
   }
 
   test("vacuum reaps superseded versions past retention without a commit") {
@@ -231,13 +232,13 @@ class MaintenanceSpec extends SparkSpec {
     // past the window (retention 0 here), the vacuum reaps WITHOUT any
     // further commit — the case commit-time GC can never reach on a
     // table whose writes stopped
-    spark.conf.set(AtomicPublish.RetentionMsKey, "0")
+    spark.conf.set(GraftConf.RetentionMs.key, "0")
     try {
       AtomicPublish.vacuum(spark, table)
       assert(dataDirs() === 1, "vacuum did not reap a superseded version")
       assert(AtomicPublish.read(spark, table).collect().map(_.getLong(0)).toSeq
         === Seq(2L), "vacuum touched the live version")
-    } finally spark.conf.unset(AtomicPublish.RetentionMsKey)
+    } finally spark.conf.unset(GraftConf.RetentionMs.key)
   }
 
   test("fenced swap: a zombie holder's late commit fails loudly, manifest intact") {
@@ -296,8 +297,8 @@ class MaintenanceSpec extends SparkSpec {
     // one fenced commit when the suite JVM ran 32-wide); 2 s leaves a
     // ~670 ms beat cadence that survives full-suite GC/scheduling
     // stalls while the orphan still ages out in one sleep
-    spark.conf.set(AtomicPublish.LockStaleMsKey, "2000")
-    spark.conf.set(AtomicPublish.LockTimeoutMsKey, "30000")
+    spark.conf.set(GraftConf.LockStaleMs.key, "2000")
+    spark.conf.set(GraftConf.LockTimeoutMs.key, "30000")
     try {
       Thread.sleep(2200) // age the orphan past the stale threshold
       val writers = 4
@@ -317,8 +318,8 @@ class MaintenanceSpec extends SparkSpec {
       assert(AtomicPublish.read(spark, table).collect().map(_.getLong(0)).sorted
         === (0L to writers.toLong).toArray)
     } finally {
-      spark.conf.unset(AtomicPublish.LockStaleMsKey)
-      spark.conf.unset(AtomicPublish.LockTimeoutMsKey)
+      spark.conf.unset(GraftConf.LockStaleMs.key)
+      spark.conf.unset(GraftConf.LockTimeoutMs.key)
     }
   }
 
@@ -465,7 +466,7 @@ class MaintenanceSpec extends SparkSpec {
     // plant a fresh foreign lock (another live process mid-commit)
     val lock = java.nio.file.Paths.get(table, "_graft_commit_lock")
     java.nio.file.Files.writeString(lock, "foreign-holder")
-    spark.conf.set(AtomicPublish.LockTimeoutMsKey, "300")
+    spark.conf.set(GraftConf.LockTimeoutMs.key, "300")
     try {
       val e = intercept[IllegalStateException] {
         AtomicPublish.appendSegment(spark, table)(p =>
@@ -475,7 +476,7 @@ class MaintenanceSpec extends SparkSpec {
       assert(AtomicPublish.currentSegments(spark, table).size === 1,
         "a blocked committer must not mutate the manifest")
     } finally {
-      spark.conf.unset(AtomicPublish.LockTimeoutMsKey)
+      spark.conf.unset(GraftConf.LockTimeoutMs.key)
       java.nio.file.Files.deleteIfExists(lock); ()
     }
   }
@@ -487,8 +488,8 @@ class MaintenanceSpec extends SparkSpec {
       Seq((1L, "a")).toDF("id", "v").write.parquet(p))
     val lock = java.nio.file.Paths.get(table, "_graft_commit_lock")
     java.nio.file.Files.writeString(lock, "crashed-holder")
-    spark.conf.set(AtomicPublish.LockStaleMsKey, "100")
-    spark.conf.set(AtomicPublish.LockTimeoutMsKey, "10000")
+    spark.conf.set(GraftConf.LockStaleMs.key, "100")
+    spark.conf.set(GraftConf.LockTimeoutMs.key, "10000")
     try {
       Thread.sleep(150) // age the orphan past the stale threshold
       AtomicPublish.appendSegment(spark, table)(p =>
@@ -496,8 +497,8 @@ class MaintenanceSpec extends SparkSpec {
       assert(AtomicPublish.currentSegments(spark, table).size === 2)
       assert(!java.nio.file.Files.exists(lock), "lock not released")
     } finally {
-      spark.conf.unset(AtomicPublish.LockStaleMsKey)
-      spark.conf.unset(AtomicPublish.LockTimeoutMsKey)
+      spark.conf.unset(GraftConf.LockStaleMs.key)
+      spark.conf.unset(GraftConf.LockTimeoutMs.key)
     }
   }
 
@@ -512,7 +513,7 @@ class MaintenanceSpec extends SparkSpec {
     val table = graft.engine.Scratch.dir("spec_lock_nostarve")
     AtomicPublish.publish(spark, table)(p =>
       Seq((1L, "base")).toDF("id", "v").write.parquet(p))
-    spark.conf.set(AtomicPublish.LockTimeoutMsKey, "400")
+    spark.conf.set(GraftConf.LockTimeoutMs.key, "400")
     try {
       val entered = new java.util.concurrent.CountDownLatch(1)
       val release = new java.util.concurrent.CountDownLatch(1)
@@ -537,7 +538,7 @@ class MaintenanceSpec extends SparkSpec {
         "both appends plus the base must be in the manifest")
       assert(AtomicPublish.read(spark, table).collect().map(_.getString(1)).sorted
         === Array("base", "fast", "slow"))
-    } finally spark.conf.unset(AtomicPublish.LockTimeoutMsKey)
+    } finally spark.conf.unset(GraftConf.LockTimeoutMs.key)
   }
 
   test("live holder's heartbeat keeps the lease: a slow commit WINDOW is not stolen") {
@@ -550,8 +551,8 @@ class MaintenanceSpec extends SparkSpec {
     val table = graft.engine.Scratch.dir("spec_lock_beat")
     AtomicPublish.publish(spark, table)(p =>
       Seq((1L, "base")).toDF("id", "v").write.parquet(p))
-    spark.conf.set(AtomicPublish.LockStaleMsKey, "200")
-    spark.conf.set(AtomicPublish.LockTimeoutMsKey, "700")
+    spark.conf.set(GraftConf.LockStaleMs.key, "200")
+    spark.conf.set(GraftConf.LockTimeoutMs.key, "700")
     val release = new java.util.concurrent.CountDownLatch(1)
     val entered = new java.util.concurrent.CountDownLatch(1)
     try {
@@ -584,8 +585,8 @@ class MaintenanceSpec extends SparkSpec {
     } finally {
       AtomicPublish.commitWindowFault = () => ()
       release.countDown()
-      spark.conf.unset(AtomicPublish.LockStaleMsKey)
-      spark.conf.unset(AtomicPublish.LockTimeoutMsKey)
+      spark.conf.unset(GraftConf.LockStaleMs.key)
+      spark.conf.unset(GraftConf.LockTimeoutMs.key)
     }
   }
 
@@ -637,7 +638,7 @@ class MaintenanceSpec extends SparkSpec {
   test("merge-on-read auto-fold fires at the configured PENDING count") {
     import spark.implicits._
     val table = graft.engine.Scratch.dir("spec_mor_autofold")
-    spark.conf.set(MergeInto.CompactAfterKey, "3")
+    spark.conf.set(GraftConf.MergeCompactAfter.key, "3")
     try {
       AtomicPublish.publish(spark, table)(p =>
         Seq((1L, 1.0)).toDF("k", "x").write.parquet(p))
@@ -656,30 +657,12 @@ class MaintenanceSpec extends SparkSpec {
       assert(AtomicPublish.read(spark, table).collect()
         .map(r => r.getLong(0) -> r.getDouble(1)).sortBy(_._1).toSeq
         === Seq(1L -> 9.0, 2L -> 2.0))
-    } finally spark.conf.unset(MergeInto.CompactAfterKey)
-  }
-
-  test("copy-on-write merge mode: CAS rewrite, same semantics, one segment") {
-    import spark.implicits._
-    val table = graft.engine.Scratch.dir("spec_cow")
-    AtomicPublish.publish(spark, table)(p =>
-      Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(p))
-    spark.conf.set(MergeInto.ModeKey, "cow")
-    try {
-      MergeInto.upsertInto(spark, table,
-        Seq((2L, "b2"), (3L, "c")).toDF("k", "v"), Seq("k"))
-      assert(AtomicPublish.currentSegments(spark, table).size === 1,
-        "cow merge must leave a single rewritten segment")
-      assert(AtomicPublish.read(spark, table).collect()
-        .map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1).toSeq
-        === Seq(1L -> "a", 2L -> "b2", 3L -> "c"))
-    } finally spark.conf.unset(MergeInto.ModeKey)
+    } finally spark.conf.unset(GraftConf.MergeCompactAfter.key)
   }
 
   test("casRewrite: an append landing mid-rewrite aborts the swap and the retry wins") {
     import spark.implicits._
-    // the optimistic-concurrency engine under compactMerged and
-    // cow-mode upsertInto: attempt 1's rewrite races an append (here
+    // the optimistic-concurrency engine under compactMerged: attempt 1's rewrite races an append (here
     // self-inflicted from the rewrite callback), the CAS sees the
     // changed segment list and DISCARDS the staging, attempt 2
     // rewrites against the full list — nothing lost, no lock held
@@ -717,7 +700,7 @@ class MaintenanceSpec extends SparkSpec {
     val table = graft.engine.Scratch.dir("spec_merge_nostarve")
     AtomicPublish.publish(spark, table)(p =>
       Seq((1L, "base")).toDF("k", "v").write.parquet(p))
-    spark.conf.set(AtomicPublish.LockTimeoutMsKey, "400")
+    spark.conf.set(GraftConf.LockTimeoutMs.key, "400")
     try {
       val entered = new java.util.concurrent.CountDownLatch(1)
       val release = new java.util.concurrent.CountDownLatch(1)
@@ -740,7 +723,7 @@ class MaintenanceSpec extends SparkSpec {
         .map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1).toSeq
       // the upsert segment committed AFTER the append, so k=1 is merged
       assert(rows === Seq(1L -> "merged", 2L -> "appended"), rows.toString)
-    } finally spark.conf.unset(AtomicPublish.LockTimeoutMsKey)
+    } finally spark.conf.unset(GraftConf.LockTimeoutMs.key)
   }
 
   test("upsert schema contract: dropped refused, added conf-gated, keys must agree") {
@@ -758,12 +741,12 @@ class MaintenanceSpec extends SparkSpec {
       MergeInto.upsertInto(spark, table,
         Seq((1L, "x", 1.0, 7L)).toDF("k", "v", "w", "extra"), Seq("k"))
     }
-    assert(eAdd.getMessage.contains(MergeInto.AllowEvolutionKey), eAdd.getMessage)
+    assert(eAdd.getMessage.contains(GraftConf.AllowSchemaEvolution.key), eAdd.getMessage)
     // with the conf: accepted; old rows read back NULL in the new column
-    spark.conf.set(MergeInto.AllowEvolutionKey, "true")
+    spark.conf.set(GraftConf.AllowSchemaEvolution.key, "true")
     try MergeInto.upsertInto(spark, table,
       Seq((2L, "b", 2.0, 7L)).toDF("k", "v", "w", "extra"), Seq("k"))
-    finally spark.conf.unset(MergeInto.AllowEvolutionKey)
+    finally spark.conf.unset(GraftConf.AllowSchemaEvolution.key)
     val rows = AtomicPublish.read(spark, table)
       .select(col("k"), col("extra")).collect()
       .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1)))
@@ -800,7 +783,7 @@ class MaintenanceSpec extends SparkSpec {
     }
     assert(eMissing.getMessage.contains("version log"), eMissing.getMessage)
     // outside the retention window: versions (and their bytes) age out
-    spark.conf.set(AtomicPublish.RetentionMsKey, "0")
+    spark.conf.set(GraftConf.RetentionMs.key, "0")
     try {
       MergeInto.compactMerged(spark, table)
       AtomicPublish.vacuum(spark, table)
@@ -811,7 +794,7 @@ class MaintenanceSpec extends SparkSpec {
       // the CURRENT version always stays readable
       val vNow = AtomicPublish.currentVersion(spark, table).get
       assert(at(vNow) === Seq(1L -> "a2", 2L -> "b"))
-    } finally spark.conf.unset(AtomicPublish.RetentionMsKey)
+    } finally spark.conf.unset(GraftConf.RetentionMs.key)
   }
 
   test("txn appends: replays skipped, folds carry marks, merge sink idempotent") {
@@ -990,7 +973,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(AtomicPublish.read(spark, table).collect()
       .map(_.getString(1)).toSeq === Seq("old"))
     // a version whose bytes aged out refuses the restore LOUDLY
-    spark.conf.set(AtomicPublish.RetentionMsKey, "0")
+    spark.conf.set(GraftConf.RetentionMs.key, "0")
     try {
       val vGoneTarget = AtomicPublish.currentVersion(spark, table).get
       AtomicPublish.publish(spark, table)(p =>
@@ -1000,7 +983,7 @@ class MaintenanceSpec extends SparkSpec {
         AtomicPublish.restoreTable(spark, table, vGoneTarget)
       }
       assert(eGone.getMessage.contains("time travel"), eGone.getMessage)
-    } finally spark.conf.unset(AtomicPublish.RetentionMsKey)
+    } finally spark.conf.unset(GraftConf.RetentionMs.key)
   }
 
   test("graft source refuses pending upsert segments; fold reopens the path door") {
@@ -1059,7 +1042,7 @@ class MaintenanceSpec extends SparkSpec {
     assert(state() === reconciled, "fold changed the reconciled content")
   }
 
-  test("deleteWhere: predicate delete binds to the observed snapshot; cow parity") {
+  test("deleteWhere: predicate delete binds to the observed snapshot") {
     import spark.implicits._
     val table = graft.engine.Scratch.dir("spec_del_where")
     AtomicPublish.publish(spark, table)(p =>
@@ -1067,18 +1050,6 @@ class MaintenanceSpec extends SparkSpec {
     MergeInto.deleteWhere(spark, table, col("x") >= 20.0, Seq("k"))
     assert(AtomicPublish.read(spark, table).collect()
       .map(r => r.getLong(0)).sorted.toSeq === Seq(1L))
-    // cow mode: same semantics, single rewritten segment, no sidecars
-    val cow = graft.engine.Scratch.dir("spec_del_cow")
-    AtomicPublish.publish(spark, cow)(p =>
-      Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("k", "v").write.parquet(p))
-    spark.conf.set(MergeInto.ModeKey, "cow")
-    try MergeInto.deleteFrom(spark, cow, Seq(2L).toDF("k"), Seq("k"))
-    finally spark.conf.unset(MergeInto.ModeKey)
-    val segs = AtomicPublish.currentSegments(spark, cow)
-    assert(segs.size === 1 &&
-      AtomicPublish.upsertSidecarsFor(spark, cow, segs).isEmpty)
-    assert(AtomicPublish.read(spark, cow).collect()
-      .map(_.getLong(0)).sorted.toSeq === Seq(1L, 3L))
   }
 
   test("updateWhere: SET applies to matched rows, CDF sees update_postimage, zero-match commits nothing") {
@@ -1135,41 +1106,12 @@ class MaintenanceSpec extends SparkSpec {
     assert(cdf === Seq((1L, "update_postimage", v1),
       (2L, "update_postimage", v1), (3L, "delete", v1),
       (9L, "insert", v1)))
-    // cow parity: same semantics, single rewritten segment
-    val cow = graft.engine.Scratch.dir("spec_sync_cow")
-    AtomicPublish.publish(spark, cow)(p =>
-      Seq((1L, "a"), (2L, "b")).toDF("k", "v").write.parquet(p))
-    spark.conf.set(MergeInto.ModeKey, "cow")
-    try MergeInto.syncInto(spark, cow,
-      Seq((2L, "b2"), (5L, "e")).toDF("k", "v"), Seq("k"))
-    finally spark.conf.unset(MergeInto.ModeKey)
-    val segs = AtomicPublish.currentSegments(spark, cow)
-    assert(segs.size === 1 &&
-      AtomicPublish.upsertSidecarsFor(spark, cow, segs).isEmpty)
-    assert(AtomicPublish.read(spark, cow).collect()
-      .map(r => r.getLong(0) -> r.getString(1)).sortBy(_._1).toSeq ===
-      Seq(2L -> "b2", 5L -> "e"))
   }
 
-  test("cow-mode MERGE is not a fold: the change feed refuses across it, never silently empty") {
+  test("a fold is content-preserving: the change feed diffs through a compaction") {
     import spark.implicits._
-    val table = graft.engine.Scratch.dir("spec_cow_cdf")
-    AtomicPublish.publish(spark, table)(p =>
-      Seq((1L, 10.0), (2L, 20.0)).toDF("k", "x").write.parquet(p))
-    val v0 = AtomicPublish.currentVersion(spark, table).get
-    spark.conf.set(MergeInto.ModeKey, "cow")
-    try MergeInto.upsertInto(spark, table,
-      Seq((2L, 99.0)).toDF("k", "x"), Seq("k"))
-    finally spark.conf.unset(MergeInto.ModeKey)
-    val v1 = AtomicPublish.currentVersion(spark, table).get
-    // pre-round-16: the cow rewrite stamped a FOLD marker, so this
-    // window diffed "through" the merge and emitted ZERO change rows
-    // for a row that changed 20.0 → 99.0 — silent CDF corruption
-    val e = intercept[IllegalArgumentException] {
-      AtomicPublish.changesBetween(spark, table, v0, v1).collect()
-    }
-    assert(e.getMessage.contains("rewrote history"))
-    // a genuine fold (compaction) still diffs through: mor table
+    // a row-changing rewrite must refuse instead (pinned by the
+    // replaceWhere case below)
     val mor = graft.engine.Scratch.dir("spec_mor_fold_cdf")
     AtomicPublish.publish(spark, mor)(p =>
       Seq((1L, "a")).toDF("k", "v").write.parquet(p))
@@ -1327,13 +1269,13 @@ class MaintenanceSpec extends SparkSpec {
     import spark.implicits._
     import graft.ops.BloomMaps
     val table = graft.engine.Scratch.dir("spec_bloom")
-    spark.conf.set(BloomMaps.BloomColsKey, "k,name")
+    spark.conf.set(GraftConf.BloomColumns.key, "k,name")
     try {
       AtomicPublish.publish(spark, table)(p =>
         (1L to 100L).map(i => (i, s"n$i")).toDF("k", "name").write.parquet(p))
       AtomicPublish.appendSegment(spark, table)(p =>
         (1000L to 1100L).map(i => (i, s"n$i")).toDF("k", "name").write.parquet(p))
-    } finally spark.conf.unset(BloomMaps.BloomColsKey)
+    } finally spark.conf.unset(GraftConf.BloomColumns.key)
     val root = new org.apache.hadoop.fs.Path(table)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val segs = AtomicPublish.currentSegments(spark, table)
@@ -1574,13 +1516,13 @@ class MaintenanceSpec extends SparkSpec {
     // warm every descriptor of both versions
     assert(kv(AtomicPublish.readAt(spark, table, v1)) === Seq(1L -> "a", 2L -> "b"))
     assert(kv(AtomicPublish.read(spark, table)) === Seq(1L -> "a", 2L -> "b2"))
-    spark.conf.set(AtomicPublish.RetentionMsKey, "0")
+    spark.conf.set(GraftConf.RetentionMs.key, "0")
     try {
       MergeInto.compactMerged(spark, table) match {
         case AtomicPublish.CompactOutcome.Compacted(_) => ()
         case other => fail(s"fold did not commit: $other")
       }
-    } finally spark.conf.unset(AtomicPublish.RetentionMsKey)
+    } finally spark.conf.unset(GraftConf.RetentionMs.key)
     val e = intercept[IllegalStateException](AtomicPublish.readAt(spark, table, v1))
     assert(e.getMessage.contains("time travel"), e.getMessage)
     assert(kv(AtomicPublish.read(spark, table)) === Seq(1L -> "a", 2L -> "b2"))
@@ -1621,13 +1563,13 @@ class MaintenanceSpec extends SparkSpec {
       MergeInto.upsertInto(spark, table,
         Seq((3L, "c", 7L)).toDF("k", "v", "extra"), Seq("k"))
     }
-    assert(eAdd.getMessage.contains(MergeInto.AllowEvolutionKey), eAdd.getMessage)
+    assert(eAdd.getMessage.contains(GraftConf.AllowSchemaEvolution.key), eAdd.getMessage)
     assert(AtomicPublish.currentSegments(spark, table) === before)
     // with the conf: admitted, older rows read NULL there
-    spark.conf.set(MergeInto.AllowEvolutionKey, "true")
+    spark.conf.set(GraftConf.AllowSchemaEvolution.key, "true")
     try MergeInto.upsertInto(spark, table,
       Seq((3L, "c", 7L)).toDF("k", "v", "extra"), Seq("k"))
-    finally spark.conf.unset(MergeInto.AllowEvolutionKey)
+    finally spark.conf.unset(GraftConf.AllowSchemaEvolution.key)
     val rows = AtomicPublish.read(spark, table).select(col("k"), col("extra"))
       .collect().map(r => r.getLong(0) -> Option(r.get(1))).sortBy(_._1).toSeq
     assert(rows === Seq(1L -> None, 2L -> None, 3L -> Some(7L)), rows.toString)
@@ -1644,7 +1586,7 @@ class MaintenanceSpec extends SparkSpec {
     import spark.implicits._
     CountingFileSystem.install(spark)
     val local = graft.engine.Scratch.dir("spec_desc_counting")
-    spark.conf.set(graft.ops.BloomMaps.BloomColsKey, "k")
+    spark.conf.set(GraftConf.BloomColumns.key, "k")
     try {
       AtomicPublish.publish(spark, local)(p =>
         (1L to 40L).map(k => (k, s"v$k")).toDF("k", "v").write.parquet(p))
@@ -1653,7 +1595,7 @@ class MaintenanceSpec extends SparkSpec {
       MergeInto.upsertInto(spark, local,
         Seq((3L, "y3"), (60L, "y60")).toDF("k", "v"), Seq("k"))
       MergeInto.deleteFrom(spark, local, Seq(4L).toDF("k"), Seq("k"))
-    } finally spark.conf.unset(graft.ops.BloomMaps.BloomColsKey)
+    } finally spark.conf.unset(GraftConf.BloomColumns.key)
     val table = CountingFileSystem.uri(local)
     assert(AtomicPublish.currentSegments(spark, table).size === 4)
     val expected = kv(AtomicPublish.read(spark, local))
@@ -1667,5 +1609,53 @@ class MaintenanceSpec extends SparkSpec {
     assert(sidecars === 0L, "a warm read re-opened segment sidecars")
     assert(manifests === 1L, "the manifest is read once per read")
     assert(kv(again) === expected)
+  }
+
+  test("an unreadable zone map sidecar reads the same rows and logs one warning") {
+    import spark.implicits._
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger => CoreLogger}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.{Configurator, Property}
+    val good = graft.engine.Scratch.dir("spec_zone_good")
+    AtomicPublish.publish(spark, good)(p =>
+      (1L to 50L).map(k => (k, s"v$k")).toDF("k", "v").write.parquet(p))
+    AtomicPublish.appendSegment(spark, good)(p =>
+      (51L to 100L).map(k => (k, s"v$k")).toDF("k", "v").write.parquet(p))
+    // a copy under a new path: no segment of it is in the metadata cache
+    val bad = graft.engine.Scratch.dir("spec_zone_bad")
+    org.apache.commons.io.FileUtils.copyDirectory(
+      new java.io.File(good), new java.io.File(bad))
+    val sidecars = new java.io.File(bad).listFiles.toSeq
+      .filter(_.getName.startsWith(graft.ops.ZoneMaps.ZonePrefix))
+    assert(sidecars.size === 2)
+    val broken = sidecars.head
+    java.nio.file.Files.writeString(broken.toPath, "{not json")
+    new java.io.File(bad, s".${broken.getName}.crc").delete()
+    // the graft source is the read path that consults zone maps
+    def rows(t: String) = spark.read.format("graft").load(t).filter($"k" > 90L)
+      .orderBy($"k").collect().map(r => r.getLong(0) -> r.getString(1)).toSeq
+    val expected = rows(good)
+    assert(expected.map(_._1) === (91L to 100L))
+    val warnings = new java.util.concurrent.CopyOnWriteArrayList[String]()
+    val capture = new AbstractAppender("spec-zone-warnings", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit =
+        if (e.getLevel == Level.WARN) warnings.add(e.getMessage.getFormattedMessage)
+    }
+    capture.start()
+    val logger = LogManager.getLogger("graft.ops.ZoneMaps").asInstanceOf[CoreLogger]
+    val prior = logger.getLevel
+    Configurator.setLevel("graft.ops.ZoneMaps", Level.WARN)
+    logger.addAppender(capture)
+    try {
+      assert(rows(bad) === expected)
+      assert(warnings.size === 1, warnings)
+      assert(warnings.get(0).contains(broken.getName), warnings.get(0))
+    } finally {
+      logger.removeAppender(capture)
+      Configurator.setLevel("graft.ops.ZoneMaps", prior)
+      capture.stop()
+    }
   }
 }

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import graft.ops.{AtomicPublish, MergeInto}
+import graft.engine.GraftConf
 
 /** Incremental OPTIMIZE semantics: new segments fold into the existing
   * range layout, untouched ranges keep their directories (cost ∝ new
@@ -89,7 +90,7 @@ class OptimizeIncrementalSpec extends SparkSpec {
     AtomicPublish.publish(spark, table)(p => keyed(0, 1000).write.parquet(p))
     AtomicPublish.optimizeTable(spark, table, clusterBy = Seq("k"), segments = 5)
     val base = AtomicPublish.currentSegments(spark, table)
-    spark.conf.set(MergeInto.CompactAfterKey, "2")
+    spark.conf.set(GraftConf.MergeCompactAfter.key, "2")
     try {
       // two pending merges hit the threshold; the in-line fold must go
       // THROUGH the recorded layout, not flatten to one segment
@@ -103,7 +104,7 @@ class OptimizeIncrementalSpec extends SparkSpec {
         s"auto-fold must keep unaffected ranges: base=$base after=$after")
       val rows = contents(table).toMap
       assert(rows(5L) === "a" && rows(6L) === "b" && rows.size === 1000)
-    } finally spark.conf.unset(MergeInto.CompactAfterKey)
+    } finally spark.conf.unset(GraftConf.MergeCompactAfter.key)
   }
 
   test("no valid layout → degrades to a full clustering rewrite") {

@@ -1,7 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.engine.{GraftFunctions, Tables}
+import graft.engine.{GraftConf, GraftFunctions, Tables}
 import graft.ops.{AnnSearch, SemDedup}
 
 /** Recall, determinism, and ladder gates for the kmeans-blocked
@@ -63,14 +63,14 @@ class SemDedupSpec extends SparkSpec {
     // ceiling BETWEEN the flat model's bytes (k·dim·8·copies — must
     // refuse) and the coarse model's (√k-sized — must fit), exactly
     // the regime a 60 B-vector corpus hits at the defaults.
-    spark.conf.set(SemDedup.TargetCellKey, "8")
+    spark.conf.set(GraftConf.SemDedupTargetCell.key, "8")
     try {
       val k = SemDedup.cellCount(spark, n)
       val flatBytes = k.toLong * 64 * 8 * SemDedup.CentroidResidentCopies
       val k1 = math.ceil(math.sqrt(k.toDouble)).toLong
       val coarseBytes = k1 * 64 * 8 * SemDedup.CentroidResidentCopies
       assert(coarseBytes < flatBytes - 1, "degenerate spec setup")
-      spark.conf.set(SemDedup.MaxDriverCentroidBytesKey, (flatBytes - 1).toString)
+      spark.conf.set(GraftConf.SemDedupMaxDriverCentroidBytes.key, (flatBytes - 1).toString)
       // the ceiling binds: the driver-side fit refuses at these bytes
       // with the rung named in the remedy
       val e1 = intercept[IllegalStateException] {
@@ -90,8 +90,8 @@ class SemDedupSpec extends SparkSpec {
       info(s"distributed-rung planted-clone recall: ${blocked.size}/${brute.size} = $recall")
       assert(recall >= 0.99, s"distributed-rung recall $recall")
     } finally {
-      spark.conf.unset(SemDedup.TargetCellKey)
-      spark.conf.unset(SemDedup.MaxDriverCentroidBytesKey)
+      spark.conf.unset(GraftConf.SemDedupTargetCell.key)
+      spark.conf.unset(GraftConf.SemDedupMaxDriverCentroidBytes.key)
     }
   }
 
@@ -146,7 +146,7 @@ class SemDedupSpec extends SparkSpec {
     assert(viaLadder === brute)
     // degenerate threshold PAST the brute budget → the blocked rung
     // runs (no refusal), stays spurious-free, and hits the gated floor
-    spark.conf.set(AnnSearch.MaxBruteCosinesKey, "100")
+    spark.conf.set(GraftConf.MaxBruteCosines.key, "100")
     try {
       val blocked = SemDedup.neardupPairsScalable(spark, e, "vec_id", "e",
           minCosine = 0.45, dim = 64, corpusSize = Some(n))
@@ -156,7 +156,7 @@ class SemDedupSpec extends SparkSpec {
       val recall =
         if (brute.isEmpty) 1.0 else blocked.size.toDouble / brute.size
       assert(recall >= 0.6, s"ladder blocked-rung recall $recall")
-    } finally spark.conf.unset(AnnSearch.MaxBruteCosinesKey)
+    } finally spark.conf.unset(GraftConf.MaxBruteCosines.key)
   }
 
   test("NearestCells expression matches an interpreted reference") {
@@ -439,8 +439,8 @@ class SemDedupSpec extends SparkSpec {
     val n = both.count()
     // force enough cells for routing to be non-trivial, then force the
     // router on (threshold 1)
-    spark.conf.set(SemDedup.TargetCellKey, "16")
-    spark.conf.set(SemDedup.RouteThresholdKey, "1")
+    spark.conf.set(GraftConf.SemDedupTargetCell.key, "16")
+    spark.conf.set(GraftConf.SemDedupRouteThreshold.key, "1")
     try {
       val k = SemDedup.cellCount(spark, n)
       assert(k >= 16, s"need a multi-cell quantizer for this spec, got k=$k")
@@ -477,8 +477,8 @@ class SemDedupSpec extends SparkSpec {
       assert(routed1.map(r => (r.getLong(0), r.getInt(1))).toSeq ===
         routed2.map(r => (r.getLong(0), r.getInt(1))).toSeq)
     } finally {
-      spark.conf.unset(SemDedup.TargetCellKey)
-      spark.conf.unset(SemDedup.RouteThresholdKey)
+      spark.conf.unset(GraftConf.SemDedupTargetCell.key)
+      spark.conf.unset(GraftConf.SemDedupRouteThreshold.key)
     }
   }
 
@@ -492,19 +492,19 @@ class SemDedupSpec extends SparkSpec {
     val n = e.count()
     val k = SemDedup.cellCount(spark, n)
     val modelBytes = k.toLong * 64 * 8L * SemDedup.CentroidResidentCopies
-    spark.conf.set(SemDedup.MaxDriverCentroidBytesKey, (modelBytes - 1).toString)
+    spark.conf.set(GraftConf.SemDedupMaxDriverCentroidBytes.key, (modelBytes - 1).toString)
     try {
       val ex = intercept[IllegalStateException] {
         SemDedup.fit(spark, e, "vec_id", "e", k, 64, n)
       }
-      assert(ex.getMessage.contains(SemDedup.MaxDriverCentroidBytesKey))
-      assert(ex.getMessage.contains(graft.ops.SemDedup.TargetCellKey),
+      assert(ex.getMessage.contains(GraftConf.SemDedupMaxDriverCentroidBytes.key))
+      assert(ex.getMessage.contains(GraftConf.SemDedupTargetCell.key),
         s"refusal must name the remedy: ${ex.getMessage}")
       // at exactly the model's bytes the same fit proceeds
-      spark.conf.set(SemDedup.MaxDriverCentroidBytesKey, modelBytes.toString)
+      spark.conf.set(GraftConf.SemDedupMaxDriverCentroidBytes.key, modelBytes.toString)
       val m = SemDedup.fit(spark, e, "vec_id", "e", k, 64, n)
       assert(m.k === k)
-    } finally spark.conf.unset(SemDedup.MaxDriverCentroidBytesKey)
+    } finally spark.conf.unset(GraftConf.SemDedupMaxDriverCentroidBytes.key)
   }
 
   test("cell-cap and id-type guards fail loud") {
@@ -516,15 +516,15 @@ class SemDedupSpec extends SparkSpec {
       SemDedup.blockedPairs(spark, bad, "vec_id", "e", 0.45, dim = 64, n = n)
     }
     assert(err.getMessage.contains("BIGINT"))
-    spark.conf.set(SemDedup.MaxCellRowsKey, "2")
+    spark.conf.set(GraftConf.SemDedupMaxCellRows.key, "2")
     try {
       val ex = intercept[Exception] {
         SemDedup.blockedPairs(spark, e, "vec_id", "e", 0.45, dim = 64, n = n)
           .count()
       }
-      assert(ex.getMessage.contains(SemDedup.MaxCellRowsKey) ||
-        Option(ex.getCause).exists(_.getMessage.contains(SemDedup.MaxCellRowsKey)),
+      assert(ex.getMessage.contains(GraftConf.SemDedupMaxCellRows.key) ||
+        Option(ex.getCause).exists(_.getMessage.contains(GraftConf.SemDedupMaxCellRows.key)),
         s"unexpected: $ex")
-    } finally spark.conf.unset(SemDedup.MaxCellRowsKey)
+    } finally spark.conf.unset(GraftConf.SemDedupMaxCellRows.key)
   }
 }

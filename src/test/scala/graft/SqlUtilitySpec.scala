@@ -1,6 +1,7 @@
 package graft
 
 import graft.ops.AtomicPublish
+import graft.engine.GraftConf
 
 /** The SQL utility surface (graft.plans.GraftSqlParser +
   * the `table_changes` TVF): VACUUM / OPTIMIZE / RESTORE / DESCRIBE
@@ -43,11 +44,11 @@ class SqlUtilitySpec extends SparkSpec {
       .head.getString(0) === "b")
     // the fold left superseded dirs; VACUUM RETAIN 0 HOURS reaps them
     // — and restores any pre-set retention conf afterwards
-    spark.conf.set(AtomicPublish.RetentionMsKey, "123456")
+    spark.conf.set(GraftConf.RetentionMs.key, "123456")
     val vac = spark.sql("VACUUM util_cat.db.hist RETAIN 0 HOURS").collect()(0)
     assert(vac.getLong(1) > 0L, s"vacuum deleted nothing: $vac")
-    assert(spark.conf.get(AtomicPublish.RetentionMsKey) === "123456")
-    spark.conf.unset(AtomicPublish.RetentionMsKey)
+    assert(spark.conf.get(GraftConf.RetentionMs.key) === "123456")
+    spark.conf.unset(GraftConf.RetentionMs.key)
   }
 
   test("quoted-path targets address the protocol directly") {

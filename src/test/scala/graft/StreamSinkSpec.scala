@@ -5,6 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
+import graft.engine.GraftConf
 
 /** Streaming sink path: stream a staged parquet directory through a
   * transformation into a parquet sink with checkpointing (the
@@ -87,7 +88,7 @@ class StreamSinkSpec extends SparkSpec {
     // a REWRITE under the running stream (publish collapses the
     // manifest) must fail loudly naming the cause, never silently
     // re-consume rewritten data
-    spark.conf.set(AtomicPublish.RetentionMsKey, "0")
+    spark.conf.set(GraftConf.RetentionMs.key, "0")
     try {
       AtomicPublish.publish(spark, table)(p => day(9).write.parquet(p))
       AtomicPublish.appendSegment(spark, table)(p => day(10).write.parquet(p))
@@ -100,7 +101,7 @@ class StreamSinkSpec extends SparkSpec {
       assert(msgs(e).exists(_.contains("compacted or republished")),
         s"rewrite-under-stream must refuse loudly: ${msgs(e)}")
     } finally {
-      spark.conf.unset(AtomicPublish.RetentionMsKey)
+      spark.conf.unset(GraftConf.RetentionMs.key)
       q2.stop()
     }
   }
